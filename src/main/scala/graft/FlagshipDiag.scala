@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import graft.model.{KMeansConfig, SampledMedoid}
 import graft.operators.KMeans
 
 /** Stage-split timing for the flagship k-medoids loop (q00) — the
@@ -13,12 +11,14 @@ import graft.operators.KMeans
   *
   *   scan+cache — the features scan and cache materialization;
   *   assign     — nearest-centroid argmin over the cached features;
-  *   window     — the per-cluster candidate pre-filter
-  *                (row_number ≤ s; WindowGroupLimit k-bounds its
-  *                shuffle, so this should stay flat);
-  *   medoid     — the candidates × members salted scoring join
-  *                (O(n·s·k) distance folds — the linear-work term that
-  *                must dominate at scale).
+  *   window     — `KMeans.sampleCandidates`: the per-cluster candidate
+  *                window (row_number ≤ s; WindowGroupLimit bounds its
+  *                shuffle to p·k·s rows, so this should stay flat) and
+  *                the collect of the ≤ k·s candidates;
+  *   medoid     — `KMeans.scoreCandidates`: the members × broadcast
+  *                candidates scoring aggregation (O(n·s) distance folds —
+  *                the linear-work term that must dominate at scale) and
+  *                the collect of the k·s totals.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dir> runMain graft.FlagshipDiag
   * Prints one JSON line per stage. */
@@ -50,39 +50,17 @@ object FlagshipDiag {
     time("scan_cache") { df.unpersist(true); df.cache(); df.count() }
     val seeds = KMeans.deterministicSeeds(df, 3)
     val centroids = KMeans.resolveCentroids(features, seeds)
-    val cfg = KMeansConfig(k = 3, seeds = seeds, maxIterations = 2,
-      strategy = SampledMedoid(256))
-    val members = KMeans.assignWithFeatures(df, centroids, cfg.hashtagWeight)
+    val (s, hw) = (256, 0.8) // q00's SampledMedoid(256) at the default weight
+    val members = KMeans.assignWithFeatures(df, centroids, hw)
     time("assign") {
       members.write.format("noop").mode("overwrite").save(); members.count()
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster"))
-      .orderBy(pmod(pmod(col("id"), lit(1000000007L)) * lit(2654435761L % 1000000007L),
-        lit(1000000007L)), col("id"))
-    val candidates = members.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 256).drop("rn")
-    time("window_candidates") {
-      candidates.write.format("noop").mode("overwrite").save(); candidates.count()
-    }
-    val medoid = graft.operators.Medoids.compute(candidates, members, "cluster",
-      "id", Seq("time", "numOfHashtags", "language", "hasVideo"),
-      (l, r) => graft.functions.Distances.weightedDistance(
-        l("time"), l("numOfHashtags"), l("language"), l("hasVideo"),
-        r("time"), r("numOfHashtags"), r("language"), r("hasVideo"),
-        cfg.hashtagWeight),
-      saltBuckets = 8)
-    time("medoid") { medoid.count() }
+    val candidates = KMeans.sampleCandidates(members, s)
+    time("window_candidates") { KMeans.sampleCandidates(members, s).size.toLong }
+    time("medoid") { KMeans.scoreCandidates(members, candidates, hw).size.toLong }
     time("full_iteration") {
-      val m2 = KMeans.assignWithFeatures(df, centroids, cfg.hashtagWeight)
-      graft.operators.Medoids.compute(
-        m2.withColumn("rn", row_number().over(w)).filter(col("rn") <= 256).drop("rn"),
-        m2, "cluster", "id", Seq("time", "numOfHashtags", "language", "hasVideo"),
-        (l, r) => graft.functions.Distances.weightedDistance(
-          l("time"), l("numOfHashtags"), l("language"), l("hasVideo"),
-          r("time"), r("numOfHashtags"), r("language"), r("hasVideo"),
-          cfg.hashtagWeight),
-        saltBuckets = 8).count()
+      val m2 = KMeans.assignWithFeatures(df, centroids, hw)
+      KMeans.sampledMedoidFeatures(m2, s, hw).size.toLong
     }
     spark.stop()
   }

@@ -15,8 +15,10 @@ import graft.operators.KMeans
   * shared assignment is what makes the comparison an apples-to-apples
   * pricing of that step):
   *
-  *   - `sec`: min-wall of the centroid update (the candidate scoring
-  *     join + id→features resolution) over `SPARK_GRAFT_SCALE_REPS`;
+  *   - `sec`: min-wall of the centroid update over
+  *     `SPARK_GRAFT_SCALE_REPS` (`all`: the scoring self-join +
+  *     id→features resolution; sampled: the candidate and scoring
+  *     collects of `KMeans.sampledMedoidFeatures`);
   *   - `objective`: Σ_i d(xᵢ, c_cluster(i)) under the strategy's chosen
   *     centroids — the k-medoids objective itself, EXACT for every
   *     strategy (each sampled candidate is scored against ALL members,
@@ -77,7 +79,8 @@ object MedoidStrategySweep {
     println(s"""{"sweep":"medoid_strategy","dir":"$dir","n":$n,"k":$k,"sqrt_s":$sqrtS}""")
 
     /** medoid-id frame → (cluster → chosen member features), via one
-      * broadcast join over the cached features (updateCentroids' shape). */
+      * broadcast join over the cached features (updateCentroids' shape
+      * for the exact medoid). */
     def resolve(medoidDf: org.apache.spark.sql.DataFrame): Map[Int, TweetFeatures] =
       df.join(broadcast(medoidDf), col("id") === col("medoid_id"))
         .select(col("cluster"),
@@ -105,8 +108,8 @@ object MedoidStrategySweep {
       def update(): Map[Int, TweetFeatures] = strat match {
         case "mean" => KMeans.meanCentroidFeatures(members)
         case "all" => resolve(KMeans.medoids(members, hw))
-        case "sqrt" => resolve(KMeans.sampledMedoids(members, sqrtS, hw))
-        case s => resolve(KMeans.sampledMedoids(members, s.toInt, hw))
+        case "sqrt" => KMeans.sampledMedoidFeatures(members, sqrtS, hw)
+        case s => KMeans.sampledMedoidFeatures(members, s.toInt, hw)
       }
       val runs = (1 to reps).map { _ =>
         val t0 = System.nanoTime()

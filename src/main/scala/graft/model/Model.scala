@@ -27,8 +27,10 @@ final case class Assignment(id: Long, cluster: Int)
   *  - [[Medoid]] — exact O(n²)-per-cluster medoid, the reference's intended
   *    algorithm (`Cluster.java:229-266`). Only viable when every cluster
   *    fits the n² self-join; at 100 TB use [[SampledMedoid]] or [[Mean]].
-  *  - [[SampledMedoid]] — candidates drawn deterministically (id-hash), each
-  *    scored against ALL members: O(n·s) instead of O(n²).
+  *  - [[SampledMedoid]] — s candidates per cluster drawn deterministically
+  *    (id-hash), each scored against ALL members: O(n·s) instead of O(n²).
+  *    The ≤ k·s candidates are collected and broadcast, so the members are
+  *    never shuffled (`KMeans.sampledMedoidFeatures`).
   *  - [[Mean]] — classic k-means mean centroid (language = per-cluster mode);
   *    O(n), one shuffle, the true scale path.
   *

@@ -15,8 +15,11 @@ import graft.model._
   *   - assignment: a zero-shuffle narrow map over the feature table with the
   *     k centroids inlined as literals (k ≤ 5 — cheaper than a broadcast
   *     join, and fully inside whole-stage codegen);
-  *   - medoid update: ONE shuffle on the cluster key (self-join + partial
-  *     aggregation) instead of n² RPCs.
+  *   - medoid update: for the exact [[Medoid]], ONE shuffle on the cluster
+  *     key (self-join + partial aggregation) instead of n² RPCs; for
+  *     [[SampledMedoid]], two driver collects of ≤ k·s rows (candidates,
+  *     then their totals against a broadcast of the candidates), with the
+  *     members never shuffled.
   *
   * Deviations from reference defects, all per SURVEY §2.8: true argmin
   * (ref. never updates `minDistance`, `Cluster.java:109-115`), true medoid
@@ -68,7 +71,7 @@ object KMeans {
     * the centroid VALUES into the generated source, so every iteration
     * — and the final assignment — compiles and JITs a fresh set of
     * whole-stage-codegen classes for the entire fused pipeline above it
-    * (assign → candidate windows → medoid scoring join): measured at
+    * (assign → candidate window; assign → medoid scoring join): measured at
     * sf0.1/local[32], iteration 1 of a cold flagship run spends
     * 5.8 s where the warmed identical plan runs 1.4 s, and a bench
     * chunk re-pays that warm-up on every rep once neighboring queries
@@ -113,17 +116,13 @@ object KMeans {
     * for n², use [[SampledMedoid]] or [[Mean]] via [[updateCentroids]].
     */
   def medoids(members: DataFrame, hashtagWeight: Double = 0.8): DataFrame =
-    medoidOf(members, members, hashtagWeight)
+    Medoids.compute(members, "cluster", "id",
+      Seq("time", "numOfHashtags", "language", "hasVideo"), tweetDist(hashtagWeight))
 
   private def tweetDist(hw: Double)(l: String => Column, r: String => Column): Column =
     Distances.weightedDistance(
       l("time"), l("numOfHashtags"), l("language"), l("hasVideo"),
       r("time"), r("numOfHashtags"), r("language"), r("hasVideo"), hw)
-
-  private def medoidOf(candidates: DataFrame, members: DataFrame, hw: Double,
-      saltBuckets: Int = 1): DataFrame =
-    Medoids.compute(candidates, members, "cluster", "id",
-      Seq("time", "numOfHashtags", "language", "hasVideo"), tweetDist(hw), saltBuckets)
 
   /** The multiplicative-hash ordering key, factored through pmod so it
     * cannot overflow at ANY long id: (id·2654435761) mod P computed as
@@ -137,33 +136,65 @@ object KMeans {
     pmod(pmod(col("id"), lit(1000000007L)) * lit(2654435761L % 1000000007L),
       lit(1000000007L))
 
-  /** A3 at scale — medoid over a deterministic candidate subset (id-hash
-    * order), each candidate still scored against ALL members: O(n·s).
-    * Salted 8 ways so a small k can't starve the cluster (Medoids
-    * scaladoc): the scale strategy should itself scale. */
-  def sampledMedoids(members: DataFrame, sampleSize: Int,
-      hashtagWeight: Double = 0.8): DataFrame = {
-    // TWO-LEVEL exact top-s selection: a single per-cluster window is a
-    // k-partition sort (data-sized partitions at any k ≪ cores — the
-    // same shape the registry's global-window gate exists for). Level 1
-    // ranks within (cluster, idHash mod 64) and keeps s per salt-bucket
-    // — every global top-s row survives its own bucket's cut — and
-    // level 2 re-ranks the ≤ 64·s survivors per cluster. The (order key,
-    // id) total order makes both levels deterministic and the selected
-    // set IDENTICAL to the single-window form (KMeansSpec pins it).
-    val wSalt = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster"), pmod(hash(col("id")), lit(64)))
-      .orderBy(seedHashOrder, col("id"))
+  /** Sampled medoid, step 1 — the candidates: the first `sampleSize`
+    * members of each cluster in (id-hash, id) order, collected with their
+    * features (≤ k·s rows). One `row_number() ≤ s` window: Spark's
+    * WindowGroupLimit cuts every map partition to s rows per cluster
+    * BEFORE the exchange, so at most p·k·s rows cross it whatever the
+    * cluster sizes (for s within `spark.sql.optimizer.windowGroupLimitThreshold`,
+    * 1000 by default). */
+  def sampleCandidates(members: DataFrame, sampleSize: Int): Seq[(Int, TweetFeatures)] = {
+    import members.sparkSession.implicits._
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cluster"))
       .orderBy(seedHashOrder, col("id"))
-    val candidates = members
-      .withColumn("rn1", row_number().over(wSalt))
-      .filter(col("rn1") <= sampleSize)
-      .withColumn("rn", row_number().over(w))
+    members.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= sampleSize)
-      .drop("rn1", "rn")
-    medoidOf(candidates, members, hashtagWeight, saltBuckets = 8)
+      .select(col("cluster"), struct(featureCols.map(col): _*))
+      .as[(Int, TweetFeatures)].collect().toSeq
+  }
+
+  /** Sampled medoid, steps 2–3 — each candidate's total distance to ALL
+    * members of its cluster, then per cluster the candidate with the
+    * smallest (total, id), picked on the driver.
+    *
+    * The candidates ride a broadcast local relation (their values stay out
+    * of the generated code, as in [[assignWithFeaturesParam]], so every
+    * iteration reuses the same compiled classes). The distance sums run in
+    * the MEMBERS' own partitioning with map-side partial aggregation: the
+    * members never cross an exchange, only ≤ p·k·s partial totals do, and
+    * the driver collects k·s totals. Balance comes from how the members
+    * are partitioned (see [[run]]). */
+  def scoreCandidates(members: DataFrame, candidates: Seq[(Int, TweetFeatures)],
+      hashtagWeight: Double = 0.8): Map[Int, TweetFeatures] = {
+    import members.sparkSession.implicits._
+    import Ordering.Double.TotalOrdering
+    val totals = members
+      .join(broadcast(candidates.toDF("c_cluster", "c")), col("cluster") === col("c_cluster"))
+      .groupBy(col("c_cluster"), col("c").getField("id"))
+      .agg(sum(tweetDist(hashtagWeight)(col("c").getField, col)))
+      .as[(Int, Long, Double)].collect()
+    val byId = candidates.map { case (_, f) => f.id -> f }.toMap
+    totals.groupBy(_._1).map { case (c, ts) =>
+      c -> byId(ts.minBy { case (_, id, total) => (total, id) }._2)
+    }
+  }
+
+  /** A3 at scale — medoid over a deterministic candidate subset (id-hash
+    * order), each candidate still scored against ALL members: O(n·s) work,
+    * two collects of ≤ k·s rows, no shuffle of the members. Clusters with
+    * no members are absent from the map. */
+  def sampledMedoidFeatures(members: DataFrame, sampleSize: Int,
+      hashtagWeight: Double = 0.8): Map[Int, TweetFeatures] =
+    scoreCandidates(members, sampleCandidates(members, sampleSize), hashtagWeight)
+
+  /** [[sampledMedoidFeatures]] as the `(cluster, medoid_id)` frame that
+    * [[medoids]] returns. Computed eagerly; the frame is local. */
+  def sampledMedoids(members: DataFrame, sampleSize: Int,
+      hashtagWeight: Double = 0.8): DataFrame = {
+    import members.sparkSession.implicits._
+    sampledMedoidFeatures(members, sampleSize, hashtagWeight).toSeq
+      .map { case (c, f) => (c, f.id) }.toDF("cluster", "medoid_id")
   }
 
   /** [[meanCentroids]] resolved to synthetic TweetFeatures rows
@@ -205,31 +236,28 @@ object KMeans {
       throw new IllegalArgumentException(s"seed id $id not found in features")))
   }
 
-  /** One centroid-update round: medoid/sampled-medoid strategies yield
-    * member ids to resolve; Mean yields synthetic (non-member) centroids
-    * with id = -(cluster+1). Empty clusters keep their previous centroid. */
+  /** One centroid-update round: the exact medoid yields member ids to
+    * resolve; SampledMedoid yields the chosen members' features directly;
+    * Mean yields synthetic (non-member) centroids with id = -(cluster+1).
+    * Empty clusters keep their previous centroid. */
   private def updateCentroids(members: DataFrame, features: Dataset[TweetFeatures],
-      prev: Seq[TweetFeatures], cfg: KMeansConfig): Seq[TweetFeatures] =
-    cfg.strategy match {
-      case Mean =>
-        val rows = meanCentroidFeatures(members)
-        prev.indices.map(i => rows.getOrElse(i, prev(i)))
-      case _ =>
-        val medoidDf = cfg.strategy match {
-          case SampledMedoid(s) => sampledMedoids(members, s, cfg.hashtagWeight)
-          case _ => medoids(members, cfg.hashtagWeight)
-        }
+      prev: Seq[TweetFeatures], cfg: KMeansConfig): Seq[TweetFeatures] = {
+    val rows = cfg.strategy match {
+      case Mean => meanCentroidFeatures(members)
+      case SampledMedoid(s) => sampledMedoidFeatures(members, s, cfg.hashtagWeight)
+      case Medoid =>
         // resolve the medoid ids to feature rows INSIDE the same job (one
         // broadcast join over the cached features) instead of a second
         // isin-filter action per iteration
         import features.sparkSession.implicits._
-        val resolved = features.toDF()
-          .join(broadcast(medoidDf), col("id") === col("medoid_id"))
+        features.toDF()
+          .join(broadcast(medoids(members, cfg.hashtagWeight)), col("id") === col("medoid_id"))
           .select(col("cluster"), struct(featureCols.map(col): _*).as("f"))
           .as[(Int, TweetFeatures)]
           .collect().toMap
-        prev.indices.map(i => resolved.getOrElse(i, prev(i)))
     }
+    prev.indices.map(i => rows.getOrElse(i, prev(i)))
+  }
 
   /** The full iterative loop (§3.2): assign → update centroids → converge?
     * Features are cached across iterations (the reference re-scans HBase
@@ -238,8 +266,8 @@ object KMeans {
     */
   def run(features: Dataset[TweetFeatures], cfg: KMeansConfig): Result = {
     val spark = features.sparkSession
-    // Spread a narrow scan across the cores before caching: the medoid
-    // update BROADCASTS the candidate side, so the O(n·s) distance sums
+    // Spread a narrow scan across the cores before caching: the sampled
+    // medoid update BROADCASTS the candidates, so the O(n·s) distance sums
     // run in the MEMBERS' partitioning — and a single-row-group parquet
     // scan (or any under-split input) pins that compute to 1-2 tasks
     // however many cores exist (measured at sf0.1: 2.1-2.7 s per
@@ -282,9 +310,10 @@ object KMeans {
 
   /** A8 — seeded random k-sample of distinct ids (`random.java:29-118`,
     * with the early-return and unseeded-Random defects fixed per §2.8.3).
-    * Retries with a doubled fraction (up to 3×) if the Bernoulli sample
-    * undershoots k, then fails HERE — not rows later in KMeansConfig's
-    * `seeds.size == k` require, far from the cause. */
+    * Samples up to 3 times, doubling the fraction after each undershoot of
+    * k (the last try uses 4× the fraction), then fails HERE — not rows
+    * later in KMeansConfig's `seeds.size == k` require, far from the
+    * cause. */
   def randomSeeds(features: DataFrame, k: Int, fraction: Double, seed: Long): Seq[Long] = {
     val distinct = features.select(col("id")).dropDuplicates("id")
     var f = fraction
@@ -298,7 +327,8 @@ object KMeans {
     }
     require(ids.size == k,
       s"randomSeeds: sample yielded ${ids.size} of $k requested ids " +
-        s"(fraction $fraction tripled to ${f / 2}); table too small?")
+        s"(3 tries, fraction $fraction doubled after each: the last used ${math.min(f / 2, 1.0)}); " +
+        "table too small?")
     ids
   }
 }

@@ -12,89 +12,33 @@ import org.apache.spark.sql.functions._
   * the pairwise distance sums is map-side), then `min_by` per group with a
   * `(total, id)` struct ordering so ties deterministically break to the
   * smallest id. At 1000-executor scale the join shuffles each group to one
-  * task; groups too large for O(n²) should go through [[totals]] with a
-  * reduced candidate set (see `KMeans.sampledMedoids`).
+  * task; groups too large for O(n²) need a reduced candidate set scored
+  * without shuffling the members (see `KMeans.sampledMedoidFeatures`).
   */
 object Medoids {
 
-  /** Total distance of every candidate to all members of its group.
-    * `dist(l, r)` builds the distance column from left/right accessors —
-    * e.g. `(l, r) => abs(l("bal") - r("bal"))`. Output:
-    * `(groupCol, idCol, total)`.
+  /** Argmin-by-total per group: `(groupCol, medoid_id)`. `dist(l, r)`
+    * builds the distance column from left/right accessors — e.g.
+    * `(l, r) => abs(l("bal") - r("bal"))`.
     *
-    * `saltBuckets` > 1 fixes PARALLELISM STARVATION when the group count
-    * is small (k=3 clusters → 3 join keys → 3 tasks, however many
-    * executors exist): members are deterministically salted into S
-    * buckets by a feature hash, candidates replicate to all S, the join
-    * key becomes (group, salt) — S·k tasks — and per-salt partial totals
-    * merge in a final (tiny: candidates·S rows) aggregation. Exact same
-    * candidate totals up to double-addition order. Leave at 1 for
-    * oracle-compared paths where bitwise sum order matters. */
-  def totals(candidates: DataFrame, members: DataFrame, groupCol: String,
-      idCol: String, featCols: Seq[String],
-      dist: (String => Column, String => Column) => Column,
-      saltBuckets: Int = 1): DataFrame = {
-    val right = members.select(
-      col(groupCol).as("r_grp") +: featCols.map(c => col(c).as(s"r_$c")): _*)
-    if (saltBuckets <= 1) {
-      // merge-pinned with the members side repartitioned on the group
-      // key: left to estimates, Catalyst broadcasts whichever side's
-      // leaf undercuts 10 MB and runs the O(Σ n_c²) distance pass in the
-      // OTHER side's (often single-partition) scan layout; the pin keeps
-      // the join co-partitioned by group at the configured shuffle
-      // parallelism at every scale. Totals are unchanged: each (group,
-      // candidate) sum still accumulates inside one reducer partition.
-      candidates.hint("merge")
-        .join(right.repartition(
-          right.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-          col("r_grp")), col(groupCol) === col("r_grp"))
-        .groupBy(col(groupCol), col(idCol))
-        .agg(sum(dist(c => col(c), c => col(s"r_$c"))).as("total"))
-    } else {
-      // Pin the salted exchange's partition count (the configured
-      // shuffle parallelism) via an explicit repartition: this stage is
-      // byte-LIGHT but compute-HEAVY (s distance evaluations per member
-      // row), and AQE's byte-based coalescing otherwise folds the whole
-      // O(n·s) distance pass into ONE task at toy byte sizes (measured
-      // at sf0.1: 25.6 M distance rows, 2.4-3.0 s single-task per
-      // iteration vs ~0.4 s spread). A user-specified partition count is
-      // exactly the knob AQE preserves; the value is the session's own
-      // shuffle parallelism, so it scales with configuration, not with a
-      // constant tuned for this box.
-      val nPart = right.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      val saltedRight = right.withColumn("r_salt",
-        pmod(hash(featCols.map(c => col(s"r_$c")): _*), lit(saltBuckets)))
-        .repartition(nPart, col("r_grp"), col("r_salt"))
-      val saltedCand = candidates.withColumn("c_salt",
-        explode(sequence(lit(0), lit(saltBuckets - 1))))
-      // SHUFFLE_HASH with the candidate side as build: the candidate set
-      // is bounded by construction (k·s·saltBuckets rows), so building it
-      // per partition is safe at any corpus size, while the MEMBERS side
-      // streams. Left to estimates, Catalyst broadcasts the members side
-      // whenever its leaf estimate undercuts the 10 MB threshold — the
-      // scale-backwards build, and the join then runs in the tiny
-      // candidate frame's partitioning (measured: the whole O(n·s)
-      // distance pass on one task).
-      saltedCand.hint("shuffle_hash")
-        .join(saltedRight, col(groupCol) === col("r_grp") && col("c_salt") === col("r_salt"))
-        .groupBy(col(groupCol), col(idCol), col("c_salt"))
-        .agg(sum(dist(c => col(c), c => col(s"r_$c"))).as("partial"))
-        .groupBy(col(groupCol), col(idCol))
-        .agg(sum(col("partial")).as("total"))
-    }
-  }
-
-  /** Argmin-by-total per group: `(groupCol, medoid_id)`. */
-  def compute(candidates: DataFrame, members: DataFrame, groupCol: String,
-      idCol: String, featCols: Seq[String],
-      dist: (String => Column, String => Column) => Column,
-      saltBuckets: Int = 1): DataFrame =
-    totals(candidates, members, groupCol, idCol, featCols, dist, saltBuckets)
-      .groupBy(col(groupCol))
-      .agg(min_by(col(idCol), struct(col("total"), col(idCol))).as("medoid_id"))
-
+    * Merge-pinned with the right side repartitioned on the group key:
+    * left to estimates, Catalyst broadcasts whichever side's leaf undercuts
+    * 10 MB and runs the O(Σ n_c²) distance pass in the OTHER side's (often
+    * single-partition) scan layout; the pin keeps the join co-partitioned
+    * by group at the configured shuffle parallelism at every scale. Each
+    * (group, member) total accumulates inside one reducer partition. */
   def compute(members: DataFrame, groupCol: String, idCol: String,
       featCols: Seq[String],
-      dist: (String => Column, String => Column) => Column): DataFrame =
-    compute(members, members, groupCol, idCol, featCols, dist)
+      dist: (String => Column, String => Column) => Column): DataFrame = {
+    val right = members.select(
+      col(groupCol).as("r_grp") +: featCols.map(c => col(c).as(s"r_$c")): _*)
+    members.hint("merge")
+      .join(right.repartition(
+        right.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("r_grp")), col(groupCol) === col("r_grp"))
+      .groupBy(col(groupCol), col(idCol))
+      .agg(sum(dist(c => col(c), c => col(s"r_$c"))).as("total"))
+      .groupBy(col(groupCol))
+      .agg(min_by(col(idCol), struct(col("total"), col(idCol))).as("medoid_id"))
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Distances
 import graft.model._
 import graft.operators.{KMeans, Medoids}
 import org.apache.spark.sql.functions._
@@ -119,5 +120,62 @@ class KMeansSpec extends SparkSpec {
     val sampled = KMeans.sampledMedoids(members, sampleSize = 1000).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(exact === sampled)
+  }
+
+  test("sampled medoid: top-s by (id-hash, id), exact totals, argmin by (total, id)") {
+    import spark.implicits._
+    val s = 4
+    val rows = (1L to 40L).map(i =>
+      tf(i * 7919L, (i * 7 % 13).toInt, (i * i % 17).toInt, if (i % 3 == 0) "tr" else "en", (i % 2).toInt))
+    val spread = Seq(tf(-1, 0, 0, "en", 0), tf(-2, 12, 0, "en", 0), tf(-3, 6, 16, "en", 0))
+    val members = KMeans.assignWithFeatures(rows.toDF(), spread) // 11/10/19 members
+    // driver-side oracle over the same assignment
+    val byCluster = members.select(col("cluster"),
+      struct(col("id"), col("numOfHashtags"), col("language"), col("hasVideo"),
+        col("replyCount"), col("retweetCount"), col("likeCount"), col("time")))
+      .as[(Int, TweetFeatures)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+    val p = 1000000007L
+    def hashOrder(id: Long) = Math.floorMod(id, p) * (2654435761L % p) % p
+    val top = byCluster.map { case (c, ms) =>
+      assert(ms.size > s, s"cluster $c has ${ms.size} members; the fixture needs more than $s")
+      c -> ms.sortBy(f => (hashOrder(f.id), f.id)).take(s)
+    }
+    val expected = top.map { case (c, cands) =>
+      val totals = cands.map(f => f -> byCluster(c).map(Distances.weightedDistance(f, _, 0.8)).sum)
+        .sortBy(_._2)
+      assert(totals(1)._2 - totals(0)._2 > 1e-6, s"cluster $c: the fixture must have no tie")
+      c -> totals.head._1
+    }
+    assert(KMeans.sampleCandidates(members, s).groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap ===
+      top.view.mapValues(_.toSet).toMap)
+    assert(KMeans.sampledMedoidFeatures(members, s) === expected)
+  }
+
+  test("sampled medoid update shuffles at most 2·p·k·s records per iteration, never the members") {
+    import spark.implicits._
+    val (k, s) = (2, 3)
+    val clusterA = (1L to 200L).map(i => tf(i, (i % 5).toInt, (i % 7).toInt, "en", 0))
+    val clusterB = (201L to 400L).map(i => tf(i, 50 + (i % 5).toInt, 40 + (i % 7).toInt, "tr", 1))
+    val features = spark.createDataset(clusterA ++ clusterB)
+    val p = spark.sparkContext.defaultParallelism
+    assert(features.rdd.getNumPartitions >= p, "the input must not need the pre-cache repartition")
+    val written = new java.util.concurrent.atomic.LongAdder
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) written.add(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftnative.TaskMetricsProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = KMeans.run(features,
+        KMeansConfig(k = k, seeds = Seq(1L, 201L), strategy = SampledMedoid(s)))
+      org.apache.spark.graftnative.TaskMetricsProbe.drain(sc)
+      assert(r.iterations >= 1)
+      val bound = 2L * p * k * s * r.iterations
+      assert(written.sum() <= bound,
+        s"${written.sum()} shuffle records over ${r.iterations} iterations, bound $bound " +
+          s"(${clusterA.size + clusterB.size} members)")
+    } finally sc.removeSparkListener(listener)
   }
 }
