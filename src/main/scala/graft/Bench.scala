@@ -108,18 +108,6 @@ object Bench {
     (SparkEntry.queries.toSeq ++ Seq("q00_flagship_kmedoids" -> (flagshipKMedoids _)))
       .sortBy(_._1)
 
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
-    spark
-  }
-
   /** One task-metrics listener per live CONTEXT (repeated [[runQueries]]
     * calls on the parent's inline-fallback session must not stack
     * duplicate listeners). Keyed by the SparkContext — what `install()`
@@ -278,6 +266,58 @@ object Bench {
   private[graft] def bytesMatch(a: Long, b: Long): Boolean =
     math.abs(a - b) <= math.max(1024L, (0.02 * math.max(a, b)).toLong)
 
+  /** Untimed pause after a rep that leaked blocks (see [[timedRep]]). */
+  private val SettleMs = 2500L
+
+  /** One measured rep, the protocol every timing loop shares (Bench,
+    * ScalingBench, HammingPlanSweep): probe reset, the TIMED action, a
+    * listener-bus drain (so the snapshot covers all of this rep's tasks
+    * and none leak into the next window), the probe snapshot, then
+    * untimed cleanup — which runs even when the action throws. Returns
+    * (action result, seconds, (shuffle read, shuffle write, disk spill,
+    * memory spill) bytes).
+    *
+    * Cleanup: iterative queries (CC loops, k-medoids) leave
+    * lazy-localCheckpoint RDD blocks behind that belong to the now-dead
+    * invocation; accumulated across reps they evict each other into
+    * recompute churn (measured: rep 3 of the ensemble 2x rep 1). Each rep
+    * measures a fresh invocation, so the leftovers are garbage, not warm
+    * state. Only those queries leak; the conditional keeps cleanup free
+    * for the other ~95% of rows (an unconditional System.gc() taxed every
+    * row). */
+  def timedRep[A](spark: SparkSession,
+                  probe: org.apache.spark.graftnative.TaskMetricsProbe)
+                 (action: => A): (A, Double, (Long, Long, Long, Long)) = {
+    probe.reset()
+    try {
+      val t0 = System.nanoTime()
+      val result = action
+      val t = (System.nanoTime() - t0) / 1e9
+      try org.apache.spark.graftnative.TaskMetricsProbe.drain(spark.sparkContext)
+      catch { case _: Throwable => () }
+      (result, t, probe.snapshot())
+    } finally try {
+      val leaked = spark.sparkContext.getPersistentRDDs
+      if (leaked.nonEmpty) {
+        spark.sharedState.cacheManager.clearCache()
+        // BLOCKING unpersist: the async form returns immediately and the
+        // block-manager removal work then lands INSIDE the next timed rep
+        // (measured on the ensemble row: reps climbed 7 s -> 13 s async,
+        // flat blocking)
+        leaked.values.foreach(_.unpersist(true))
+        // nudge the ContextCleaner: shuffle files and broadcasts of the
+        // dead invocation are reference-tracked and only reclaimed after
+        // a GC notices the references died
+        System.gc()
+        // settle: the cleaner then deletes those shuffles and broadcasts
+        // ASYNCHRONOUSLY — without a pause that IO/lock traffic lands
+        // inside the next timed rep (measured on the ensemble row: reps
+        // climbed 8 -> 13 s unsettled, 5.5 -> 7.9 s with a pause)
+        Thread.sleep(SettleMs)
+      }
+    } catch { case _: Throwable => () }
+  }
+
   /** Runs the named queries (reps each) in THIS JVM and returns rows.
     * Shared by child processes and the parent's inline fallback. When
     * `withCanary`, the chunk's canary is timed right after the warmup
@@ -310,52 +350,6 @@ object Bench {
       } else Nil
 
     val probe = probeFor(spark)
-    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): (Double, Long, Long) = {
-      probe.reset()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: $e") }
-      val t = (System.nanoTime() - t0) / 1e9
-      // drain the async listener bus so the snapshot covers ALL of this
-      // rep's tasks and none leak into the next query's window
-      try org.apache.spark.graftnative.TaskMetricsProbe.drain(spark.sparkContext)
-      catch { case _: Throwable => () }
-      val (sr, sw, _, _) = probe.snapshot()
-      // UNTIMED cleanup: iterative queries (CC loops, k-medoids) leave
-      // lazy-localCheckpoint RDD blocks behind that belong to the now-dead
-      // invocation; accumulated across reps they evict each other into
-      // recompute churn (measured: rep 3 of the ensemble 2x rep 1). Each
-      // rep measures a fresh invocation, so the leftovers are garbage,
-      // not warm state.
-      try {
-        // only the iterative queries (CC loops, k-medoids) leave blocks
-        // behind; the conditional keeps the cleanup free for the other
-        // ~95% of rows (an unconditional System.gc() taxed every row)
-        val leaked = spark.sparkContext.getPersistentRDDs
-        if (leaked.nonEmpty) {
-          spark.sharedState.cacheManager.clearCache()
-          // BLOCKING unpersist: the async form returns immediately and
-          // the block-manager removal work then lands INSIDE the next
-          // timed rep (measured on the ensemble row: reps climbed
-          // 7 s -> 13 s async, flat blocking). This call is in the
-          // untimed gap, so paying it here is free.
-          leaked.values.foreach(_.unpersist(true))
-          // nudge the ContextCleaner: shuffle files and broadcasts of the
-          // dead invocation are reference-tracked and only reclaimed
-          // after a GC notices the references died
-          System.gc()
-          // settle: the cleaner thread then deletes those shuffles and
-          // broadcasts ASYNCHRONOUSLY — without a pause that IO/lock
-          // traffic lands inside the next timed rep (measured on the
-          // ensemble row: reps climbed 8 -> 13 s unsettled, 5.5 -> 7.9 s
-          // with a pause). Only iterative rows reach this branch, so the
-          // untimed cost is a few seconds across the whole suite.
-          Thread.sleep(
-            sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_MS", "2500").toLong)
-        }
-      } catch { case _: Throwable => () }
-      (t, sr, sw)
-    }
 
     // duplicate names would accumulate 2×reps runs under ONE key and be
     // emitted twice (double-counting Σ); dedupe up front and say so
@@ -398,8 +392,11 @@ object Bench {
       }
     for (pass <- 1 to reps; (name, fn) <- known if !finals.contains(name)) {
       val gc0 = gcTotalSec()
-      val run = timeOnce(name, fn)
-      times(name) = times.getOrElse(name, Vector.empty) :+ run
+      val (_, t, (sr, sw, _, _)) = timedRep(spark, probe) {
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: $e") }
+      }
+      times(name) = times.getOrElse(name, Vector.empty) :+ ((t, sr, sw))
       gcSecs(name) = gcSecs.getOrElse(name, 0.0) + (gcTotalSec() - gc0)
       if (pass == reps || (pass == 2 && trimAfterTwo(name))) {
         // bytes come from the min-wall rep so bytes and seconds describe
@@ -438,7 +435,7 @@ object Bench {
     * The chunk's own machine-probe reading rides back as a pseudo-row,
     * so a contention window that opens mid-run is localized to its
     * chunk instead of averaged into the run-level start/end probes. */
-  private def childMain(sfDir: String, cpus: String, reps: Int): Unit = {
+  private def childMain(sfDir: String, reps: Int): Unit = {
     val names = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "").split(',').toSeq.filter(_.nonEmpty)
     val out = sys.env("SPARK_GRAFT_BENCH_OUT")
     val probeSec = machineProbeSec()
@@ -447,7 +444,7 @@ object Bench {
     val trimRef =
       if (sys.env.contains("SPARK_GRAFT_BENCH_NO_TRIM")) None
       else readRef(BaselinePath).filter(_.sf.contains(sfDir))
-    val spark = newSession(cpus)
+    val spark = Sessions.local("graft-bench")
     val rows = runQueries(spark, sfDir, names, reps, withCanary = true, trimRef = trimRef) :+
       QueryResult(ChunkProbeName, Seq(probeSec), 0.0, 0.0)
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
@@ -498,7 +495,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // floor at 3 UNLESS the user set the env var themselves: with n=2 the
     // reported "median" is the worse run, but silently overriding an
     // explicit reps=1 for a quick local loop is worse (ADVICE r3)
@@ -517,7 +513,7 @@ object Bench {
       return
     }
 
-    if (sys.env.contains("SPARK_GRAFT_BENCH_CHILD")) return childMain(sfDir, cpus, reps)
+    if (sys.env.contains("SPARK_GRAFT_BENCH_CHILD")) return childMain(sfDir, reps)
 
     // optional comma-separated prefix filter for local iteration, e.g.
     // SPARK_GRAFT_BENCH_ONLY=q46,q48 — the driver never sets it
@@ -552,7 +548,7 @@ object Bench {
     def elapsedSec: Double = (System.nanoTime() - t0) / 1e9
 
     // lazily created only if a child spawn fails and a chunk runs inline
-    lazy val inlineSpark = newSession(cpus)
+    lazy val inlineSpark = Sessions.local("graft-bench")
     val tmpDir = java.nio.file.Files.createTempDirectory("graft-bench")
     System.err.println(s"[bench] chunk logs + partials: $tmpDir")
     val pseudo = Set(CanaryName, CanaryEndName, ChunkProbeName)
@@ -692,8 +688,6 @@ object Bench {
   final case class MachineProbe(startSec: Double, endSec: Double) {
     def factor: Double = math.min(startSec, endSec) / MachineRefSec
   }
-
-  private def num(d: Double): String = f"$d%.3f"
 
   /** Rows whose median blew out past 5× their own minimum across reps —
     * the signature of machine contention (round-5 driver run inflated
@@ -865,7 +859,7 @@ object Bench {
       all.map(e => "\"" + e._1 + "\":" + f(e)).mkString("{", ",", "}")
     val json = s"""{"metric":"baseline","machine_factor":1.0,"sf":"$sfDir",""" +
       s""""source":"monotone min-merge of clean runs (Bench.updateBaseline)",""" +
-      s""""queries":${jmap(e => num(e._2._1))},""" +
+      s""""queries":${jmap(e => Json.num(e._2._1))},""" +
       s""""shuffle_write_b":${jmap(_._2._2.toString)},""" +
       s""""shuffle_read_b":${jmap(_._2._3.toString)}}"""
     try {
@@ -921,10 +915,10 @@ object Bench {
     // canaries run ~3-4× faster in a fully warm chunk JVM — a pooled
     // min would systematically read "faster than the clean builder"
     // (ADVICE r8 #1); canary_end_min lives in the full JSON.
-    val canaryMin = if (canaries.isEmpty) "null" else num(canaries.min)
-    val mf = if (machine.startSec <= 0) "null" else num(machine.factor)
-    s"""{"metric":"total","value":${num(results.map(_.median).sum)},"unit":"sec",""" +
-      s""""min_total":${num(results.map(_.min).sum)},"reps":$reps,""" +
+    val canaryMin = if (canaries.isEmpty) "null" else Json.num(canaries.min)
+    val mf = if (machine.startSec <= 0) "null" else Json.num(machine.factor)
+    s"""{"metric":"total","value":${Json.num(results.map(_.median).sum)},"unit":"sec",""" +
+      s""""min_total":${Json.num(results.map(_.min).sum)},"reps":$reps,""" +
       s""""machine_factor":$mf,"partial":$partial,"n_skipped":$nSkipped,""" +
       s""""chunks":$nChunks,"chunk_size":$chunkSize,"n_queries":${results.size},""" +
       s""""contended":${contended.nonEmpty || slowChunks > 0 || uniform},""" +
@@ -933,7 +927,7 @@ object Bench {
       s""""n_env_suspect":${envSuspectRows(results, ref, machine.factor).size},""" +
       s""""n_rerun":$nRerun,"n_rerun_improved":$nRerunImproved,""" +
       s""""n_drifted_chunks":$drifted,"canary_min":$canaryMin,""" +
-      s""""queries":${shown.map(r => "\"" + r.name + "\":" + num(r.median)).mkString("{", ",", "}")},""" +
+      s""""queries":${shown.map(r => "\"" + r.name + "\":" + Json.num(r.median)).mkString("{", ",", "}")},""" +
       s""""detail":"bench_result.json","sf":"$sfDir"}"""
   }
 
@@ -962,9 +956,9 @@ object Bench {
     val contended = contendedRows(results)
     val slowChunks = contendedChunks(canaries, canaryEnds)
     val uniform = uniformSlow(canaries, canaryEnds)
-    val mf = if (machine.startSec <= 0) "null" else num(machine.factor)
-    val ms = if (machine.startSec <= 0) "null" else num(machine.startSec)
-    val me = if (machine.startSec <= 0) "null" else num(machine.endSec)
+    val mf = if (machine.startSec <= 0) "null" else Json.num(machine.factor)
+    val ms = if (machine.startSec <= 0) "null" else Json.num(machine.startSec)
+    val me = if (machine.startSec <= 0) "null" else Json.num(machine.endSec)
     s"""{"metric":"total","value":${results.map(_.median).sum},"unit":"sec",""" +
       s""""min_total":${results.map(_.min).sum},"reps":$reps,""" +
       s""""partial":$partial,"n_skipped":$nSkipped,""" +
@@ -975,15 +969,15 @@ object Bench {
       s""""uniform_slow":$uniform,""" +
       s""""n_contended_chunks":$slowChunks,""" +
       s""""n_drifted_chunks":${driftedChunks(canaries, canaryEnds)},""" +
-      s""""canary_sec":${canaries.map(num).mkString("[", ",", "]")},""" +
-      s""""canary_end_sec":${canaryEnds.map(num).mkString("[", ",", "]")},""" +
-      s""""canary_end_min":${if (canaryEnds.isEmpty) "null" else num(canaryEnds.min)},""" +
+      s""""canary_sec":${canaries.map(Json.num(_)).mkString("[", ",", "]")},""" +
+      s""""canary_end_sec":${canaryEnds.map(Json.num(_)).mkString("[", ",", "]")},""" +
+      s""""canary_end_min":${if (canaryEnds.isEmpty) "null" else Json.num(canaryEnds.min)},""" +
       s""""contended_rows":${contended.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""env_suspect_rows":${envSuspectRows(results, ref, machine.factor)
         .map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""rerun_rows":${rerunRows.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""rerun_improved":${rerunImproved.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""chunk_probe_sec":${chunkProbes.map(num).mkString("[", ",", "]")},""" +
+      s""""chunk_probe_sec":${chunkProbes.map(Json.num(_)).mkString("[", ",", "]")},""" +
       s""""gc_algo":"${gcAlgoName}","heap_max_mb":${(Runtime.getRuntime.maxMemory / 1e6).toLong},""" +
       s""""env_ref":${ref.map(r =>
         s"""{"source":"${r.source}","machine_factor":${r.machineFactor},"n":${r.medians.size}}""")
@@ -992,8 +986,8 @@ object Bench {
       s""""runs":${jmap(_.runs.mkString("[", ",", "]"))},""" +
       s""""shuffle_write_b":${jmap(_.shuffleWriteB.toString)},""" +
       s""""shuffle_read_b":${jmap(_.shuffleReadB.toString)},""" +
-      s""""codecache_mb":${jmap(r => f"${r.ccMb}%.1f")},""" +
-      s""""gc_sec":${jmap(r => f"${r.gcSec}%.2f")},""" +
+      s""""codecache_mb":${jmap(r => Json.num(r.ccMb, 1))},""" +
+      s""""gc_sec":${jmap(r => Json.num(r.gcSec, 2))},""" +
       s""""sf":"$sfDir"}"""
   }
 }

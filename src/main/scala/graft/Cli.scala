@@ -25,15 +25,7 @@ import graft.sources.{AssignmentIO, TweetIngest}
 object Cli {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .appName(s"graft-${args.headOption.getOrElse("help")}")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
+    val spark = Sessions.local(s"graft-${args.headOption.getOrElse("help")}")
     try run(spark, args.toList)
     finally spark.stop()
   }
@@ -296,7 +288,7 @@ object Cli {
         case FormStatus(form, tier, verb, Some((tvd, mg, nb, nl, stale))) =>
           val price = graft.operators.IndexDrift.price(tier, tvd, mg)
           if (asJson) println(s"""{"form":"$form","n_build":$nb,"n_live":$nl,""" +
-            f""""tvd":$tvd%.4f,"max_growth":$mg%.2f,"stale":$stale,""" +
+            s""""tvd":${Json.num(tvd, 4)},"max_growth":${Json.num(mg, 2)},"stale":$stale,""" +
             s"""${price.jsonFields},"rebuild_with":"$verb"}""")
           else {
             println(f"[graft] index-status $form: rows $nb -> $nl, " +

@@ -41,9 +41,6 @@ import graft.operators.{Dedup, Similarity}
   * SCALING.md's threshold table is authored from. */
 object DriftSweep {
 
-  private def dstr(x: Double, nd: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${nd}f", Double.box(x))
-
   private val CosTau = 0.9
 
   /** Drifted embeddings for ids [from, until): id pair 2g/2g+1 shares a
@@ -91,16 +88,9 @@ object DriftSweep {
     val lambdas = sys.env.getOrElse("SPARK_GRAFT_DRIFT_LAMBDAS", "0.05,0.1,0.2,0.4")
       .split(",").map(_.trim.toDouble).toSeq.sorted
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-driftsweep").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-driftsweep").toString
+    val spark = Sessions.local("graft-drift-sweep",
+      extra = Seq("spark.sql.warehouse.dir" -> warehouse))
 
     val rows = scala.collection.mutable.ArrayBuffer.empty[String]
     def emit(row: String): Unit = { rows += row; println(row) }
@@ -158,12 +148,12 @@ object DriftSweep {
         .ivfIndexProbeEdges(spark, probe, "dsc2", fine2, CosTau)
         .select("id_a", "id_b").distinct().count()
       cleanupIdx("dsc2")
-      emit(s"""{"tier":"cell","lambda":${dstr(label, 3)},"control":$control,""" +
-        s""""tvd":${dstr(s.tvd, 4)},"max_growth":${dstr(s.maxGrowth, 2)},""" +
+      emit(s"""{"tier":"cell","lambda":${Json.num(label, 3)},"control":$control,""" +
+        s""""tvd":${Json.num(s.tvd, 4)},"max_growth":${Json.num(s.maxGrowth, 2)},""" +
         s""""flagged":$flagged,"n_truth":$truth,""" +
-        s""""cand_per_probe":${dstr(candRows / 500.0, 1)},""" +
-        s""""stale_recall":${dstr(if (truth == 0) 1.0 else staleFound.toDouble / truth, 4)},""" +
-        s""""rebuilt_recall":${dstr(if (truth == 0) 1.0 else rebuiltFound.toDouble / truth, 4)}}""")
+        s""""cand_per_probe":${Json.num(candRows / 500.0, 1)},""" +
+        s""""stale_recall":${Json.num(if (truth == 0) 1.0 else staleFound.toDouble / truth, 4)},""" +
+        s""""rebuilt_recall":${Json.num(if (truth == 0) 1.0 else rebuiltFound.toDouble / truth, 4)}}""")
     }
 
     cleanupIdx("dsc")
@@ -205,9 +195,9 @@ object DriftSweep {
       val s = Dedup.bandDriftStats(spark, "dsb")
       val flagged = Dedup.bandIndexStale(spark, "dsb")
       val cand = Dedup.indexedBandJoin(spark, probeDocs, "dsb").count()
-      emit(s"""{"tier":"band","lambda":${dstr(lambda, 3)},"control":false,""" +
-        s""""tvd":${dstr(s.tvd, 4)},"max_growth":${dstr(s.maxGrowth, 2)},""" +
-        s""""flagged":$flagged,"cand_per_probe":${dstr(cand / 200.0, 1)}}""")
+      emit(s"""{"tier":"band","lambda":${Json.num(lambda, 3)},"control":false,""" +
+        s""""tvd":${Json.num(s.tvd, 4)},"max_growth":${Json.num(s.maxGrowth, 2)},""" +
+        s""""flagged":$flagged,"cand_per_probe":${Json.num(cand / 200.0, 1)}}""")
     }
     measure(0.0)
     var appended = 0L
@@ -239,9 +229,9 @@ object DriftSweep {
       val s = Similarity.embDriftStats(spark, "dse")
       val flagged = Similarity.embIndexStale(spark, "dse")
       val cand = Similarity.embIndexJoin(spark, probe, "dse").count()
-      emit(s"""{"tier":"emb","lambda":${dstr(lambda, 3)},"control":false,""" +
-        s""""tvd":${dstr(s.tvd, 4)},"max_growth":${dstr(s.maxGrowth, 2)},""" +
-        s""""flagged":$flagged,"cand_per_probe":${dstr(cand / 200.0, 1)}}""")
+      emit(s"""{"tier":"emb","lambda":${Json.num(lambda, 3)},"control":false,""" +
+        s""""tvd":${Json.num(s.tvd, 4)},"max_growth":${Json.num(s.maxGrowth, 2)},""" +
+        s""""flagged":$flagged,"cand_per_probe":${Json.num(cand / 200.0, 1)}}""")
     }
     measure(0.0)
     var appended = 0L

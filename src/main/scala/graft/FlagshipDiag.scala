@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.KMeans
 
 /** Stage-split timing for the flagship k-medoids loop (q00) — the
@@ -25,14 +24,7 @@ import graft.operators.KMeans
 object FlagshipDiag {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
+    val spark = Sessions.local("graft-flagship-diag")
     import spark.implicits._
 
     val features = Tables.eventFeatures(spark, dir).as[graft.model.TweetFeatures]
@@ -45,7 +37,7 @@ object FlagshipDiag {
         ((System.nanoTime() - t0) / 1e9, n)
       }
       val (sec, n) = runs.minBy(_._1)
-      println(f"""{"stage":"$name","sec":$sec%.3f,"rows":$n}""")
+      println(s"""{"stage":"$name","sec":${Json.num(sec)},"rows":$n}""")
     }
     time("scan_cache") { df.unpersist(true); df.cache(); df.count() }
     val seeds = KMeans.deterministicSeeds(df, 3)

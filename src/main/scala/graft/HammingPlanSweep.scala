@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Wall-time sweep of the q45c assignment pipeline under each PINNED
   * hamming block plan — the calibration data behind the chooser's
   * band-row weight (round-11 finding: the equal-weight cost model
@@ -19,33 +16,22 @@ object HammingPlanSweep {
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "1").toInt
     val plans = sys.env.getOrElse("SPARK_GRAFT_HAMMING_PLANS", "7:1,8:2,9:3,10:4")
       .split(',').map { s => val Array(m, c) = s.split(':').map(_.trim.toInt); (m, c) }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
-
-    val probe = org.apache.spark.graftnative.TaskMetricsProbe.install(spark.sparkContext)
+    val spark = Sessions.local("graft-hamming-sweep")
+    val probe = Bench.probeFor(spark)
     val docs = graft.operators.Dedup.withNearDuplicates(
       Tables.load(spark, dir, "documents"))
     for ((m, c) <- plans) {
       val runs = (1 to reps).map { _ =>
-        probe.reset()
-        val t0 = System.nanoTime()
-        graft.operators.Dedup.simhashAssignments(docs, plan = Some((m, c)))
-          .write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftnative.TaskMetricsProbe.drain(spark.sparkContext)
-        val mtr = probe.snapshot()
-        val leaked = spark.sparkContext.getPersistentRDDs
-        if (leaked.nonEmpty) { leaked.values.foreach(_.unpersist(true)); System.gc() }
+        val (_, sec, mtr) = Bench.timedRep(spark, probe) {
+          graft.operators.Dedup.simhashAssignments(docs, plan = Some((m, c)))
+            .write.format("noop").mode("overwrite").save()
+        }
         (sec, mtr)
       }
       val (sec, (sr, sw, ds, ms)) = runs.minBy(_._1)
-      println(f"""{"plan":"${m}:${c}","sec":$sec%.2f,"shuffle_read_mb":${sr / 1e6}%.1f,"shuffle_write_mb":${sw / 1e6}%.1f,"disk_spill_mb":${ds / 1e6}%.1f,"mem_spill_mb":${ms / 1e6}%.1f}""")
+      println(s"""{"plan":"$m:$c","sec":${Json.num(sec, 2)},""" +
+        s""""shuffle_read_mb":${Json.num(sr / 1e6, 1)},"shuffle_write_mb":${Json.num(sw / 1e6, 1)},""" +
+        s""""disk_spill_mb":${Json.num(ds / 1e6, 1)},"mem_spill_mb":${Json.num(ms / 1e6, 1)}}""")
     }
     spark.stop()
   }

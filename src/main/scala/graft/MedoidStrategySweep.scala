@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.model.TweetFeatures
 import graft.operators.KMeans
@@ -45,9 +45,6 @@ import graft.operators.KMeans
   * authored from these runs. */
 object MedoidStrategySweep {
 
-  private def dstr(x: Double, nd: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${nd}f", Double.box(x))
-
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
@@ -56,14 +53,7 @@ object MedoidStrategySweep {
     val hw = 0.8
     val k = 3
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
+    val spark = Sessions.local("graft-medoid-sweep")
     import spark.implicits._
 
     val features = Tables.eventFeatures(spark, dir).as[graft.model.TweetFeatures]
@@ -138,9 +128,9 @@ object MedoidStrategySweep {
         }
       }.max
       val regret = (r.obj - best.obj) / best.obj * 100.0
-      println(s"""{"strategy":"${r.label}","s":${r.s},"sec":${dstr(r.sec, 3)},""" +
-        s""""objective":${dstr(r.obj, 1)},"regret_pct":${dstr(regret, 4)},""" +
-        s""""centroid_shift_vs_best":${dstr(shift, 3)}}""")
+      println(s"""{"strategy":"${r.label}","s":${r.s},"sec":${Json.num(r.sec, 3)},""" +
+        s""""objective":${Json.num(r.obj, 1)},"regret_pct":${Json.num(regret, 4)},""" +
+        s""""centroid_shift_vs_best":${Json.num(shift, 3)}}""")
     }
     spark.stop()
   }

@@ -221,16 +221,8 @@ object ScalingBench {
               prior: Option[(Double, Double)] = None): Point = {
     val fn = Bench.registry.toMap.apply(name)
     def oneRep(): (Double, (Long, Long, Long, Long)) = {
-      probe.reset()
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graftnative.TaskMetricsProbe.drain(spark.sparkContext)
-      val m = probe.snapshot()
-      // same untimed between-rep cleanup as Bench: iterative rows leave
-      // dead lazy-checkpoint blocks that would evict each other
-      val leaked = spark.sparkContext.getPersistentRDDs
-      if (leaked.nonEmpty) { leaked.values.foreach(_.unpersist(true)); System.gc() }
+      val (_, t, m) = Bench.timedRep(spark, probe)(
+        fn(spark, dir).write.format("noop").mode("overwrite").save())
       (t, m)
     }
     var runs = (1 to reps).map(_ => oneRep())
@@ -256,24 +248,14 @@ object ScalingBench {
         f"(${firstMin._1}%.2f s vs committed ${prior.get._1}%.2f s, bytes match) - re-running to 4 reps")
       runs ++= (runs.size until 4).map(_ => oneRep())
     }
-    val rows = fn(spark, dir).count()
-    // fence the count job's task-end events too: without this drain
-    // they can still be queued when the NEXT query's reset() runs and
-    // would be attributed to its first rep
-    org.apache.spark.graftnative.TaskMetricsProbe.drain(spark.sparkContext)
-    val leaked = spark.sparkContext.getPersistentRDDs
-    if (leaked.nonEmpty) { leaked.values.foreach(_.unpersist(true)); System.gc() }
+    // untimed, but through the same rep protocol: its drain fences the
+    // count job's task-end events out of the next query's first rep
+    val (rows, _, _) = Bench.timedRep(spark, probe)(fn(spark, dir).count())
     val (sec, (sr, sw, ds, ms)) = runs.minBy(_._1)
     Point(name, scale, sec, rows, sr, sw, ds, ms,
       reps = runs.size, envRerun = rerun, priorSec = prior.map(_._1),
       envSuspect = rerun && bytesClose((sr, sw, ds, ms)) && wallSuspect(sec))
   }
-
-  /** Locale-stable decimal rendering for the JSON artifact (the f
-    * interpolator honors the JVM default locale — a decimal-comma
-    * locale would emit invalid JSON). */
-  private def dstr(x: Double, nd: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${nd}f", Double.box(x))
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -297,20 +279,12 @@ object ScalingBench {
     if (extraConf.nonEmpty)
       System.err.println(s"[scaling] EXPERIMENT confs ${extraConf.mkString(",")} -> $outPath")
 
-    val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local mode defaults to ONE task attempt; the ×256 spill-heavy
-      // rows hit a transient LZ4/GCLocker read failure once in ~45 k
-      // tasks and a single retry absorbs it (cluster default is 4 —
-      // this just restores that posture for the measurement harness)
-      .config("spark.task.maxFailures", "4")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
+    // local mode defaults to ONE task attempt; the ×256 spill-heavy rows
+    // hit a transient LZ4/GCLocker read failure once in ~45 k tasks and a
+    // single retry absorbs it (cluster default is 4 — this just restores
+    // that posture for the measurement harness)
+    val spark = Sessions.local("graft-scaling",
+      extra = ("spark.task.maxFailures" -> "4") +: extraConf)
 
     val tables = sys.env.get("SPARK_GRAFT_SCALE_TABLES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -330,7 +304,7 @@ object ScalingBench {
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
 
-    val probe = org.apache.spark.graftnative.TaskMetricsProbe.install(spark.sparkContext)
+    val probe = Bench.probeFor(spark)
     // the committed scaling_result.json doubles as (a) the env-suspect
     // reference per (query, scale) and (b) the merge base: points NOT
     // re-measured this run are carried over verbatim, so a subset run
@@ -346,12 +320,12 @@ object ScalingBench {
     // loses only the in-flight measurement.
     val points = scala.collection.mutable.ArrayBuffer.empty[Point]
     def pointJson(p: Point): String =
-      s"""{"query":"${p.query}","scale":${p.scale},"sec":${dstr(p.sec, 3)},"rows":${p.rows},""" +
-      s""""shuffle_read_mb":${dstr(p.shuffleReadB / 1e6, 1)},"shuffle_write_mb":${dstr(p.shuffleWriteB / 1e6, 1)},""" +
-      s""""disk_spill_mb":${dstr(p.diskSpillB / 1e6, 1)},"mem_spill_mb":${dstr(p.memSpillB / 1e6, 1)},""" +
+      s"""{"query":"${p.query}","scale":${p.scale},"sec":${Json.num(p.sec, 3)},"rows":${p.rows},""" +
+      s""""shuffle_read_mb":${Json.num(p.shuffleReadB / 1e6, 1)},"shuffle_write_mb":${Json.num(p.shuffleWriteB / 1e6, 1)},""" +
+      s""""disk_spill_mb":${Json.num(p.diskSpillB / 1e6, 1)},"mem_spill_mb":${Json.num(p.memSpillB / 1e6, 1)},""" +
       s""""reps":${p.reps}""" +
       (if (p.envRerun)
-        s""","env_rerun":true,"prior_sec":${dstr(p.priorSec.get, 3)},"env_suspect":${p.envSuspect}"""
+        s""","env_rerun":true,"prior_sec":${Json.num(p.priorSec.get, 3)},"env_suspect":${p.envSuspect}"""
        else "") + "}"
     def persist(): String = {
       val measured = points.map(p => (p.query, p.scale)).toSet

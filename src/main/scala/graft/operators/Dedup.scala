@@ -29,11 +29,10 @@ object Dedup {
     * threshold. 2 M pairs collect as two longs each (~32 MB, under one
     * shuffle partition's working set); the decision reads an EXACT
     * count, never a Catalyst estimate, so a fan-out-blinded plan can
-    * never sneak an oversized graph onto the driver. Overridable for a
-    * different driver budget via SPARK_GRAFT_CC_LOCAL_MAX (0 forces the
-    * distributed loop everywhere — the spec pin uses it). */
-  val DefaultCcLocalMaxEdges: Long =
-    sys.env.get("SPARK_GRAFT_CC_LOCAL_MAX").map(_.toLong).getOrElse(2000000L)
+    * never sneak an oversized graph onto the driver. Callers pass
+    * `localMaxEdges = 0` to force the distributed loop (the spec pins
+    * local == distributed that way). */
+  val DefaultCcLocalMaxEdges: Long = 2000000L
 
   // ---- corpus builders (deterministic dup injection for testing) ----------
 
@@ -839,21 +838,16 @@ object Dedup {
     // truthful, so a vertex table under the broadcast threshold
     // broadcasts and one over it honestly shuffles.
     import org.apache.spark.sql.graftnative.PlanStats.withKnownRowCount
-    val ccVerbose = sys.env.contains("GRAFT_CC_VERBOSE")
-    val t00 = System.nanoTime()
     val labels0 = edges.select(col("src").as("id"), col("src").as("label"))
       .unionAll(edges.select(col("src").as("id"), col("dst").as("label")))
       .groupBy("id").agg(min("label").as("label"))
       .localCheckpoint(false)
     val vertices = labels0.count() // materializes round 0 (pairs cached above)
-    if (ccVerbose)
-      System.err.println(f"[cc] labels0: $vertices vertices ${(System.nanoTime() - t00) / 1e9}%.2f s")
     var labels = withKnownRowCount(labels0, vertices)
     var changed = 1L
     var round = 0
     val nullPrev = lit(null).cast("long").as("prev")
     while (changed > 0 && round < maxRounds) {
-      val tR = System.nanoTime()
       // candidate branches — every label is a member id of the same
       // component (min over member ids stays a member id), so the jump
       // lookups are inner equi-joins on the label table itself
@@ -876,10 +870,7 @@ object Dedup {
         .agg(min("label").as("label"), min("prev").as("prev"))
         .localCheckpoint(false), vertices)
       // the round's single action: realizes the checkpoint, tests fixpoint
-      val t0 = System.nanoTime()
       changed = next.filter(col("label") =!= col("prev")).count()
-      if (ccVerbose)
-        System.err.println(f"[cc] round $round: changed=$changed count ${(System.nanoTime() - t0) / 1e9}%.2f s total ${(System.nanoTime() - tR) / 1e9}%.2f s")
       labels = next.select("id", "label")
       round += 1
     }
@@ -894,13 +885,10 @@ object Dedup {
     // ...including the eager result: streamingCanonicalFold chains it
     // into the NEXT batch's CC input, which would otherwise re-compound
     // across batches
-    val tF = System.nanoTime()
     val result = withKnownRowCount(
       labels.select(col("id").as("doc_id"), col("label").as("canonical_id"))
         .localCheckpoint(true), vertices)
     pairsCached.unpersist()
-    if (ccVerbose)
-      System.err.println(f"[cc] final checkpoint ${(System.nanoTime() - tF) / 1e9}%.2f s")
     result
   }
 

@@ -25,11 +25,9 @@ object GraphOps {
     * the EXACT wedge count (from out-degrees, O(m)) as well as the edge
     * count — a dense sub-threshold graph with a quadratic wedge set
     * still takes the distributed join. 16 M wedges ≈ a few hundred ms
-    * of hash probes. Overridable via SPARK_GRAFT_TRI_LOCAL_MAX_WEDGES
-    * (0 forces the distributed census — the spec pin uses it). */
-  val LocalMaxWedges: Long =
-    sys.env.get("SPARK_GRAFT_TRI_LOCAL_MAX_WEDGES").map(_.toLong)
-      .getOrElse(16000000L)
+    * of hash probes. `localMaxEdges = 0` still forces the distributed
+    * census (the spec pin uses it). */
+  val LocalMaxWedges: Long = 16000000L
 
   /** Support-filtered co-occurrence pairs: for rows (group, item), count
     * per unordered item pair (a < b) the number of DISTINCT groups

@@ -141,8 +141,8 @@ private[graft] object IndexDrift {
       DriftPrice(
         f"stale quantizer costs ≈ $lossPct%.1f%% recall on drifted probes " +
           f"(≈ $aggPct%.2f%% aggregate at this tvd; rebuilt = 1.000) [index_drift_scales.json]",
-        f""""price_recall_loss_drifted_pct":$lossPct%.2f,""" +
-          f""""price_recall_loss_aggregate_pct":$aggPct%.3f,""" +
+        s""""price_recall_loss_drifted_pct":${graft.Json.num(lossPct, 2)},""" +
+          s""""price_recall_loss_aggregate_pct":${graft.Json.num(aggPct, 3)},""" +
           s""""price_source":"index_drift_scales.json"""")
     case t =>
       val rows = if (t == "band") BandPrices else EmbPrices
@@ -151,7 +151,8 @@ private[graft] object IndexDrift {
       DriftPrice(
         f"probe cost at this growth ≈ $cand%.0f candidates/probe " +
           f"(clean baseline $clean%.0f) [index_drift_scales.json]",
-        f""""price_cand_per_probe":$cand%.1f,"price_cand_per_probe_clean":$clean%.1f,""" +
+        s""""price_cand_per_probe":${graft.Json.num(cand, 1)},""" +
+          s""""price_cand_per_probe_clean":${graft.Json.num(clean, 1)},""" +
           s""""price_source":"index_drift_scales.json"""")
   }
 

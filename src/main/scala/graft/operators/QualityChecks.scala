@@ -15,12 +15,10 @@ object QualityChecks {
     * via [[Ranks.globalPrefixSum]] (measured ~2.8 s slower at
     * sf0.1/local[32] — the range-shard + checkpoint price that only
     * pays once the histogram is genuinely data-sized). Matches the
-    * global-window gate's leaf bound (2²⁰). Overridable via
-    * SPARK_GRAFT_RANKMAP_WINDOW_MAX (0 forces the distributed form —
-    * the spec pin uses it). */
-  val DefaultRankMapWindowMaxDistinct: Long =
-    sys.env.get("SPARK_GRAFT_RANKMAP_WINDOW_MAX").map(_.toLong)
-      .getOrElse(1L << 20)
+    * global-window gate's leaf bound (2²⁰). Callers pass
+    * `rankMapWindowMaxDistinct = 0` to force the distributed form (the
+    * spec pin uses it). */
+  val DefaultRankMapWindowMaxDistinct: Long = 1L << 20
 
   /** One row per profiled column:
     * (col_name, n_rows, n_nulls, null_frac, n_distinct, is_unique) where

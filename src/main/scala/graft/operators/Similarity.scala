@@ -249,20 +249,6 @@ object Similarity {
     rer.withColumn("rank", row_number().over(w2)).filter(col("rank") <= k)
   }
 
-  /** Embedding-cosine near-duplicate pairs, BRUTE-FORCE baseline: exact
-    * all-pairs within a `label` cell. O(cell²) — correctness yardstick for
-    * [[hyperplaneLshNearDupPairs]] (which the registry uses), kept for
-    * spec-level recall verification only, like [[bruteForceTopK]]. */
-  def cosineNearDupPairs(embeddings: DataFrame, threshold: Double): DataFrame = {
-    val e = withNorm(embeddings)
-    e.as("a").join(e.as("b"),
-        col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        (fdot(col("a.embedding"), col("b.embedding"))
-          / (col("a.norm") * col("b.norm"))).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
   /** The corpus plus a deterministically PERTURBED copy of every
     * vec_id ≡ 0 (mod 10), copy id = vec_id + 1000000 — the embedding
     * analog of [[Dedup.withNearDuplicates]]: the synthetic embeddings are
@@ -296,22 +282,6 @@ object Similarity {
     if ((((p.toLong * 1299721L + d.toLong * 7919L + 3L) * 2654435761L)
         % 1000000007L) % 2L == 0L) 1f else -1f
 
-  /** Embedding near-duplicate pairs at scale: random-hyperplane LSH.
-    *
-    * Sign sketch: bit p = (⟨x, h_p⟩ > 0) for numBands·bitsPerBand seeded
-    * ±1 hyperplanes (each a codegen'd [[fdot]] against a literal array —
-    * no UDF, no shuffle). Candidates = pairs agreeing EXACTLY on at least
-    * one band → an equi-join on (band index, band bits), the same bucketed
-    * shape as the MinHash text path; survivors verify with one exact
-    * cosine. Collision probability per bit is 1 − θ/π, so a true near-dup
-    * at cos ≥ 0.9 (θ ≤ 26°) survives 8×8 banding with
-    * P[miss] = (1 − (1−θ/π)⁸)⁸ < 3·10⁻⁵, while near-orthogonal pairs
-    * almost never collide — candidates stay near-linear at 100 TB where
-    * the label-blocked cross-join (the previous implementation, kept as
-    * [[cosineNearDupPairs]]) is O(cell²). Recall on the fixed testdata is
-    * verified exhaustively against the brute-force baseline in
-    * SimilaritySpec; the output (candidates ∩ cos ≥ threshold) is
-    * deterministic because the hyperplanes are. */
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540): find embedding-cosine near-duplicate groups and
     * keep ONE representative per group — the training-data curation step
@@ -384,6 +354,22 @@ object Similarity {
         col("embedding"), planes, numBands, bitsPerBand)).as(Seq("b", "v")))
   }
 
+  /** Embedding near-duplicate pairs at scale: random-hyperplane LSH.
+    *
+    * Sign sketch: bit p = (⟨x, h_p⟩ > 0) for numBands·bitsPerBand seeded
+    * ±1 hyperplanes (each a codegen'd [[fdot]] against a literal array —
+    * no UDF, no shuffle). Candidates = pairs agreeing EXACTLY on at least
+    * one band → an equi-join on (band index, band bits), the same bucketed
+    * shape as the MinHash text path; survivors verify with one exact
+    * cosine. Collision probability per bit is 1 − θ/π, so a true near-dup
+    * at cos ≥ 0.9 (θ ≤ 26°) survives 8×8 banding with
+    * P[miss] = (1 − (1−θ/π)⁸)⁸ < 3·10⁻⁵, while near-orthogonal pairs
+    * almost never collide — candidates stay near-linear at 100 TB where
+    * the label-blocked cross-join (the previous implementation) is
+    * O(cell²). Recall on the fixed testdata is verified exhaustively
+    * against an unblocked all-pairs oracle in SimilaritySpec; the output
+    * (candidates ∩ cos ≥ threshold) is deterministic because the
+    * hyperplanes are. */
   def hyperplaneLshNearDupPairs(embeddings: DataFrame, threshold: Double = 0.9,
       numBands: Int = 8, bitsPerBand: Int = 8, dim: Int = 64): DataFrame = {
     val bandRows = signBandRows(withNorm(embeddings), numBands, bitsPerBand, dim)

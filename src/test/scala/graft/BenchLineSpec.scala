@@ -32,6 +32,37 @@ class BenchLineSpec extends SparkSpec {
     assert(!line.contains("\n"))
   }
 
+  test("compact and full lines stay valid JSON under a decimal-comma default locale") {
+    // the f interpolator formats in the JVM default locale: under
+    // Locale.GERMANY it renders 6.25 as "6,25", which is not JSON
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      val rows = Seq(
+        Bench.QueryResult("q_a", Seq(1.25, 1.5, 2.0), ccMb = 12.5, gcSec = 0.25, 1234L, 5678L),
+        Bench.QueryResult("q00_flagship_kmedoids", Seq(3.5, 4.75, 5.0), 100.5, 1.75))
+      val machine = Bench.MachineProbe(2 * Bench.MachineRefSec, 2 * Bench.MachineRefSec)
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val compact = mapper.readTree(Bench.compactLine(rows, 3, 1, 24, "sf",
+        canaries = Seq(0.375), machine = machine))
+      assert(compact.get("value").asDouble === 6.25)
+      assert(compact.get("min_total").asDouble === 4.75)
+      assert(compact.get("machine_factor").asDouble === 2.0)
+      assert(compact.get("canary_min").asDouble === 0.375)
+      assert(compact.get("queries").get("q00_flagship_kmedoids").asDouble === 4.75)
+      val full = mapper.readTree(Bench.fullLine(rows, 3, 1, 24, "sf",
+        canaries = Seq(0.375), canaryEnds = Seq(0.125), machine = machine,
+        chunkProbes = Seq(0.875)))
+      assert(full.get("machine_sec_start").asDouble === 2 * Bench.MachineRefSec)
+      assert(full.get("canary_sec").get(0).asDouble === 0.375)
+      assert(full.get("canary_end_min").asDouble === 0.125)
+      assert(full.get("chunk_probe_sec").get(0).asDouble === 0.875)
+      assert(full.get("codecache_mb").get("q_a").asDouble === 12.5)
+      assert(full.get("gc_sec").get("q_a").asDouble === 0.25)
+      assert(full.get("gc_sec").get("q00_flagship_kmedoids").asDouble === 1.75)
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("machine probe: factor is min(start,end)/ref; compact carries it; absent probe reads null") {
     val m = Bench.MachineProbe(1.7, 0.85 * 1.3)
     assert(math.abs(m.factor - (0.85 * 1.3) / Bench.MachineRefSec) < 1e-9)

@@ -14,18 +14,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The engine's own session ([[Sessions.local]]) at a fixed 4 cores,
+    * with a temp warehouse for the catalog-table specs and ERROR logging
+    * to keep spec output readable. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+    val s = Sessions.local("graft-tests", cores = 4, extra = Seq(
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
     s.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftRuntime.enable(s)
     s
   }
 }
