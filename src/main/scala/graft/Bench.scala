@@ -66,16 +66,19 @@ object Bench {
 
   /** One measured query: name, per-rep seconds (sorted), code-cache
     * occupancy after the last rep (MB), cumulative-GC delta across the
-    * reps (s), and the shuffle read/write bytes of the MIN-WALL rep
+    * reps (s), the shuffle read/write bytes of the MIN-WALL rep
     * (bytes and seconds describe the same execution, the ScalingBench
-    * convention). The diagnostics make a degraded run self-diagnosing:
-    * churn shows as cc_mb pinned at the reserve and gc_sec spiking
-    * together, and byte-identical rows with divergent walls self-label
+    * convention), and the codegen compile seconds summed over the reps'
+    * timed windows (a row that recompiles on every rep shows it here).
+    * The diagnostics make a degraded run self-diagnosing: churn shows
+    * as cc_mb pinned at the reserve and gc_sec spiking together, and
+    * byte-identical rows with divergent walls self-label
     * as environment (shuffle volume is plan-determined and
     * host-load-invariant — the cross-run comparator wall time isn't). */
   final case class QueryResult(name: String, runs: Seq[Double],
                                ccMb: Double, gcSec: Double,
-                               shuffleReadB: Long = 0L, shuffleWriteB: Long = 0L) {
+                               shuffleReadB: Long = 0L, shuffleWriteB: Long = 0L,
+                               codegenSec: Double = 0.0) {
     def median: Double = runs(runs.size / 2)
     def min: Double = runs.head
   }
@@ -275,7 +278,11 @@ object Bench {
     * and none leak into the next window), the probe snapshot, then
     * untimed cleanup — which runs even when the action throws. Returns
     * (action result, seconds, (shuffle read, shuffle write, disk spill,
-    * memory spill) bytes).
+    * memory spill) bytes, codegen compile seconds). The compile seconds
+    * are the `CodeGenerator.compileTime` delta over the timed action: a
+    * JVM-wide counter, so it covers the driver's and the local
+    * executors' compiles, and it reads only the classes this rep missed
+    * in Spark's codegen cache.
     *
     * Cleanup: iterative queries (CC loops, k-medoids) leave
     * lazy-localCheckpoint RDD blocks behind that belong to the now-dead
@@ -287,15 +294,18 @@ object Bench {
     * row). */
   def timedRep[A](spark: SparkSession,
                   probe: org.apache.spark.graftnative.TaskMetricsProbe)
-                 (action: => A): (A, Double, (Long, Long, Long, Long)) = {
+                 (action: => A): (A, Double, (Long, Long, Long, Long), Double) = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     probe.reset()
     try {
+      val compile0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val result = action
       val t = (System.nanoTime() - t0) / 1e9
+      val compileSec = (CodeGenerator.compileTime - compile0) / 1e9
       try org.apache.spark.graftnative.TaskMetricsProbe.drain(spark.sparkContext)
       catch { case _: Throwable => () }
-      (result, t, probe.snapshot())
+      (result, t, probe.snapshot(), compileSec)
     } finally try {
       val leaked = spark.sparkContext.getPersistentRDDs
       if (leaked.nonEmpty) {
@@ -366,6 +376,7 @@ object Bench {
     // query's individual runs so attribution survives the interleave
     val times = collection.mutable.Map.empty[String, Vector[(Double, Long, Long)]]
     val gcSecs = collection.mutable.Map.empty[String, Double]
+    val codegenSecs = collection.mutable.Map.empty[String, Double]
     // the ccMb sample must be taken at the query's LAST pass, not at
     // end-of-chunk: sampled later, every query in the chunk reports the
     // identical final level and the per-query growth curve (the signal
@@ -392,19 +403,20 @@ object Bench {
       }
     for (pass <- 1 to reps; (name, fn) <- known if !finals.contains(name)) {
       val gc0 = gcTotalSec()
-      val (_, t, (sr, sw, _, _)) = timedRep(spark, probe) {
+      val (_, t, (sr, sw, _, _), cg) = timedRep(spark, probe) {
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: $e") }
       }
       times(name) = times.getOrElse(name, Vector.empty) :+ ((t, sr, sw))
       gcSecs(name) = gcSecs.getOrElse(name, 0.0) + (gcTotalSec() - gc0)
+      codegenSecs(name) = codegenSecs.getOrElse(name, 0.0) + cg
       if (pass == reps || (pass == 2 && trimAfterTwo(name))) {
         // bytes come from the min-wall rep so bytes and seconds describe
         // the same execution (shuffle volume is plan-determined; reps
         // agree to retry noise, so any rep is representative)
         val (_, minSr, minSw) = times(name).minBy(_._1)
         val r = QueryResult(name, times(name).map(_._1).sorted,
-          codeCacheUsedMb(), gcSecs(name), minSr, minSw)
+          codeCacheUsedMb(), gcSecs(name), minSr, minSw, codegenSecs(name))
         finals(name) = r
         System.err.println(f"[bench] $name median ${r.median}%.2f s  runs ${times(name).map(x => f"${x._1}%.2f").mkString("/")}  shW ${r.shuffleWriteB / 1e6}%.1f MB  cc ${r.ccMb}%.0f MB  gc ${r.gcSec}%.2f s")
       }
@@ -420,14 +432,15 @@ object Bench {
 
   // ---- child protocol: tab-separated rows, no JSON parser needed ----
   private def encodeRow(r: QueryResult): String =
-    s"${r.name}\t${r.runs.mkString(",")}\t${r.ccMb}\t${r.gcSec}\t${r.shuffleReadB}\t${r.shuffleWriteB}"
+    s"${r.name}\t${r.runs.mkString(",")}\t${r.ccMb}\t${r.gcSec}\t${r.shuffleReadB}\t${r.shuffleWriteB}\t${r.codegenSec}"
 
   private def decodeRow(line: String): QueryResult = {
     val parts = line.split('\t')
     QueryResult(parts(0), parts(1).split(',').map(_.toDouble).toSeq.sorted,
       parts(2).toDouble, parts(3).toDouble,
       if (parts.length > 4) parts(4).toLong else 0L,
-      if (parts.length > 5) parts(5).toLong else 0L)
+      if (parts.length > 5) parts(5).toLong else 0L,
+      if (parts.length > 6) parts(6).toDouble else 0.0)
   }
 
   /** Child-JVM entry: runs the chunk named (exactly) in
@@ -933,7 +946,8 @@ object Bench {
 
   /** The full diagnostics object written to bench_result.json: every
     * per-query median, per-rep runs, shuffle read/write bytes (min-wall
-    * rep), code-cache peaks, GC deltas, the contended-row list, and the
+    * rep), code-cache peaks, GC deltas, codegen compile seconds (summed
+    * over the reps, like the GC deltas), the contended-row list, and the
     * machine probe (start/end/factor). ~40 KB at 230+ queries — more
     * than the driver's log-tail capture holds, so this object must
     * NEVER be the stdout line. Reading convention: wall Σ/medians are
@@ -988,6 +1002,7 @@ object Bench {
       s""""shuffle_read_b":${jmap(_.shuffleReadB.toString)},""" +
       s""""codecache_mb":${jmap(r => Json.num(r.ccMb, 1))},""" +
       s""""gc_sec":${jmap(r => Json.num(r.gcSec, 2))},""" +
+      s""""codegen_sec":${jmap(r => Json.num(r.codegenSec))},""" +
       s""""sf":"$sfDir"}"""
   }
 }

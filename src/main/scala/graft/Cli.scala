@@ -96,11 +96,14 @@ object Cli {
       // SimHash + winnow) through the shared exact-Jaccard gate, instead
       // of LSH alone — higher recall on reordered/locally-edited dups
       val ensemble = o.get("ensemble").contains("true")
-      val corpus = spark.read.parquet(corpusPath)
       // --autotune true: run the (numHashes, rowsPerBand) sweep against
       // the exact-Jaccard truth first and dedup with the chosen point —
       // the automated form of the q162/q205 parameter-picking loop
       val tuned = o.get("autotune").contains("true")
+      require(!(ensemble && tuned),
+        "dedup: --autotune tunes the LSH-only path; --ensemble bands with " +
+          "fixed 16x4 parameters, so the two cannot be combined")
+      val corpus = spark.read.parquet(corpusPath)
       val (nh, rpb) =
         if (tuned) {
           val p = graft.operators.Dedup.chooseLshParameters(corpus, minJaccard = tau,
@@ -700,7 +703,7 @@ object Cli {
           |  analyze  <features> <assignments> <outDir>
           |  distance <features> <assignments> <id,id,..> <outDir>
           |  sample   <features> <k> <seed> <outDir>
-          |  dedup    <corpusParquet> <outDir> [--jaccard T] [--ensemble true]
+          |  dedup    <corpusParquet> <outDir> [--jaccard T] [--ensemble true | --autotune true]
           |  bandindex    <corpusParquet> <indexDir> [--buckets N]
           |  ingest-dedup <batchParquet> <indexDir> <outDir> [--jaccard T] [--buckets N] [--fold true]
           |  embindex        <embParquet> <indexDir> [--buckets N]

@@ -22,7 +22,7 @@ object HammingPlanSweep {
       Tables.load(spark, dir, "documents"))
     for ((m, c) <- plans) {
       val runs = (1 to reps).map { _ =>
-        val (_, sec, mtr) = Bench.timedRep(spark, probe) {
+        val (_, sec, mtr, _) = Bench.timedRep(spark, probe) {
           graft.operators.Dedup.simhashAssignments(docs, plan = Some((m, c)))
             .write.format("noop").mode("overwrite").save()
         }

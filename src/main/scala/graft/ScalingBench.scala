@@ -221,7 +221,7 @@ object ScalingBench {
               prior: Option[(Double, Double)] = None): Point = {
     val fn = Bench.registry.toMap.apply(name)
     def oneRep(): (Double, (Long, Long, Long, Long)) = {
-      val (_, t, m) = Bench.timedRep(spark, probe)(
+      val (_, t, m, _) = Bench.timedRep(spark, probe)(
         fn(spark, dir).write.format("noop").mode("overwrite").save())
       (t, m)
     }
@@ -250,7 +250,7 @@ object ScalingBench {
     }
     // untimed, but through the same rep protocol: its drain fences the
     // count job's task-end events out of the next query's first rep
-    val (rows, _, _) = Bench.timedRep(spark, probe)(fn(spark, dir).count())
+    val (rows, _, _, _) = Bench.timedRep(spark, probe)(fn(spark, dir).count())
     val (sec, (sr, sw, ds, ms)) = runs.minBy(_._1)
     Point(name, scale, sec, rows, sr, sw, ds, ms,
       reps = runs.size, envRerun = rerun, priorSec = prior.map(_._1),

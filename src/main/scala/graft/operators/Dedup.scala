@@ -327,14 +327,19 @@ object Dedup {
         col("bd.mn").as("mn"), col("bd.mx").as("mx"))
 
   /** Candidate pairs: docs sharing ANY full band — an equi-join on the
-    * band key, NOT an all-pairs comparison. */
+    * band key, NOT an all-pairs comparison. One row per pair. */
   def lshCandidates(bands: DataFrame): DataFrame =
+    lshBandJoin(bands).distinct()
+
+  /** The band equi-join alone: a pair sharing k bands appears k times.
+    * [[ensembleDedupImpl]] feeds it raw into the union whose one
+    * distinct() collapses every family's repeats together. */
+  private def lshBandJoin(bands: DataFrame): DataFrame =
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.s") === col("b.s")
           && col("a.mn") === col("b.mn") && col("a.mx") === col("b.mx")
           && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
 
   /** Full pipeline: shingle → minhash → band → bucket-join → exact-Jaccard
     * verify. Output (id_a, id_b, jacc) with jacc ≥ minJaccard.
@@ -501,7 +506,7 @@ object Dedup {
     val win = org.apache.spark.sql.expressions.Window.partitionBy("fp")
     // the df cap is a windowed count over the SAME distribution+ordering
     // the self-join needs, so df filter + join ride one exchange (the
-    // round-8 one-exchange lesson, winnowCandidatesFrom) — now with the
+    // round-8 one-exchange lesson, winnowFpJoin) — now with the
     // sets aboard
     val kept = fpSets
       .withColumn("fdf", count(lit(1)).over(win))
@@ -518,17 +523,19 @@ object Dedup {
   }
 
   /** The winnow family's candidate stage alone (shared-fingerprint
-    * pairs under the df cap) — exposed so [[ensembleDedupApply]] can
-    * union candidate sets BEFORE the one shared verify pass. */
+    * pairs under the df cap, one row per pair) — what
+    * [[dedupFamilyEval]] counts. */
   private def winnowCandidates(corpus: DataFrame, w: Int,
       maxFpDf: Int): DataFrame =
-    winnowCandidatesFrom(spread(corpus).select(col("doc_id"),
+    winnowFpJoin(spread(corpus).select(col("doc_id"),
       explode(array_distinct(TextHash.winnowHashes(col("text"), w))).as("fp")),
-      maxFpDf)
+      maxFpDf).distinct()
 
-  /** The winnow candidate stage over pre-exploded (doc_id, fp) rows:
-    * the document-frequency cap and the fingerprint self-join share ONE
-    * fp-keyed exchange.
+  /** The winnow candidate join over pre-exploded (doc_id, fp) rows: a
+    * pair sharing k fingerprints appears k times ([[winnowCandidates]]
+    * collapses them; [[ensembleDedupImpl]] leaves that to its union's
+    * one distinct()). The document-frequency cap and the fingerprint
+    * self-join share ONE fp-keyed exchange.
     *
     * The textbook chain (df aggregate → df-filter join → fp self-join →
     * distinct) hid a scale cliff the ×64 sweep measured: below the
@@ -555,7 +562,7 @@ object Dedup {
     * run in one fp partition before the filter drops it — same bounded
     * linear straggler as the aggregate forms, filtered before the
     * quadratic expansion either way. */
-  private def winnowCandidatesFrom(fps: DataFrame, maxFpDf: Int): DataFrame = {
+  private def winnowFpJoin(fps: DataFrame, maxFpDf: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("fp")
     val kept = fps
       .withColumn("fdf", count(lit(1)).over(w))
@@ -564,7 +571,6 @@ object Dedup {
     kept.as("a").join(kept.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
   }
 
   /** Candidate-family QA harness (the dedup analog of the ANN eval
@@ -1447,6 +1453,19 @@ object Dedup {
       minJaccard: Double = 0.5): DataFrame =
     ensembleDedupImpl(corpus, minJaccard, starSimhash = false)
 
+  /** Plan of the candidate action (the pair frame [[canonicalAssignments]]
+    * caches and counts): the pinned prep frame feeds three RAW candidate
+    * streams — the LSH band join ([[lshBandJoin]]), the SimHash star
+    * edges (member→rep from the reps aggregate, rep→rep from the
+    * [[hammingBandJoin]] core run directly on the reps, which are
+    * already one row per (source, simhash)) and the winnow fingerprint
+    * join ([[winnowFpJoin]]) — into ONE union whose single distinct()
+    * is the only (id_a, id_b) aggregation before the shared Jaccard
+    * verify. A per-family distinct() before the union, or the
+    * member-level [[bandedHammingPairs]] (hash distinct, expansion
+    * joins, same-hash self-join) on the reps, would each add stages
+    * that change no output row. The exhaustive form keeps the
+    * member-level join over every doc. */
   private def ensembleDedupImpl(corpus: DataFrame, minJaccard: Double,
       starSimhash: Boolean, simhashPlan: Option[(Int, Int)] = None): DataFrame = {
     // ONE corpus scan derives every per-doc structure the ensemble needs
@@ -1486,19 +1505,22 @@ object Dedup {
         val memberEdges = shPinned.join(reps, Seq("source", "simhash"))
           .filter(col("doc_id") =!= col("rep"))
           .select(col("rep").as("id_a"), col("doc_id").as("id_b"))
-        val repEdges = bandedHammingPairs(
-            reps.select(col("rep").as("doc_id"), col("simhash"), col("source")),
-            "simhash", 48, 6, blockCols = Seq("source"), plan = simhashPlan)
+        // reps are one row per (source, simhash): the core's input as is
+        val repEdges = hammingBandJoin(
+            reps.select(col("simhash").as("h"), col("source"), col("rep")),
+            "rep", 48, 6, blockCols = Seq("source"), plan = simhashPlan)
           .select(col("id_a"), col("id_b"))
         memberEdges.union(repEdges)
       } else
         bandedHammingPairs(sh, "simhash", 48, 6, blockCols = Seq("source"),
             plan = simhashPlan)
           .select(col("id_a"), col("id_b"))
+    // the LSH and winnow joins feed the union RAW: its one distinct()
+    // collapses every family's repeats in a single exchange
     val candidates =
-      lshCandidates(minhashBandsFrom(prep, 16, 4))
+      lshBandJoin(minhashBandsFrom(prep, 16, 4))
         .union(simhashCandidates)
-        .union(winnowCandidatesFrom(
+        .union(winnowFpJoin(
           prep.select(col("doc_id"), explode(col("wfps")).as("fp")), DefaultMaxFpDf))
         .distinct()
     val edges = jaccardVerifyFromSets(
@@ -1692,9 +1714,11 @@ object Dedup {
     * candidates are generated. This form never materializes them: one
     * representative doc (group min) stands in for each DISTINCT
     * (block, fingerprint), hamming edges connect representatives only
-    * (the banding join was already distinct-hash internally — this makes
-    * the OUTPUT distinct-level too), components close at representative
-    * level, and every doc joins its representative's canonical — one
+    * (the reps frame is already one row per distinct (source, hash), so
+    * the [[hammingBandJoin]] core runs on it directly — no hash
+    * distinct, no member re-expansion joins, no same-hash self-join),
+    * components close at representative level, and every doc joins its
+    * representative's canonical — one
     * output row per doc, linear at any cluster density. The component
     * minimum over representatives equals the component minimum over
     * docs (each rep is its group's min), so survivors match what
@@ -1727,9 +1751,9 @@ object Dedup {
         reps.select(col("simhash"), col("source")),
         "simhash", bits, maxHamming, Seq("source")))
       else None)
-    val edges = bandedHammingPairs(
-      reps.select(col("rep").as("doc_id"), col("simhash"), col("source")),
-      "simhash", bits, maxHamming, blockCols = Seq("source"), plan = chosen)
+    val edges = hammingBandJoin(
+      reps.select(col("simhash").as("h"), col("source"), col("rep")),
+      "rep", bits, maxHamming, blockCols = Seq("source"), plan = chosen)
       .select(col("id_a"), col("id_b"))
     val canon = canonicalAssignments(edges)
     sh.join(reps, Seq("source", "simhash"))
@@ -2123,16 +2147,6 @@ object Dedup {
     } finally graft.streaming.StreamOps.releaseCheckpoint(distinctHashes)
   }
 
-  /** The pigeonhole hamming join in generic form, shared by
-    * [[simhashPairs]] / [[simhashAssignments]] (text, source-blocked),
-    * the ensemble's rep edges, and the image/audio fingerprint pairs
-    * (56-bit, unblocked): hashes are keyed on combinations of agreeing
-    * bit blocks ([[hammingBlockPlan]]), candidates come from an
-    * equi-join on (combo, key bits, block) and each verifies with one
-    * `bit_count(xor)` — output IDENTICAL to the all-pairs formulation
-    * (which the DuckDB oracles still run at verification scale), only
-    * the candidate generation changes. `sh` needs
-    * (doc_id, hashCol, blockCols…). */
   /** Block b covers bits [offset_b, offset_b + len_b); sizes differ by ≤ 1. */
   private[graft] def blockDefsFor(bits: Int, numBlocks: Int): Seq[(Int, Int)] = {
     val base = bits / numBlocks
@@ -2178,7 +2192,26 @@ object Dedup {
         .otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** `plan` overrides the static (numBlocks, comboSize) rule with a
+  /** The pigeonhole hamming join in generic form, shared by
+    * [[simhashPairs]] (text, source-blocked) and the image/audio
+    * fingerprint pairs (56-bit, unblocked): hashes are keyed on
+    * combinations of agreeing bit blocks ([[hammingBlockPlan]]),
+    * candidates come from an equi-join on (combo, key bits, block) and
+    * each verifies with one `bit_count(xor)` — output IDENTICAL to the
+    * all-pairs formulation (which the DuckDB oracles still run at
+    * verification scale), only the candidate generation changes. `sh`
+    * needs (doc_id, hashCol, blockCols…); output (id_a < id_b, hamming).
+    *
+    * Plan: one distinct() of (hash, blockCols…), the [[hammingBandJoin]]
+    * core over those rows with the hash itself as the id, then two joins
+    * that expand each hash pair back to its member pairs, unioned with a
+    * same-hash member self-join (hamming 0). Callers whose frame is
+    * ALREADY one row per (hash, blockCols…) — the rep level of
+    * [[simhashAssignments]] and the ensemble's star form — call the core
+    * directly: there the distinct, both expansion joins and the
+    * same-hash join are identities.
+    *
+    * `plan` overrides the static (numBlocks, comboSize) rule with a
     * caller-supplied one (normally [[hammingBlockPlanMeasured]]'s pick);
     * any plan with numBlocks − comboSize ≥ maxHamming is EXACT by the
     * same pigeonhole argument, so the output is plan-invariant — only
@@ -2186,7 +2219,6 @@ object Dedup {
   private[graft] def bandedHammingPairs(sh: DataFrame, hashCol: String,
       bits: Int, maxHamming: Int, blockCols: Seq[String],
       plan: Option[(Int, Int)] = None): DataFrame = {
-    val (numBlocks, comboSize) = validatedPlan(plan, bits, maxHamming)
     val members = sh.select((Seq(col("doc_id"), col(hashCol).as("h"))
       ++ blockCols.map(col)): _*)
     // hot-key defense: the combo-key join runs over DISTINCT (hash, block)
@@ -2194,10 +2226,47 @@ object Dedup {
     // contribute ONE row per combo instead of a k² candidate group;
     // identical-hash pairs are expanded afterwards, where the work is
     // the OUTPUT size, not a join blowup
-    val hashes = members.drop("doc_id").distinct()
+    val hashPairs = hammingBandJoin(members.drop("doc_id").distinct(), "h",
+        bits, maxHamming, blockCols, plan)
+      .withColumnRenamed("id_a", "h_a").withColumnRenamed("id_b", "h_b")
+    // expand verified DISTINCT-hash pairs back to member pairs …
+    val ma = members.select((Seq(col("doc_id").as("da"), col("h").as("h_a"))
+      ++ blockCols.map(col)): _*)
+    val mb = members.select((Seq(col("doc_id").as("db"), col("h").as("__h_b"))
+      ++ blockCols.map(c => col(c).as(s"__b_$c"))): _*)
+    val cross = hashPairs.join(ma, Seq("h_a") ++ blockCols)
+      .join(mb, (Seq(col("h_b") === col("__h_b"))
+        ++ blockCols.map(c => col(c) === col(s"__b_$c"))).reduce(_ && _))
+      .select(least(col("da"), col("db")).as("id_a"),
+        greatest(col("da"), col("db")).as("id_b"), col("hamming"))
+    // … and same-hash members pair directly (hamming 0 by definition)
+    val withinCond = (Seq(col("a.h") === col("b.h"))
+      ++ blockCols.map(c => col(s"a.$c") === col(s"b.$c"))
+      :+ (col("a.da") < col("b.da"))).reduce(_ && _)
+    val maW = members.select((Seq(col("doc_id").as("da"), col("h"))
+      ++ blockCols.map(col)): _*)
+    val within = maW.as("a").join(maW.as("b"), withinCond)
+      .select(col("a.da").as("id_a"), col("b.da").as("id_b"),
+        lit(0).as("hamming"))
+    cross.unionAll(within)
+  }
+
+  /** The band-join core of [[bandedHammingPairs]] over DISTINCT rows —
+    * one row per (h, blockCols…), each carrying an id column `id` (the
+    * hash itself when `id` is "h"). Combo band rows, the merge-pinned
+    * self-join on (combo, key bits, blockCols…), the first-agreeing-
+    * combo filter, then `bit_count(xor) ≤ maxHamming`. Each qualifying
+    * hash pair comes out exactly once, as (id_a = least id,
+    * id_b = greatest id, hamming, blockCols…). Null block values never
+    * join (SQL equality), as in the member-level form. */
+  private[graft] def hammingBandJoin(hashes: DataFrame, id: String,
+      bits: Int, maxHamming: Int, blockCols: Seq[String],
+      plan: Option[(Int, Int)] = None): DataFrame = {
+    val (numBlocks, comboSize) = validatedPlan(plan, bits, maxHamming)
     val blockDefs = blockDefsFor(bits, numBlocks)
     val comboDefs = (0 until numBlocks).combinations(comboSize).toSeq
-    val bandRows = comboBandRows(hashes, blockDefs, comboDefs, blockCols)
+    val bandRows = comboBandRows(hashes, blockDefs, comboDefs,
+      if (id == "h") blockCols else blockCols :+ id)
     val joinCond = (Seq(col("a.b") === col("b.b"), col("a.v") === col("b.v"))
       ++ blockCols.map(c => col(s"a.$c") === col(s"b.$c"))
       :+ (col("a.h") < col("b.h"))).reduce(_ && _)
@@ -2230,34 +2299,17 @@ object Dedup {
     // at production sizes it is SMJ regardless; at toy scale the pin
     // costs ~0.5 s on the sf0.001 suite and removes the
     // underestimate-by-fan-out trap entirely.
-    val hashPairs = bandRows.as("a").join(bandRows.hint("merge").as("b"), joinCond)
+    bandRows.as("a").join(bandRows.hint("merge").as("b"), joinCond)
       .select((Seq(col("a.h").as("h_a"), col("b.h").as("h_b"),
+        col(s"a.$id").as("ia"), col(s"b.$id").as("ib"),
         col("a.fm").as("fm"), col("a.fv").as("fv"))
         ++ blockCols.map(c => col(s"a.$c"))): _*)
       .filter(agreeBits.bitwiseAND(col("fm")) === col("fv"))
-      .drop("fm", "fv")
       .withColumn("hamming", bit_count(col("h_a").bitwiseXOR(col("h_b"))))
       .filter(col("hamming") <= maxHamming)
-    // expand verified DISTINCT-hash pairs back to member pairs …
-    val ma = members.select((Seq(col("doc_id").as("da"), col("h").as("h_a"))
-      ++ blockCols.map(col)): _*)
-    val mb = members.select((Seq(col("doc_id").as("db"), col("h").as("__h_b"))
-      ++ blockCols.map(c => col(c).as(s"__b_$c"))): _*)
-    val cross = hashPairs.join(ma, Seq("h_a") ++ blockCols)
-      .join(mb, (Seq(col("h_b") === col("__h_b"))
-        ++ blockCols.map(c => col(c) === col(s"__b_$c"))).reduce(_ && _))
-      .select(least(col("da"), col("db")).as("id_a"),
-        greatest(col("da"), col("db")).as("id_b"), col("hamming"))
-    // … and same-hash members pair directly (hamming 0 by definition)
-    val withinCond = (Seq(col("a.h") === col("b.h"))
-      ++ blockCols.map(c => col(s"a.$c") === col(s"b.$c"))
-      :+ (col("a.da") < col("b.da"))).reduce(_ && _)
-    val maW = members.select((Seq(col("doc_id").as("da"), col("h"))
-      ++ blockCols.map(col)): _*)
-    val within = maW.as("a").join(maW.as("b"), withinCond)
-      .select(col("a.da").as("id_a"), col("b.da").as("id_b"),
-        lit(0).as("hamming"))
-    cross.unionAll(within)
+      .select((Seq(least(col("ia"), col("ib")).as("id_a"),
+        greatest(col("ia"), col("ib")).as("id_b"), col("hamming"))
+        ++ blockCols.map(col)): _*)
   }
 
   /** Incremental flavor of [[bandedHammingPairs]] for DISTINCT-hash

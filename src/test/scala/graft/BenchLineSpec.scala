@@ -63,6 +63,25 @@ class BenchLineSpec extends SparkSpec {
     } finally java.util.Locale.setDefault(saved)
   }
 
+  test("full line carries per-query codegen_sec; the compact line does not") {
+    val rows = Seq(
+      Bench.QueryResult("q_a", Seq(1.0, 1.1, 1.2), 10.0, 0.1, 1234L, 5678L, codegenSec = 0.375),
+      Bench.QueryResult("q_b", Seq(2.0, 2.1, 2.2), 10.0, 0.1))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val full = mapper.readTree(Bench.fullLine(rows, 3, 1, 24, "sf"))
+    assert(full.get("codegen_sec").get("q_a").asDouble === 0.375)
+    assert(full.get("codegen_sec").get("q_b").asDouble === 0.0)
+    assert(!Bench.compactLine(rows, 3, 1, 24, "sf").contains("codegen_sec"))
+    // timedRep reads the compile-time delta of its timed window: a query
+    // whose generated code embeds a fresh literal misses the codegen
+    // cache and must compile
+    val nonce = System.nanoTime()
+    val (_, _, _, cg) = Bench.timedRep(spark, Bench.probeFor(spark)) {
+      spark.range(8).selectExpr(s"id * ${nonce}L + 1 as x").collect()
+    }
+    assert(cg > 0.0, s"a cache-missing rep must report compile time, got $cg")
+  }
+
   test("machine probe: factor is min(start,end)/ref; compact carries it; absent probe reads null") {
     val m = Bench.MachineProbe(1.7, 0.85 * 1.3)
     assert(math.abs(m.factor - (0.85 * 1.3) / Bench.MachineRefSec) < 1e-9)

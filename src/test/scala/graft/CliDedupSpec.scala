@@ -81,6 +81,27 @@ class CliDedupSpec extends SparkSpec {
     assert(kept === Seq(1L, 3L))
   }
 
+  test("dedup rejects --ensemble with --autotune before the LSH sweep runs") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("cliensembletune").toString
+    val base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"
+    Seq((1L, base, "s"), (2L, base + " w13", "s"), (3L, "z1 z2 z3 z4 z5 z6 z7 z8", "s"))
+      .toDF("doc_id", "text", "source")
+      .write.parquet(s"$dir/corpus")
+    // the ensemble bands with fixed parameters, so a swept choice would
+    // be printed and then silently ignored
+    val out = new java.io.ByteArrayOutputStream()
+    val e = intercept[IllegalArgumentException] {
+      Console.withOut(out) {
+        Cli.run(spark, List("dedup", s"$dir/corpus", s"$dir/out",
+          "--ensemble", "true", "--autotune", "true"))
+      }
+    }
+    assert(e.getMessage.contains("--autotune"), e.getMessage)
+    assert(!out.toString("UTF-8").contains("autotune: chose"), "the sweep must not run")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/out/deduped")))
+  }
+
   test("release subcommand: dedup -> decontaminate -> quality -> redact -> pack, manifest accounts every drop") {
     import spark.implicits._
     val dir = Files.createTempDirectory("clirelease").toString

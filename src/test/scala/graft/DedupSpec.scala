@@ -370,6 +370,80 @@ class DedupSpec extends SparkSpec {
     assert(star.size < docs.count(), "fixture must contain real duplicates")
   }
 
+  test("hammingBandJoin at rep level == bandedHammingPairs on a distinct-hash frame, every exact plan") {
+    // one row per (hash, source), as the reps frame is: a hash present in
+    // two sources (0 in a and b), a null-source pair that must never join
+    // (SQL equality on the block column), pairs at hamming 1..6 and
+    // misses at 7 and 48
+    val rows = Seq[(Long, Long, String)](
+      (10L, 0L, "a"), (11L, 3L, "a"), (12L, (1L << 48) - 1, "a"),
+      (13L, 0x3FL, "a"), (14L, 0x7FL, "a"),
+      (20L, 0L, "b"), (21L, 1L, "b"),
+      (30L, 1L, null), (31L, 0L, null))
+      .toDF("doc_id", "h", "source")
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id_a"), col("id_b"), col("hamming")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val static = triples(Dedup.bandedHammingPairs(rows, "h", 48, 6, Seq("source")))
+    assert(static === Set((10L, 11L, 2), (10L, 13L, 6), (11L, 13L, 4),
+      (11L, 14L, 5), (13L, 14L, 1), (20L, 21L, 1)), "member-level reference sanity")
+    Seq(None, Some((7, 1)), Some((8, 2)), Some((10, 4))).foreach { plan =>
+      val member = triples(Dedup.bandedHammingPairs(rows, "h", 48, 6, Seq("source"), plan))
+      val core = triples(Dedup.hammingBandJoin(
+        rows.select(col("h"), col("source"), col("doc_id").as("rep")), "rep",
+        48, 6, Seq("source"), plan))
+      assert(member === static, s"plan $plan: member-level form is plan-invariant")
+      assert(core === member, s"plan $plan: rep-level core diverged from the member-level form")
+    }
+  }
+
+  test("ensemble candidate action: one (id_a, id_b) distinct, no hash distinct under the rep band join") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    // every node of an executed plan, through AQE's final plan and its
+    // query stages (a reused exchange is counted where it was built)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _: ReusedExchangeExec => Nil
+      case o => o.children.flatMap(nodes)
+    })
+    // the candidate action is canonicalAssignments' count of its cached
+    // pair frame: capture the cached (id_a, id_b) plans the actions read
+    val cachedPlans = collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        cachedPlans.synchronized {
+          nodes(qe.executedPlan).collect { case m: InMemoryTableScanExec =>
+            m.relation.cachedPlan }
+            .filter(_.output.map(_.name) == Seq("id_a", "id_b"))
+            .foreach(p => if (!cachedPlans.exists(_ eq p)) cachedPlans += p)
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val docs = Dedup.withNearDuplicates(
+      Tables.load(spark, "/root/testdata/sf0.001", "documents"))
+    spark.listenerManager.register(listener)
+    try {
+      assert(Dedup.ensembleDedupApply(docs).count() < docs.count())
+      org.apache.spark.graftnative.TaskMetricsProbe.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(cachedPlans.size === 1, s"one candidate action expected, saw ${cachedPlans.size}")
+    val plan = nodes(cachedPlans.head)
+    def groupOnly(names: Set[String]) = plan.collect {
+      case a: BaseAggregateExec if a.requiredChildDistributionExpressions.isDefined
+        && a.aggregateExpressions.isEmpty
+        && a.groupingExpressions.map(_.name).toSet == names => a
+    }.size
+    assert(groupOnly(Set("id_a", "id_b")) === 1,
+      "the LSH and winnow joins must feed the union raw: one final distinct")
+    assert(groupOnly(Set("h", "source")) === 0,
+      "the reps are one row per (source, simhash): no hash distinct at rep level")
+  }
+
   test("lshParameterSweep: one chosen point, budget honored, band-count drives recall") {
     val corpus = Dedup.withNearDuplicates(
       Tables.load(spark, "/root/testdata/sf0.001", "documents"))
