@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
-import graft.operators.{Analysis, KMeans}
+import graft.operators.{Analysis, KMeans, PersistedIndex}
 import graft.sources.{AssignmentIO, TweetIngest}
 
 /** Command-line entry points mirroring the reference's five mains, so a
@@ -138,18 +138,9 @@ object Cli {
       val o = parseOpts(opts)
       val tau = o.get("jaccard").map(_.toDouble).getOrElse(0.5)
       val buckets = o.get("buckets").map(_.toInt).getOrElse(8)
+      requireBandIndex(spark, indexDir, "ingest-dedup")
       graft.operators.Dedup.registerBandIndex(spark, "graft_idx", indexDir, buckets)
-      // staleness preflight (one bounded aggregation): a drifted index
-      // still answers, but its hot buckets' probe cost has outgrown what
-      // the build priced — surface the rebuild steer where the operator
-      // who'd pay it is standing
-      if (spark.catalog.tableExists("graft_idx_bandcensus") &&
-          graft.operators.Dedup.bandIndexStale(spark, "graft_idx")) {
-        val s = graft.operators.Dedup.bandDriftStats(spark, "graft_idx")
-        println(f"[graft] WARNING: band index is STALE (tvd=${s.tvd}%.3f, " +
-          f"max growth=${s.maxGrowth}%.1fx, rows ${s.nBuild} -> ${s.nLive}) — " +
-          "probe cost has drifted from the build; rebuild with `bandindex`")
-      }
+      warnIfStale(spark, PersistedIndex.Band)
       val batch = spark.read.parquet(batchPath)
       val pairs = graft.operators.Dedup.incrementalNearDupPairsIndexed(
         spark, batch, "graft_idx", minJaccard = tau)
@@ -214,40 +205,21 @@ object Cli {
       // detect which index form `embindex` built at this location —
       // `--plan measured` may have chosen the IVF cell form, which the
       // sign-band registration cannot consume (round-11 ADVICE: the
-      // user's next step failed on missing embbands files). Both forms
+      // user's next step failed on the missing sign-band files). Both forms
       // produce the same (new_id, old_id, cos) arrival contract.
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-      val isCellForm =
-        fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/ivfcells"))
-      require(isCellForm ||
-        fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/embbands")),
-        s"emb-ingest-dedup: $indexDir holds neither a cell index (ivfcells) " +
-          "nor a sign-band index (embbands) — build one with `embindex` first")
-      val pairs = if (isCellForm) {
-        graft.operators.Similarity.registerCellIndex(spark, "graft_cidx", indexDir, buckets)
-        // same staleness preflight as the text ingest path
-        if (spark.catalog.tableExists("graft_cidx_ivfcensus") &&
-            graft.operators.Similarity.cellIndexStale(spark, "graft_cidx")) {
-          val s = graft.operators.Similarity.cellDriftStats(spark, "graft_cidx")
-          println(f"[graft] WARNING: cell index is STALE (tvd=${s.tvd}%.3f, " +
-            f"max growth=${s.maxGrowth}%.1fx, rows ${s.nBuild} -> ${s.nLive}) — " +
-            "the quantizer no longer matches the corpus; rebuild with `embindex`")
-        }
-        graft.operators.Similarity.incrementalIvfNearDupsIndexed(
-          spark, batch, "graft_cidx", threshold = cos)
-      } else {
-        graft.operators.Similarity.registerEmbIndex(spark, "graft_eidx", indexDir, buckets)
-        if (spark.catalog.tableExists("graft_eidx_embcensus") &&
-            graft.operators.Similarity.embIndexStale(spark, "graft_eidx")) {
-          val s = graft.operators.Similarity.embDriftStats(spark, "graft_eidx")
-          println(f"[graft] WARNING: embedding band index is STALE (tvd=${s.tvd}%.3f, " +
-            f"max growth=${s.maxGrowth}%.1fx, rows ${s.nBuild} -> ${s.nLive}) — " +
-            "probe cost has drifted from the build; rebuild with `embindex`")
-        }
-        graft.operators.Similarity.incrementalEmbNearDupsIndexed(
-          spark, batch, "graft_eidx", threshold = cos)
-      }
+      val kind = indexKindsAt(spark, indexDir, "emb-ingest-dedup")
+        .find(k => k == PersistedIndex.Cell || k == PersistedIndex.EmbBand)
+        .getOrElse(sys.error(s"emb-ingest-dedup: $indexDir holds neither a cell index " +
+          "nor a sign-band index — build one with `embindex` first"))
+      val isCellForm = kind == PersistedIndex.Cell
+      val (name, _) = cliIndex(kind)
+      PersistedIndex.register(spark, kind, name, indexDir, buckets)
+      warnIfStale(spark, kind)
+      val pairs =
+        if (isCellForm) graft.operators.Similarity.incrementalIvfNearDupsIndexed(
+          spark, batch, name, threshold = cos)
+        else graft.operators.Similarity.incrementalEmbNearDupsIndexed(
+          spark, batch, name, threshold = cos)
       val clean = batch.join(pairs.select(col("new_id").as("vec_id")).distinct(),
         Seq("vec_id"), "left_anti")
       pairs.write.mode("overwrite").parquet(s"$outDir/pairs")
@@ -257,10 +229,8 @@ object Cli {
         s"${if (isCellForm) "cell" else "sign-band"} index) -> $outDir")
       if (o.get("fold").contains("true")) {
         val accepted = spark.read.parquet(s"$outDir/clean")
-        if (isCellForm)
-          graft.operators.Similarity.appendToCellIndex(spark, accepted, "graft_cidx")
-        else
-          graft.operators.Similarity.appendToEmbIndex(spark, accepted, "graft_eidx")
+        if (isCellForm) graft.operators.Similarity.appendToCellIndex(spark, accepted, name)
+        else graft.operators.Similarity.appendToEmbIndex(spark, accepted, name)
         println(s"[graft] emb-ingest-dedup: folded ${accepted.count()} accepted vectors into the index")
       }
 
@@ -276,94 +246,68 @@ object Cli {
       // pipeline that decides "rebuild tonight?" programmatically
       // (round-12 verdict #7a)
       val asJson = o.get("json").contains("true")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-      def has(sub: String) =
-        fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/$sub"))
-      // (form label, price tier, rebuild verb, drift numbers if a build
-      // census exists). The price is the sweep-measured MEANING of the
-      // verdict (round-13 verdict #4): what a stale index actually costs
-      // at the measured tvd/growth, quoted from index_drift_scales.json
-      // via the IndexDrift price table.
-      final case class FormStatus(form: String, tier: String, verb: String,
-        stats: Option[(Double, Double, Long, Long, Boolean)])
-      def report(st: FormStatus): Unit = st match {
-        case FormStatus(form, tier, verb, Some((tvd, mg, nb, nl, stale))) =>
-          val price = graft.operators.IndexDrift.price(tier, tvd, mg)
-          if (asJson) println(s"""{"form":"$form","n_build":$nb,"n_live":$nl,""" +
-            s""""tvd":${Json.num(tvd, 4)},"max_growth":${Json.num(mg, 2)},"stale":$stale,""" +
-            s"""${price.jsonFields},"rebuild_with":"$verb"}""")
-          else {
-            println(f"[graft] index-status $form: rows $nb -> $nl, " +
-              f"tvd=$tvd%.3f, max growth=$mg%.1fx -> " +
-              (if (stale) s"STALE (rebuild with `$verb`)" else "ok"))
-            println(s"[graft]   price: ${price.human}")
-          }
-        case FormStatus(form, _, verb, None) =>
+      indexKindsAt(spark, indexDir, "index-status").foreach { kind =>
+        val (name, verb) = cliIndex(kind)
+        PersistedIndex.register(spark, kind, name, indexDir, buckets)
+        val form = if (kind == PersistedIndex.Cell &&
+            spark.catalog.tableExists(s"${name}_${PersistedIndex.CellCoarse.sub}"))
+            s"${kind.form} (two-level)" else kind.form
+        // a pre-census index gets the rebuild steer, not a read failure
+        // or a phantom verdict (round-12 ADVICE). The price is the
+        // sweep-measured MEANING of the verdict (round-13 verdict #4):
+        // what a stale index costs at the measured tvd/growth, quoted
+        // from index_drift_scales.json via the IndexDrift price table.
+        if (!PersistedIndex.hasCensus(spark, kind, name)) {
           if (asJson) println(s"""{"form":"$form","census":false,"rebuild_with":"$verb"}""")
           else println(s"[graft] index-status $form: no build census " +
             s"(pre-census index) — rebuild with `$verb` to enable drift detection")
+        } else {
+          val s = PersistedIndex.driftStats(spark, kind, name)
+          val stale = s.stale()
+          val price = graft.operators.IndexDrift.price(kind.priceTier, s.tvd, s.maxGrowth)
+          if (asJson) println(s"""{"form":"$form","n_build":${s.nBuild},"n_live":${s.nLive},""" +
+            s""""tvd":${Json.num(s.tvd, 4)},"max_growth":${Json.num(s.maxGrowth, 2)},""" +
+            s""""stale":$stale,${price.jsonFields},"rebuild_with":"$verb"}""")
+          else {
+            println(f"[graft] index-status $form: rows ${s.nBuild} -> ${s.nLive}, " +
+              f"tvd=${s.tvd}%.3f, max growth=${s.maxGrowth}%.1fx -> " +
+              (if (stale) s"STALE (rebuild with `$verb`)" else "ok"))
+            println(s"[graft]   price: ${price.human}")
+          }
+        }
       }
-      var found = false
-      if (has("bands")) {
-        found = true
-        graft.operators.Dedup.registerBandIndex(spark, "graft_idx", indexDir, buckets)
-        report(FormStatus("band", "band", "bandindex",
-          if (spark.catalog.tableExists("graft_idx_bandcensus")) {
-            val s = graft.operators.Dedup.bandDriftStats(spark, "graft_idx")
-            Some((s.tvd, s.maxGrowth, s.nBuild, s.nLive,
-              graft.operators.Dedup.bandIndexStale(spark, "graft_idx")))
-          } else None))
-      }
-      if (has("ivfcells")) {
-        found = true
-        graft.operators.Similarity.registerCellIndex(spark, "graft_cidx", indexDir, buckets)
-        val form = if (spark.catalog.tableExists("graft_cidx_ivfcoarse"))
-          "cell (two-level)" else "cell"
-        // same pre-census guard as the band/emb branches (round-12
-        // ADVICE: a cell index built before the census existed must get
-        // the rebuild steer, not a read failure or a phantom tvd=0.5)
-        report(FormStatus(form, "cell", "embindex",
-          if (spark.catalog.tableExists("graft_cidx_ivfcensus")) {
-            val s = graft.operators.Similarity.cellDriftStats(spark, "graft_cidx")
-            Some((s.tvd, s.maxGrowth, s.nBuild, s.nLive,
-              graft.operators.Similarity.cellIndexStale(spark, "graft_cidx")))
-          } else None))
-      }
-      if (has("embbands")) {
-        found = true
-        graft.operators.Similarity.registerEmbIndex(spark, "graft_eidx", indexDir, buckets)
-        report(FormStatus("emb-band", "emb", "embindex",
-          if (spark.catalog.tableExists("graft_eidx_embcensus")) {
-            val s = graft.operators.Similarity.embDriftStats(spark, "graft_eidx")
-            Some((s.tvd, s.maxGrowth, s.nBuild, s.nLive,
-              graft.operators.Similarity.embIndexStale(spark, "graft_eidx")))
-          } else None))
-      }
-      require(found, s"index-status: $indexDir holds no graft index " +
-        "(expected bands/, ivfcells/, or embbands/)")
 
     // periodic maintenance for a long-lived index: fold the one-file-per-
     // append accumulation back to one file per bucket (same location,
-    // same bucket layout, probes unchanged)
+    // same bucket layout, probes unchanged) — every index kind present
     case "compact-index" :: indexDir :: opts =>
       val o = parseOpts(opts)
       val buckets = o.get("buckets").map(_.toInt).getOrElse(8)
-      graft.operators.Dedup.registerBandIndex(spark, "graft_idx", indexDir, buckets)
-      graft.operators.Dedup.compactBandIndex(spark, "graft_idx", indexDir, buckets)
-      println(s"[graft] compact-index: $indexDir rewritten to one file per bucket ($buckets buckets)")
+      val kinds = indexKindsAt(spark, indexDir, "compact-index")
+      kinds.foreach(k => PersistedIndex.compact(spark, k, cliIndex(k)._1, indexDir, buckets))
+      println(s"[graft] compact-index: ${kinds.map(_.form).mkString(" + ")} index at " +
+        s"$indexDir rewritten to one file per bucket ($buckets buckets)")
 
-    // takedown / retention expiry: rewrite the index without the
-    // tombstoned doc_ids (doubles as a compaction — one file per bucket)
+    // takedown / retention expiry: rewrite every index kind at the
+    // location without the tombstoned ids (doubles as a compaction — one
+    // file per bucket); the ids parquet carries each kind's id column
     case "delete-index" :: indexDir :: idsPath :: opts =>
       val o = parseOpts(opts)
       val buckets = o.get("buckets").map(_.toInt).getOrElse(8)
-      graft.operators.Dedup.registerBandIndex(spark, "graft_idx", indexDir, buckets)
-      // materialize first: the tombstone frame must not lazily re-read
-      // the index mid-swap (deleteFromBandIndex's caller contract)
-      val ids = spark.read.parquet(idsPath).select("doc_id").localCheckpoint()
-      graft.operators.Dedup.deleteFromBandIndex(spark, ids, "graft_idx", indexDir, buckets)
-      println(s"[graft] delete-index: ${ids.count()} doc_ids removed from $indexDir")
+      val kinds = indexKindsAt(spark, indexDir, "delete-index")
+      val ids = spark.read.parquet(idsPath)
+      val missing = kinds.map(_.idCol).distinct.filterNot(ids.columns.contains)
+      require(missing.isEmpty, s"delete-index: $idsPath lacks ${missing.mkString(", ")} — " +
+        s"the ${kinds.map(_.form).mkString(" + ")} index at $indexDir needs " +
+        kinds.map(_.idCol).distinct.mkString(" and "))
+      kinds.foreach { k =>
+        // materialize first: the tombstone frame must not lazily re-read
+        // the index mid-rewrite (PersistedIndex.delete's caller contract)
+        val kIds = ids.select(k.idCol).localCheckpoint()
+        PersistedIndex.delete(spark, k, kIds, cliIndex(k)._1, indexDir, buckets)
+        println(s"[graft] delete-index: ${kIds.count()} ${k.idCol}s removed from the " +
+          s"${k.form} index at $indexDir")
+      }
 
     // end-to-end curation pass over a (doc_id, text, source) corpus:
     // quality verdicts (+ per-rule drop rates), PII-redaction counts, and
@@ -751,6 +695,7 @@ object Cli {
     o.get("hamming-plan").map {
       case "measured" =>
         val known = o.get("index").map { dir =>
+          requireBandIndex(spark, dir, "dedup --index")
           graft.operators.Dedup.registerBandIndex(spark, "graft_idx", dir,
             o.get("buckets").map(_.toInt).getOrElse(8))
           val n = graft.operators.Dedup.bandIndexDocCount(spark, "graft_idx")
@@ -766,6 +711,47 @@ object Cli {
         case _ => sys.error(s"--hamming-plan expects 'measured' or M:C, got $s")
       }
     }
+
+  /** The fixed catalog name and the build verb of each persisted-index
+    * kind, as the index verbs register and steer to it. */
+  private val cliIndex: Map[PersistedIndex.Kind, (String, String)] = Map(
+    PersistedIndex.Band -> ("graft_idx", "bandindex"),
+    PersistedIndex.Cell -> ("graft_cidx", "embindex"),
+    PersistedIndex.EmbBand -> ("graft_eidx", "embindex"))
+
+  /** Every index kind committed at `indexDir`, or a loud failure before
+    * anything is registered. */
+  private def indexKindsAt(spark: SparkSession, indexDir: String,
+      verb: String): Seq[PersistedIndex.Kind] = {
+    val kinds = PersistedIndex.kindsAt(spark, indexDir)
+    require(kinds.nonEmpty, s"$verb: $indexDir holds no graft index (expected a " +
+      s"committed ${PersistedIndex.Kinds.map(_.form).mkString(", ")} index — build one " +
+      "with `bandindex` or `embindex`)")
+    kinds
+  }
+
+  /** A verb that reads a band index fails unless one is committed at
+    * `indexDir`: registering a missing one binds empty tables, so every
+    * doc would read as new (and a fold would lay a census-less index
+    * down at the wrong location) or the doc census would read 0. */
+  private def requireBandIndex(spark: SparkSession, indexDir: String, verb: String): Unit =
+    require(indexKindsAt(spark, indexDir, verb).contains(PersistedIndex.Band),
+      s"$verb: $indexDir holds no band index — build one with `bandindex` first")
+
+  /** Staleness preflight of an arrival verb (one bounded aggregation): a
+    * drifted index still answers, but its hot partitions' probe cost has
+    * outgrown what the build priced — surface the rebuild steer where
+    * the operator who would pay it is standing. */
+  private def warnIfStale(spark: SparkSession, kind: PersistedIndex.Kind): Unit = {
+    val (name, verb) = cliIndex(kind)
+    if (PersistedIndex.hasCensus(spark, kind, name)) {
+      val s = PersistedIndex.driftStats(spark, kind, name)
+      if (s.stale())
+        println(f"[graft] WARNING: ${kind.form} index is STALE (tvd=${s.tvd}%.3f, " +
+          f"max growth=${s.maxGrowth}%.1fx, rows ${s.nBuild} -> ${s.nLive}) — " +
+          s"probe cost has drifted from the build; rebuild with `$verb`")
+    }
+  }
 
   private def parseOpts(opts: List[String]): Map[String, String] = {
     val (eq, pos) = opts.partition(o => o.startsWith("--") && o.contains('='))

@@ -19,7 +19,7 @@ object Bucketing {
     * express it — V1 in-memory catalog suffices, no Hive needed).
     * With `path` set the table is EXTERNAL: the bucket files outlive the
     * session and can be re-attached in a fresh one via DDL over the same
-    * location (see `Dedup.registerBandIndex`). */
+    * location (see [[PersistedIndex.register]]). */
   def writeBucketed(df: DataFrame, table: String, key: String, n: Int,
       sortKey: Option[String] = None, path: Option[String] = None): Unit = {
     val w0 = df.write.mode(SaveMode.Overwrite).bucketBy(n, key)
@@ -87,6 +87,11 @@ object Bucketing {
   def currentDir(spark: SparkSession, location: String, sub: String): String =
     versions(fsFor(spark, location), location, sub).lastOption
       .map(_._2.toString).getOrElse(s"$location/$sub")
+
+  /** Whether `location` holds any committed version of `sub` (v0 or a
+    * later `sub__vN`; in-flight `.tmp` writes do not count). */
+  def hasCommitted(spark: SparkSession, location: String, sub: String): Boolean =
+    versions(fsFor(spark, location), location, sub).nonEmpty
 
   /** Drop a FIXED-NAME catalog entry whose bound location no longer
     * matches `expected`, so the register functions' CREATE TABLE IF NOT

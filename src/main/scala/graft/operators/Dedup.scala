@@ -1003,100 +1003,38 @@ object Dedup {
     * Build cost is one corpus pass at write time; after that a daily
     * batch pays O(|batch| + collisions) regardless of corpus size. With
     * `location` set the bucket files are external and survive the
-    * session — re-attach them elsewhere with [[registerBandIndex]]. */
+    * session — re-attach them elsewhere with [[registerBandIndex]]. The
+    * build also stores the band-key census the drift report compares
+    * against ([[bandDriftReport]]); see [[PersistedIndex]]. */
   def writeBandIndex(corpus: DataFrame, name: String, buckets: Int = 8,
       numHashes: Int = 16, rowsPerBand: Int = 4,
       location: Option[String] = None): Unit = {
     requireBandCount(numHashes, rowsPerBand)
     requireLongDocId(corpus, "writeBandIndex")
-    val bands = withBandKey(minhashBands(corpus, numHashes, rowsPerBand))
-    val sets = shingled(corpus).select(col("doc_id"), array_distinct(col("shs")).as("set"))
-    location match {
-      case Some(l) =>
-        Bucketing.writeBucketedExternal(bands, s"${name}_bands", "bkey", buckets,
-          sortKey = Some("bkey"), location = l, sub = "bands")
-        Bucketing.writeBucketedExternal(sets, s"${name}_sets", "doc_id", buckets,
-          sortKey = Some("doc_id"), location = l, sub = "sets")
-      case None =>
-        Bucketing.writeBucketed(bands, s"${name}_bands", "bkey", buckets,
-          sortKey = Some("bkey"))
-        Bucketing.writeBucketed(sets, s"${name}_sets", "doc_id", buckets,
-          sortKey = Some("doc_id"))
-    }
-    // build-time band-key census (BandCensusBuckets rows, bounded): the
-    // reference distribution the append lifecycle is checked against —
-    // see [[bandDriftReport]]. Read back from the just-written bucket
-    // files so no second shingle/hash pass is paid (the cell index's
-    // arrangement, Similarity.writeCellIndex).
-    val census = Bucketing.readBucketed(corpus.sparkSession, s"${name}_bands")
-      .groupBy(bandCensusBucket(col("bkey")).as("cb"))
-      .agg(count(lit(1)).as("n_build"))
-    val w = census.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-    location.fold(w)(l => w.option("path", s"$l/bandcensus"))
-      .saveAsTable(s"${name}_bandcensus")
+    PersistedIndex.write(PersistedIndex.Band, name, buckets, location,
+      bandIndexRows(corpus, numHashes, rowsPerBand))
   }
 
-  /** Fixed partition count of the band-key census (shared across the
-    * key-space drift tiers — see [[IndexDrift.CensusBuckets]]). Bounded
-    * (the census is CENSUS-sized, never corpus-sized, at any index
-    * size) yet fine enough that a drifted stream concentrating its band
-    * keys into a few key-space regions registers: a shifted corpus
-    * lands ~all its rows in its own ≤ numBands·|distinct hashes|
-    * buckets, visible at any partition count well above numBands. */
-  val BandCensusBuckets: Int = IndexDrift.CensusBuckets
+  /** The two subtables' rows for `docs`: (bands, sets). */
+  private def bandIndexRows(docs: DataFrame, numHashes: Int,
+      rowsPerBand: Int): Seq[DataFrame] =
+    Seq(withBandKey(minhashBands(docs, numHashes, rowsPerBand)),
+      shingled(docs).select(col("doc_id"), array_distinct(col("shs")).as("set")))
 
-  /** The census partition of one band key: a FIXED hash of bkey, so the
-    * census distribution is a property of the DATA alone. Under an
-    * unchanged text distribution each arriving row lands in partition j
-    * with the same fixed probability (identical text → identical bkey →
-    * identical partition), so census SHARES are invariant under plain
-    * growth — the property that makes share-relative drift thresholds
-    * possible (the cell index's argument, applied to the key space). */
-  private def bandCensusBucket(bkey: Column): Column =
-    IndexDrift.censusBucket(bkey)
+  /** Fixed partition count of the band-key census (shared across the
+    * key-space drift tiers — see [[IndexDrift.CensusBuckets]]): bounded,
+    * yet fine enough that a drifted stream concentrating its band keys
+    * into a few key-space regions registers. */
+  val BandCensusBuckets: Int = IndexDrift.CensusBuckets
 
   /** Re-attach an external band index written by [[writeBandIndex]] in a
     * previous session: DDL over the existing bucket files (the in-memory
     * catalog loses table metadata across JVMs; the files keep the bucket
     * layout in their names). */
   def registerBandIndex(spark: org.apache.spark.sql.SparkSession,
-      name: String, location: String, buckets: Int = 8): Unit = {
-    // bind the highest COMMITTED version dir (stale-but-consistent across
-    // concurrent rewrites — see Bucketing's versioned-location contract);
-    // a fixed name already bound elsewhere (or to a superseded version)
-    // is dropped first, never silently kept (round-12 ADVICE)
-    val bandsDir = Bucketing.currentDir(spark, location, "bands")
-    val setsDir = Bucketing.currentDir(spark, location, "sets")
-    Bucketing.dropIfRelocated(spark, s"${name}_bands", bandsDir)
-    Bucketing.dropIfRelocated(spark, s"${name}_sets", setsDir)
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS ${name}_bands
-      |(doc_id BIGINT, band INT, s BIGINT, mn BIGINT, mx BIGINT, bkey BIGINT)
-      |USING parquet CLUSTERED BY (bkey) SORTED BY (bkey) INTO $buckets BUCKETS
-      |LOCATION '$bandsDir'""".stripMargin)
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS ${name}_sets
-      |(doc_id BIGINT, set ARRAY<BIGINT>)
-      |USING parquet CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO $buckets BUCKETS
-      |LOCATION '$setsDir'""".stripMargin)
-    // the drift census re-attaches only if the build stored one (indexes
-    // written before the census existed stay probe-able; bandDriftStats
-    // on them fails loudly with the rebuild steer)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(location), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$location/bandcensus"))) {
-      Bucketing.dropIfRelocated(spark, s"${name}_bandcensus", s"$location/bandcensus")
-      spark.sql(s"""CREATE TABLE IF NOT EXISTS ${name}_bandcensus
-        |(cb BIGINT, n_build BIGINT) USING parquet
-        |LOCATION '$location/bandcensus'""".stripMargin)
-    } else
-      // census-less location: a census bound by a PREVIOUS registration
-      // of this name must not survive into the new binding (r13 ADVICE)
-      Bucketing.dropIfOrphaned(spark, s"${name}_bandcensus")
-  }
+      name: String, location: String, buckets: Int = 8): Unit =
+    PersistedIndex.register(spark, PersistedIndex.Band, name, location, buckets)
 
-  /** [[incrementalNearDupPairs]] against a persisted [[writeBandIndex]]:
-    * same output, but the corpus is never re-shingled, re-hashed, or
-    * re-shuffled — the batch bands shuffle to the index's bucket layout
-    * and merge in place. Output: (new_id, old_id, jacc ≥ minJaccard). */
   /** The ingest-time candidate join in isolation (plan-gated by
     * IncrementalIndexSpec: exactly one Exchange — the batch side — and a
     * sort-merge against the index's bucket files in place). */
@@ -1136,12 +1074,8 @@ object Dedup {
       rowsPerBand: Int = 4): Unit = {
     requireBandCount(numHashes, rowsPerBand)
     requireLongDocId(batch, "appendToBandIndex")
-    // insertInto matches columns by POSITION — select in table order
-    withBandKey(minhashBands(batch, numHashes, rowsPerBand))
-      .select("doc_id", "band", "s", "mn", "mx", "bkey")
-      .write.insertInto(s"${name}_bands")
-    shingled(batch).select(col("doc_id"), array_distinct(col("shs")).as("set"))
-      .write.insertInto(s"${name}_sets")
+    PersistedIndex.append(PersistedIndex.Band, name,
+      bandIndexRows(batch, numHashes, rowsPerBand))
   }
 
   /** Compact the persisted index back to ONE file per bucket. Every
@@ -1160,7 +1094,7 @@ object Dedup {
     * cheap enough to rebuild with [[writeBandIndex]]. */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
       name: String, location: String, buckets: Int = 8): Unit =
-    rewriteBandIndex(spark, name, location, buckets, identity)
+    PersistedIndex.compact(spark, PersistedIndex.Band, name, location, buckets)
 
   /** Delete documents FROM the persisted index — the tombstone half of
     * continuous ingest (takedowns, retention expiry, corpus pruning all
@@ -1178,23 +1112,13 @@ object Dedup {
       tombstones: DataFrame, name: String, location: String,
       buckets: Int = 8): Unit = {
     requireLongDocId(tombstones, "deleteFromBandIndex")
-    val ids = tombstones.select("doc_id")
-    rewriteBandIndex(spark, name, location, buckets,
-      _.join(ids, Seq("doc_id"), "left_anti"))
+    PersistedIndex.delete(spark, PersistedIndex.Band, tombstones, name, location, buckets)
   }
 
-  private def rewriteBandIndex(spark: org.apache.spark.sql.SparkSession,
-      name: String, location: String, buckets: Int,
-      transform: DataFrame => DataFrame): Unit = {
-    // file-read → bucket-shuffle → directory-swap cycle shared with the
-    // embedding index (see Bucketing.rewriteExternal scaladoc)
-    Bucketing.rewriteExternal(spark, s"${name}_bands", "bkey", location,
-      "bands", buckets, transform)
-    Bucketing.rewriteExternal(spark, s"${name}_sets", "doc_id", location,
-      "sets", buckets, transform)
-    registerBandIndex(spark, name, location, buckets)
-  }
-
+  /** [[incrementalNearDupPairs]] against a persisted [[writeBandIndex]]:
+    * same output, but the corpus is never re-shingled, re-hashed, or
+    * re-shuffled — the batch bands shuffle to the index's bucket layout
+    * and merge in place. Output: (new_id, old_id, jacc ≥ minJaccard). */
   def incrementalNearDupPairsIndexed(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, name: String, numHashes: Int = 16,
       rowsPerBand: Int = 4, minJaccard: Double = 0.5): DataFrame = {
@@ -1307,28 +1231,17 @@ object Dedup {
     * Output ([[BandCensusBuckets]] rows — bounded by construction):
     * (cb, n_build, n_live, build_share, live_share, growth). */
   def bandDriftReport(spark: org.apache.spark.sql.SparkSession,
-      name: String): DataFrame = {
-    require(spark.catalog.tableExists(s"${name}_bandcensus"),
-      s"$name has no build-time band census — the index predates drift " +
-        "detection; rebuild with writeBandIndex to enable it")
-    val live = Bucketing.readBucketed(spark, s"${name}_bands")
-      .groupBy(bandCensusBucket(col("bkey")).as("cb"))
-      .agg(count(lit(1)).as("n_live"))
-    IndexDrift.report(live, spark.table(s"${name}_bandcensus"), "cb")
-  }
+      name: String): DataFrame =
+    PersistedIndex.driftReport(spark, PersistedIndex.Band, name)
 
-  /** Scalar drift statistics from [[bandDriftReport]] — same contract
-    * as `Similarity.CellDriftStats`: tvd = ½·Σ|live − build| share
-    * (the fraction of live band rows sitting in key regions the build
-    * didn't price), maxGrowth = the hottest partition's share
-    * inflation. Driver-side over [[BandCensusBuckets]] rows. */
-  final case class BandDriftStats(tvd: Double, maxGrowth: Double,
-      nBuild: Long, nLive: Long)
+  /** Scalar drift statistics from [[bandDriftReport]] (see
+    * [[IndexDrift.stats]]): tvd = ½·Σ|live − build| share (the fraction
+    * of live band rows sitting in key regions the build didn't price),
+    * maxGrowth = the hottest partition's share inflation. Driver-side
+    * over [[BandCensusBuckets]] rows. */
   def bandDriftStats(spark: org.apache.spark.sql.SparkSession,
-      name: String): BandDriftStats = {
-    val (tvd, mg, nb, nl) = IndexDrift.stats(bandDriftReport(spark, name))
-    BandDriftStats(tvd, mg, nb, nl)
-  }
+      name: String): IndexDrift.Stats =
+    PersistedIndex.driftStats(spark, PersistedIndex.Band, name)
 
   /** REBUILD/COMPACT recommendation for a persisted band index — the
     * text twin of `Similarity.cellIndexStale`, same thresholds and the
@@ -1341,10 +1254,8 @@ object Dedup {
     * an unchanged distribution trips neither — rebuilds are for drift,
     * not size. */
   def bandIndexStale(spark: org.apache.spark.sql.SparkSession, name: String,
-      tvdThreshold: Double = 0.10, maxGrowthThreshold: Double = 4.0): Boolean = {
-    val s = bandDriftStats(spark, name)
-    s.tvd >= tvdThreshold || s.maxGrowth >= maxGrowthThreshold
-  }
+      tvdThreshold: Double = 0.10, maxGrowthThreshold: Double = 4.0): Boolean =
+    PersistedIndex.stale(spark, PersistedIndex.Band, name, tvdThreshold, maxGrowthThreshold)
 
   // ---- end-to-end dedup application ---------------------------------------
 

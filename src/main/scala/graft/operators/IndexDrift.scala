@@ -17,7 +17,19 @@ import org.apache.spark.sql.functions._
   * an UNCHANGED distribution multiplies every partition count by the
   * same factor, so shares — and therefore TVD and growth — are
   * untouched; rebuild signals fire on DRIFT, never on size. */
-private[graft] object IndexDrift {
+object IndexDrift {
+
+  /** Scalar drift statistics of one persisted index — see [[stats]]. */
+  final case class Stats(tvd: Double, maxGrowth: Double, nBuild: Long, nLive: Long) {
+
+    /** The rebuild verdict: `tvd ≥ tvdThreshold` (that share of live
+      * probe mass routes through partitions the build did not price) or
+      * `maxGrowth ≥ maxGrowthThreshold` (one partition's share inflated
+      * that far). Plain growth with an unchanged distribution trips
+      * neither. */
+    def stale(tvdThreshold: Double = 0.10, maxGrowthThreshold: Double = 4.0): Boolean =
+      tvd >= tvdThreshold || maxGrowth >= maxGrowthThreshold
+  }
 
   /** Fixed partition count for the key-space censuses (band / emb-band
     * tiers; the cell tier's partitions are the learned cells

@@ -801,77 +801,33 @@ object Similarity {
     *     re-reading (or re-shuffling) the embedding table.
     *
     * One corpus pass at build time; every later batch pays
-    * O(|batch| + collisions) however large the corpus grows. */
+    * O(|batch| + collisions) however large the corpus grows. The build
+    * also stores a band-key census: the random planes are
+    * data-independent, but bucket DENSIFICATION is not — a drifted
+    * stream concentrates its sign patterns into its own key regions
+    * ([[embDriftReport]]; see [[PersistedIndex]]). */
   def writeEmbIndex(corpus: DataFrame, name: String, buckets: Int = 8,
       numBands: Int = 8, bitsPerBand: Int = 8, dim: Int = 64,
       location: Option[String] = None): Unit = {
     requireEmbIndexArgs(numBands, bitsPerBand)
-    val e = withNorm(corpus)
-    val bands = withEmbKey(signBandRows(e, numBands, bitsPerBand, dim))
-      .select(col("vec_id"), col("b"), col("v"), col("bkey"))
-    val vecs = e.select(col("vec_id"), col("embedding"), col("norm"))
-    location match {
-      case Some(l) =>
-        Bucketing.writeBucketedExternal(bands, s"${name}_embbands", "bkey", buckets,
-          sortKey = Some("bkey"), location = l, sub = "embbands")
-        Bucketing.writeBucketedExternal(vecs, s"${name}_embvecs", "vec_id", buckets,
-          sortKey = Some("vec_id"), location = l, sub = "embvecs")
-      case None =>
-        Bucketing.writeBucketed(bands, s"${name}_embbands", "bkey", buckets,
-          sortKey = Some("bkey"))
-        Bucketing.writeBucketed(vecs, s"${name}_embvecs", "vec_id", buckets,
-          sortKey = Some("vec_id"))
-    }
-    // build-time band-key census — the third leg of drift parity
-    // (text band index and cell index got theirs first): the random
-    // planes are data-independent, but bucket DENSIFICATION is not —
-    // a drifted embedding stream concentrates its sign patterns into
-    // its own key regions and inflates exactly the buckets whose probe
-    // cost is O(|batch| · bucket). Read back from the just-written
-    // bucket files; bounded at IndexDrift.CensusBuckets rows.
-    val census = Bucketing.readBucketed(corpus.sparkSession, s"${name}_embbands")
-      .groupBy(IndexDrift.censusBucket(col("bkey")).as("cb"))
-      .agg(count(lit(1)).as("n_build"))
-    val w = census.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-    location.fold(w)(l => w.option("path", s"$l/embcensus"))
-      .saveAsTable(s"${name}_embcensus")
+    PersistedIndex.write(PersistedIndex.EmbBand, name, buckets, location,
+      embIndexRows(corpus, numBands, bitsPerBand, dim))
+  }
+
+  /** The two subtables' rows for `vecs`: (embbands, embvecs). */
+  private def embIndexRows(vecs: DataFrame, numBands: Int, bitsPerBand: Int,
+      dim: Int): Seq[DataFrame] = {
+    val e = withNorm(vecs)
+    Seq(withEmbKey(signBandRows(e, numBands, bitsPerBand, dim))
+        .select(col("vec_id"), col("b"), col("v"), col("bkey")),
+      e.select(col("vec_id"), col("embedding"), col("norm")))
   }
 
   /** Re-attach an external embedding index after catalog loss (DDL over
     * the existing bucket files, like [[Dedup.registerBandIndex]]). */
   def registerEmbIndex(spark: org.apache.spark.sql.SparkSession,
-      name: String, location: String, buckets: Int = 8): Unit = {
-    // bind the highest COMMITTED version dir (stale-but-consistent across
-    // concurrent rewrites — see Bucketing's versioned-location contract);
-    // a fixed name already bound elsewhere (or to a superseded version)
-    // is dropped first, never silently kept (round-12 ADVICE)
-    val bandsDir = Bucketing.currentDir(spark, location, "embbands")
-    val vecsDir = Bucketing.currentDir(spark, location, "embvecs")
-    Bucketing.dropIfRelocated(spark, s"${name}_embbands", bandsDir)
-    Bucketing.dropIfRelocated(spark, s"${name}_embvecs", vecsDir)
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS ${name}_embbands
-      |(vec_id BIGINT, b INT, v BIGINT, bkey BIGINT)
-      |USING parquet CLUSTERED BY (bkey) SORTED BY (bkey) INTO $buckets BUCKETS
-      |LOCATION '$bandsDir'""".stripMargin)
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS ${name}_embvecs
-      |(vec_id BIGINT, embedding ARRAY<FLOAT>, norm DOUBLE)
-      |USING parquet CLUSTERED BY (vec_id) SORTED BY (vec_id) INTO $buckets BUCKETS
-      |LOCATION '$vecsDir'""".stripMargin)
-    // the drift census re-attaches only if the build stored one —
-    // pre-census indexes stay probe-able, embDriftStats on them fails
-    // loudly with the rebuild steer (same contract as the text twin)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(location), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$location/embcensus"))) {
-      Bucketing.dropIfRelocated(spark, s"${name}_embcensus", s"$location/embcensus")
-      spark.sql(s"""CREATE TABLE IF NOT EXISTS ${name}_embcensus
-        |(cb BIGINT, n_build BIGINT) USING parquet
-        |LOCATION '$location/embcensus'""".stripMargin)
-    } else
-      // census-less location: a census bound by a PREVIOUS registration
-      // of this name must not survive into the new binding (r13 ADVICE)
-      Bucketing.dropIfOrphaned(spark, s"${name}_embcensus")
-  }
+      name: String, location: String, buckets: Int = 8): Unit =
+    PersistedIndex.register(spark, PersistedIndex.EmbBand, name, location, buckets)
 
   /** Drift report for a persisted [[writeEmbIndex]] sign-band index —
     * the embedding twin of `Dedup.bandDriftReport` (one shared core,
@@ -883,25 +839,14 @@ object Similarity {
     * cluster) concentrates its sign patterns into its own bkey regions,
     * densifying exactly the buckets the probe join pays per arrival. */
   def embDriftReport(spark: org.apache.spark.sql.SparkSession,
-      name: String): DataFrame = {
-    require(spark.catalog.tableExists(s"${name}_embcensus"),
-      s"$name has no build-time band census — the index predates drift " +
-        "detection; rebuild with writeEmbIndex to enable it")
-    val live = Bucketing.readBucketed(spark, s"${name}_embbands")
-      .groupBy(IndexDrift.censusBucket(col("bkey")).as("cb"))
-      .agg(count(lit(1)).as("n_live"))
-    IndexDrift.report(live, spark.table(s"${name}_embcensus"), "cb")
-  }
+      name: String): DataFrame =
+    PersistedIndex.driftReport(spark, PersistedIndex.EmbBand, name)
 
   /** Scalar drift statistics from [[embDriftReport]] — same contract
-    * as [[CellDriftStats]] / `Dedup.BandDriftStats`. */
-  final case class EmbDriftStats(tvd: Double, maxGrowth: Double,
-      nBuild: Long, nLive: Long)
+    * as [[cellDriftStats]] / `Dedup.bandDriftStats`. */
   def embDriftStats(spark: org.apache.spark.sql.SparkSession,
-      name: String): EmbDriftStats = {
-    val (tvd, mg, nb, nl) = IndexDrift.stats(embDriftReport(spark, name))
-    EmbDriftStats(tvd, mg, nb, nl)
-  }
+      name: String): IndexDrift.Stats =
+    PersistedIndex.driftStats(spark, PersistedIndex.EmbBand, name)
 
   /** REBUILD/COMPACT recommendation for a persisted embedding sign-band
     * index — same share-relative thresholds and rationale as
@@ -909,10 +854,8 @@ object Similarity {
     * unchanged distribution trips neither; drift or a hot template
     * stream trips one. */
   def embIndexStale(spark: org.apache.spark.sql.SparkSession, name: String,
-      tvdThreshold: Double = 0.10, maxGrowthThreshold: Double = 4.0): Boolean = {
-    val s = embDriftStats(spark, name)
-    s.tvd >= tvdThreshold || s.maxGrowth >= maxGrowthThreshold
-  }
+      tvdThreshold: Double = 0.10, maxGrowthThreshold: Double = 4.0): Boolean =
+    PersistedIndex.stale(spark, PersistedIndex.EmbBand, name, tvdThreshold, maxGrowthThreshold)
 
   /** Fold an accepted batch INTO the persisted embedding index
     * (`insertInto` resolves the catalog bucket spec, so appended files
@@ -921,11 +864,8 @@ object Similarity {
       batch: DataFrame, name: String, numBands: Int = 8,
       bitsPerBand: Int = 8, dim: Int = 64): Unit = {
     requireEmbIndexArgs(numBands, bitsPerBand)
-    val e = withNorm(batch)
-    withEmbKey(signBandRows(e, numBands, bitsPerBand, dim))
-      .select("vec_id", "b", "v", "bkey")
-      .write.insertInto(s"${name}_embbands")
-    e.select("vec_id", "embedding", "norm").write.insertInto(s"${name}_embvecs")
+    PersistedIndex.append(PersistedIndex.EmbBand, name,
+      embIndexRows(batch, numBands, bitsPerBand, dim))
   }
 
   /** The batch-side candidate join in isolation (plan-gated like the
@@ -1003,52 +943,22 @@ object Similarity {
         (twoCellRowsTwoLevel(e, centroids, keptCoarse, keptMembers),
           Some((keptCoarse, keptMembers)))
       }
-    location match {
-      case Some(l) =>
-        Bucketing.writeBucketedExternal(memberRows, s"${name}_ivfcells",
-          "cell", buckets, sortKey = Some("cell"), location = l, sub = "ivfcells")
-      case None =>
-        Bucketing.writeBucketed(memberRows, s"${name}_ivfcells", "cell",
-          buckets, sortKey = Some("cell"))
-    }
-    def saveSmall(df: DataFrame, table: String, sub: String): Unit = {
-      val w = df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      location.fold(w)(l => w.option("path", s"$l/$sub")).saveAsTable(table)
-    }
-    saveSmall(
-      spark.createDataFrame(centroids.zipWithIndex.map { case (c, i) => (i, c) })
-        .toDF("cell", "c"),
-      s"${name}_ivfcentroids", "ivfcentroids")
-    coarseStore.foreach { case (keptCoarse, keptMembers) =>
-      saveSmall(
-        spark.createDataFrame(keptCoarse.indices.map(g =>
-          (g, keptCoarse(g), keptMembers(g)))).toDF("g", "c", "members"),
-        s"${name}_ivfcoarse", "ivfcoarse")
-    }
-    // a FLAT rebuild over a formerly two-level index must retire the old
-    // coarse store: appendToCellIndex / registerCellIndex /
-    // streamingIvfSemDedupFold all AUTO-DETECT the coarse table to pick
-    // the routing kernel, so a leftover one would route arrivals
-    // two-level against flat-routed membership — the mismatched-kernel
-    // case that silently loses boundary pairs (round-11 ADVICE). The
-    // files go too, or a later registerCellIndex in a fresh JVM would
-    // resurrect the table from disk.
-    if (coarseStore.isEmpty) {
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_ivfcoarse")
-      location.foreach { l =>
-        val p = new org.apache.hadoop.fs.Path(s"$l/ivfcoarse")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-    }
-    // build-time census (kCells rows): the reference distribution the
+    // the census (read back from the written cells, so no second
+    // quantization pass) is the reference distribution the
     // fixed-quantizer arrival path is checked against — see
-    // [[cellDriftReport]]. Read back from the just-written bucket files
-    // so no second quantization pass is paid.
-    saveSmall(
-      Bucketing.readBucketed(spark, s"${name}_ivfcells")
-        .groupBy("cell").agg(count(lit(1)).as("n_build")),
-      s"${name}_ivfcensus", "ivfcensus")
+    // [[cellDriftReport]]. A FLAT build over a formerly two-level index
+    // retires the old coarse store, table and files: every arrival path
+    // auto-detects the coarse table to pick the routing kernel, and a
+    // leftover one would route arrivals two-level against flat-routed
+    // membership, silently losing boundary pairs (round-11 ADVICE).
+    PersistedIndex.write(PersistedIndex.Cell, name, buckets, location, Seq(memberRows),
+      (PersistedIndex.CellCentroids ->
+        spark.createDataFrame(centroids.zipWithIndex.map { case (c, i) => (i, c) })
+          .toDF("cell", "c")) +:
+        coarseStore.toSeq.map { case (keptCoarse, keptMembers) =>
+          PersistedIndex.CellCoarse -> spark.createDataFrame(keptCoarse.indices.map(g =>
+            (g, keptCoarse(g), keptMembers(g)))).toDF("g", "c", "members")
+        })
   }
 
   /** Re-attach an EXTERNAL cell index written with a `location` in a
@@ -1057,47 +967,8 @@ object Similarity {
     * in-memory catalog loses table metadata across JVMs). The coarse
     * table re-attaches only if the build stored one (two-level form). */
   def registerCellIndex(spark: org.apache.spark.sql.SparkSession,
-      name: String, location: String, buckets: Int = 8): Unit = {
-    // a fixed name already bound elsewhere (or to a superseded version)
-    // is dropped first, never silently kept (round-12 ADVICE)
-    val cellsDir = Bucketing.currentDir(spark, location, "ivfcells")
-    Bucketing.dropIfRelocated(spark, s"${name}_ivfcells", cellsDir)
-    Bucketing.dropIfRelocated(spark, s"${name}_ivfcentroids", s"$location/ivfcentroids")
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS ${name}_ivfcells
-      |(vec_id BIGINT, cell INT, embedding ARRAY<FLOAT>, norm DOUBLE)
-      |USING parquet CLUSTERED BY (cell) SORTED BY (cell) INTO $buckets BUCKETS
-      |LOCATION '$cellsDir'""".stripMargin)
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS ${name}_ivfcentroids
-      |(cell INT, c ARRAY<DOUBLE>) USING parquet
-      |LOCATION '$location/ivfcentroids'""".stripMargin)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(location), spark.sparkContext.hadoopConfiguration)
-    // the drift census re-attaches only if the build stored one — a
-    // pre-census cell index stays probe-able instead of binding a table
-    // at a missing location (round-12 ADVICE: the unconditional DDL made
-    // `Cli index-status` either fail the read or print a misleading
-    // tvd=0.5 STALE verdict; band/emb always had this guard)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$location/ivfcensus"))) {
-      Bucketing.dropIfRelocated(spark, s"${name}_ivfcensus", s"$location/ivfcensus")
-      spark.sql(s"""CREATE TABLE IF NOT EXISTS ${name}_ivfcensus
-        |(cell INT, n_build BIGINT) USING parquet
-        |LOCATION '$location/ivfcensus'""".stripMargin)
-    } else
-      // census-less location: a census bound by a PREVIOUS registration
-      // of this name must not survive into the new binding (r13 ADVICE)
-      Bucketing.dropIfOrphaned(spark, s"${name}_ivfcensus")
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$location/ivfcoarse"))) {
-      Bucketing.dropIfRelocated(spark, s"${name}_ivfcoarse", s"$location/ivfcoarse")
-      spark.sql(s"""CREATE TABLE IF NOT EXISTS ${name}_ivfcoarse
-        |(g INT, c ARRAY<DOUBLE>, members ARRAY<INT>) USING parquet
-        |LOCATION '$location/ivfcoarse'""".stripMargin)
-    } else
-      // a FLAT index re-registered under a name previously bound to a
-      // two-level index must not inherit the other index's coarse
-      // quantizer — tableExists(ivfcoarse) is the two-level routing
-      // signal in Cli/StreamOps (r13 ADVICE, the silent-wrong-index case)
-      Bucketing.dropIfOrphaned(spark, s"${name}_ivfcoarse")
-  }
+      name: String, location: String, buckets: Int = 8): Unit =
+    PersistedIndex.register(spark, PersistedIndex.Cell, name, location, buckets)
 
   /** The stored quantizer, in cell order (kCells×dim — driver-sized by
     * construction: cells hold ~[[CellTargetPop]] vectors each). */
@@ -1148,8 +1019,7 @@ object Similarity {
         val (coarse, members) = readCoarseCells(spark, name)
         twoCellRowsTwoLevel(vecs, fine, coarse, members)
       } else twoCellRows(vecs, fine)
-    rows.select("vec_id", "cell", "embedding", "norm")
-      .write.insertInto(s"${name}_ivfcells")
+    PersistedIndex.append(PersistedIndex.Cell, name, Seq(rows))
   }
 
   // ---- quantizer staleness (drift vs the build-time census) ---------------
@@ -1174,15 +1044,10 @@ object Similarity {
     * quantizer balanced it for). One aggregation over the bucketed cells
     * table; the census join is kCells × kCells-bounded. */
   def cellDriftReport(spark: org.apache.spark.sql.SparkSession,
-      name: String): DataFrame = {
-    val live = Bucketing.readBucketed(spark, s"${name}_ivfcells")
-      .groupBy("cell").agg(count(lit(1)).as("n_live"))
-    // full outer (inside IndexDrift.report): a cell can be
-    // append-only-hot, and tombstone rewrites can empty either side
-    IndexDrift.report(live, spark.table(s"${name}_ivfcensus"), "cell")
-  }
+      name: String): DataFrame =
+    PersistedIndex.driftReport(spark, PersistedIndex.Cell, name)
 
-  /** Scalar drift statistics from [[cellDriftReport]]:
+  /** Scalar drift statistics from [[cellDriftReport]] ([[IndexDrift.stats]]):
     *   - `tvd`: total-variation distance between the live and build
     *     cell-population distributions, ½·Σ|live_share − build_share| ∈
     *     [0, 1] — the fraction of live probe mass sitting in cells the
@@ -1191,13 +1056,9 @@ object Similarity {
     *     worst single-cell probe-cost inflation factor;
     *   - `nBuild`/`nLive`: total index rows then and now.
     * Driver-side over kCells rows. */
-  final case class CellDriftStats(tvd: Double, maxGrowth: Double,
-      nBuild: Long, nLive: Long)
   def cellDriftStats(spark: org.apache.spark.sql.SparkSession,
-      name: String): CellDriftStats = {
-    val (tvd, mg, nb, nl) = IndexDrift.stats(cellDriftReport(spark, name))
-    CellDriftStats(tvd, mg, nb, nl)
-  }
+      name: String): IndexDrift.Stats =
+    PersistedIndex.driftStats(spark, PersistedIndex.Cell, name)
 
   /** REBUILD recommendation for a persisted cell index ("retrain =
     * rebuild" is the arrival contract; this is the trigger). Thresholds
@@ -1216,10 +1077,8 @@ object Similarity {
     *     are for drift, not size (size is [[defaultCellCount]] at the
     *     next scheduled rebuild). */
   def cellIndexStale(spark: org.apache.spark.sql.SparkSession, name: String,
-      tvdThreshold: Double = 0.10, maxGrowthThreshold: Double = 4.0): Boolean = {
-    val s = cellDriftStats(spark, name)
-    s.tvd >= tvdThreshold || s.maxGrowth >= maxGrowthThreshold
-  }
+      tvdThreshold: Double = 0.10, maxGrowthThreshold: Double = 4.0): Boolean =
+    PersistedIndex.stale(spark, PersistedIndex.Cell, name, tvdThreshold, maxGrowthThreshold)
 
   /** One arriving batch's similarity edges against the persisted cell
     * index: the batch routes to its two nearest stored cells (bounded
@@ -1337,7 +1196,7 @@ object Similarity {
     * [[Dedup.compactBandIndex]]; external-location indexes only. */
   def compactEmbIndex(spark: org.apache.spark.sql.SparkSession,
       name: String, location: String, buckets: Int = 8): Unit =
-    rewriteEmbIndex(spark, name, location, buckets, identity)
+    PersistedIndex.compact(spark, PersistedIndex.EmbBand, name, location, buckets)
 
   /** Tombstone vec_ids OUT of the persisted embedding index (takedowns,
     * retention expiry): parquet is immutable, so a delete is a filtered
@@ -1346,21 +1205,8 @@ object Similarity {
     * not derive from the index tables themselves). */
   def deleteFromEmbIndex(spark: org.apache.spark.sql.SparkSession,
       tombstones: DataFrame, name: String, location: String,
-      buckets: Int = 8): Unit = {
-    val ids = tombstones.select("vec_id")
-    rewriteEmbIndex(spark, name, location, buckets,
-      _.join(ids, Seq("vec_id"), "left_anti"))
-  }
-
-  private def rewriteEmbIndex(spark: org.apache.spark.sql.SparkSession,
-      name: String, location: String, buckets: Int,
-      transform: DataFrame => DataFrame): Unit = {
-    Bucketing.rewriteExternal(spark, s"${name}_embbands", "bkey", location,
-      "embbands", buckets, transform)
-    Bucketing.rewriteExternal(spark, s"${name}_embvecs", "vec_id", location,
-      "embvecs", buckets, transform)
-    registerEmbIndex(spark, name, location, buckets)
-  }
+      buckets: Int = 8): Unit =
+    PersistedIndex.delete(spark, PersistedIndex.EmbBand, tombstones, name, location, buckets)
 
   /** Retrieval-eval metrics for an ANN index vs the exact baseline —
     * the harness every approximate index ships with: per-query

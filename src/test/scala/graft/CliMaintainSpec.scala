@@ -166,6 +166,118 @@ class CliMaintainSpec extends SparkSpec {
     } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  /** Two rewrites retire an index's v0 directory (keep-top-2 cleanup);
+    * the index verbs must still find the index by its committed
+    * versions, never by the v0 directory's name. */
+  test("index verbs find an index after rewrites retire its v0 directory") {
+    import spark.implicits._
+    val tables = Seq("graft_idx_bands", "graft_idx_sets", "graft_idx_bandcensus",
+      "graft_eidx_embbands", "graft_eidx_embvecs", "graft_eidx_embcensus")
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val dir = Files.createTempDirectory("cliidxversions").toString
+    def status(loc: String): String = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(out)) {
+        Cli.run(spark, List("index-status", loc, "--buckets", "2"))
+      }
+      out.toString
+    }
+    try {
+      Seq((1L, "alpha beta gamma delta epsilon zeta", "w"),
+          (2L, "one two three four five six seven", "w"))
+        .toDF("doc_id", "text", "source")
+        .write.parquet(s"$dir/corpus")
+      Cli.run(spark, List("bandindex", s"$dir/corpus", s"$dir/bidx", "--buckets", "2"))
+      Cli.run(spark, List("compact-index", s"$dir/bidx", "--buckets", "2"))
+      Cli.run(spark, List("compact-index", s"$dir/bidx", "--buckets", "2"))
+      assert(!new java.io.File(s"$dir/bidx/bands").exists, "two rewrites retire v0")
+      val s1 = status(s"$dir/bidx")
+      assert(s1.contains("index-status band") && s1.contains("ok"), s1)
+
+      // an embedding index rebuilt three times: v0 is gone, the arrival
+      // path still detects and probes it
+      def vec(d: Int, scale: Float) =
+        (0 until 64).map(i => if (i == d) scale else 0f).toArray
+      Seq((1L, vec(0, 1f)), (2L, vec(7, 1f)), (3L, vec(13, 1f)))
+        .toDF("vec_id", "embedding").write.parquet(s"$dir/emb")
+      Seq((101L, vec(0, 0.5f)), (102L, vec(30, 1f)))
+        .toDF("vec_id", "embedding").write.parquet(s"$dir/batch")
+      (1 to 3).foreach(_ =>
+        Cli.run(spark, List("embindex", s"$dir/emb", s"$dir/eidx", "--buckets", "2")))
+      assert(!new java.io.File(s"$dir/eidx/embbands").exists, "rebuilds retire v0")
+      Cli.run(spark, List("emb-ingest-dedup", s"$dir/batch", s"$dir/eidx", s"$dir/out",
+        "--buckets", "2"))
+      val clean = spark.read.parquet(s"$dir/out/clean").collect().map(_.getLong(0)).toSet
+      assert(clean === Set(102L), s"the scaled copy must dedup out: $clean")
+      assert(status(s"$dir/eidx").contains("index-status emb-band"))
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  /** compact-index and delete-index act on every kind at the location
+    * (here the embedding sign-band index); delete-index needs each
+    * kind's id column; a location without an index fails these verbs,
+    * ingest-dedup and dedup --index before anything is registered or
+    * written. */
+  test("compact-index and delete-index rewrite every index kind at the location") {
+    import spark.implicits._
+    val tables = Seq("graft_idx_bands", "graft_idx_sets", "graft_idx_bandcensus",
+      "graft_eidx_embbands", "graft_eidx_embvecs", "graft_eidx_embcensus")
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val dir = Files.createTempDirectory("cliidxkinds").toString
+    val idx = s"$dir/eidx"
+    def vec(d: Int, scale: Float) =
+      (0 until 64).map(i => if (i == d) scale else 0f).toArray
+    def ingest(out: String, rows: (Long, Array[Float])*): Set[Long] = {
+      rows.toDF("vec_id", "embedding").write.mode("overwrite").parquet(s"$dir/$out-in")
+      Cli.run(spark, List("emb-ingest-dedup", s"$dir/$out-in", idx, s"$dir/$out",
+        "--buckets", "2", "--fold", "true"))
+      spark.read.parquet(s"$dir/$out/clean").collect().map(_.getLong(0)).toSet
+    }
+    def current = graft.operators.Bucketing.currentDir(spark, idx, "embbands")
+    try {
+      Seq((1L, vec(0, 1f)), (2L, vec(7, 1f)), (3L, vec(13, 1f)))
+        .toDF("vec_id", "embedding").write.parquet(s"$dir/emb")
+      Cli.run(spark, List("embindex", s"$dir/emb", idx, "--buckets", "2"))
+      assert(ingest("o1", 101L -> vec(0, 0.5f), 102L -> vec(30, 1f)) === Set(102L))
+
+      Cli.run(spark, List("compact-index", idx, "--buckets", "2"))
+      assert(current.endsWith("embbands__v1"), current)
+
+      // ids without the kind's id column: loud, and nothing is rewritten
+      Seq(1L).toDF("doc_id").write.parquet(s"$dir/bad-ids")
+      val bad = intercept[IllegalArgumentException] {
+        Cli.run(spark, List("delete-index", idx, s"$dir/bad-ids", "--buckets", "2"))
+      }
+      assert(bad.getMessage.contains("vec_id"), bad.getMessage)
+      assert(current.endsWith("embbands__v1"), current)
+
+      // take down vec 1: its copy is new again; the folded 102 still matches
+      Seq(1L).toDF("vec_id").write.parquet(s"$dir/ids")
+      Cli.run(spark, List("delete-index", idx, s"$dir/ids", "--buckets", "2"))
+      assert(current.endsWith("embbands__v2"), current)
+      assert(ingest("o2", 201L -> vec(0, 2f), 202L -> vec(30, 2f)) === Set(201L))
+
+      // no index at the location: the verbs fail before registering;
+      // ingest-dedup neither reads every doc as new nor lays an index
+      // down, and dedup's --index census does not read 0 docs
+      Seq((1L, "alpha beta gamma delta epsilon", "w")).toDF("doc_id", "text", "source")
+        .write.parquet(s"$dir/docs")
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      Seq(List("compact-index", s"$dir/none"),
+          List("delete-index", s"$dir/none", s"$dir/ids"),
+          List("ingest-dedup", s"$dir/ids", s"$dir/none", s"$dir/out-none",
+            "--fold", "true"),
+          List("dedup", s"$dir/docs", s"$dir/out-dedup", "--ensemble", "true",
+            "--hamming-plan", "measured", "--index", s"$dir/none")).foreach { args =>
+        val e = intercept[IllegalArgumentException](Cli.run(spark, args))
+        assert(e.getMessage.contains("no graft index"), e.getMessage)
+      }
+      assert(tables.forall(t => !spark.catalog.tableExists(t)),
+        "a failed verb must register nothing")
+      assert(!new java.io.File(s"$dir/none").exists, "a failed verb must write nothing")
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("maintain compact-plan bins a file manifest to the target size") {
     import spark.implicits._
     val dir = Files.createTempDirectory("climaintain").toString

@@ -291,32 +291,77 @@ class QualityGatesSpec extends SparkSpec {
     // one-row grand-total attach inherited from the chi2 cell frame
     "q198_cramers_v")
 
-  test("no cartesian / nested-loop joins outside documented baselines") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if iterative(name) => None
-      case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
-        val cartesian = plan.contains("CartesianProduct")
-        val bnlj = plan.contains("BroadcastNestedLoopJoin") && !bnljAllowed(name)
-        if (cartesian || bnlj) Some(s"$name cartesian=$cartesian bnlj=$bnlj") else None
+  // ---- the registry walk ------------------------------------------------
+  //
+  // The four registry-wide gates below each check every registry row, and
+  // building a row (analysis, planning, and the driver-side jobs some rows
+  // run while being built) is what they pay for. One walk builds each row
+  // ONCE and records every covering gate's verdict; each gate then reads
+  // its verdicts. A row that throws while being built fails every gate
+  // that covers it.
+
+  /** One row's verdicts: `None` passes, `Some(offence)` fails. `pushdown`
+    * is `None` when the row carries no literal source predicate (the gate
+    * does not count it as checked). Gates that do not cover the row
+    * leave their verdict `None`. */
+  private final case class Verdicts(cartesian: Option[String], window: Option[String],
+      pushdown: Option[Option[String]], decimals: Option[String])
+
+  private var rowBuilds = 0
+  private lazy val registry: Seq[(String, scala.util.Try[Verdicts])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> scala.util.Try {
+        rowBuilds += 1
+        val df = fn(spark, dir)
+        if (iterative(name)) Verdicts(None, None, None, decimalOffence(name, df))
+        else Verdicts(cartesianOffence(name, df),
+          if (globalWindowAllowed(name)) None else windowOffence(name, df),
+          pushdownOffence(name, df), decimalOffence(name, df))
+      }
     }
-    assert(offenders.isEmpty, offenders.mkString("; "))
+
+  /** The verdicts of every row `covers` admits (walking the registry on
+    * first use); a row that threw while being built reports its error. */
+  private def verdicts(covers: String => Boolean): Seq[(String, Either[String, Verdicts])] = {
+    val rows = registry
+    assert(rowBuilds === SparkEntry.queries.size,
+      s"each registry row is built once: $rowBuilds builds for ${SparkEntry.queries.size} rows")
+    rows.collect { case (name, v) if covers(name) =>
+      name -> v.toEither.left.map(e => s"$name: threw while being built: $e")
+    }
+  }
+
+  private def offenders(covers: String => Boolean)(gate: Verdicts => Option[String]): Seq[String] =
+    verdicts(covers).flatMap { case (_, v) => v.fold(Some(_), gate) }
+
+  private def cartesianOffence(name: String,
+      df: org.apache.spark.sql.DataFrame): Option[String] = {
+    val plan = df.queryExecution.executedPlan.toString
+    val cartesian = plan.contains("CartesianProduct")
+    val bnlj = plan.contains("BroadcastNestedLoopJoin") && !bnljAllowed(name)
+    if (cartesian || bnlj) Some(s"$name cartesian=$cartesian bnlj=$bnlj") else None
+  }
+
+  test("no cartesian / nested-loop joins outside documented baselines") {
+    val offending = offenders(n => !iterative(n))(_.cartesian)
+    assert(offending.isEmpty, offending.mkString("; "))
   }
 
   // global windows whose input is data-sized but bounded by something the
   // structural rule below can't see — each entry must name the bound
   private val globalWindowAllowed: Set[String] = Set.empty
 
-  test("no data-sized global windows: empty-partition windows sit above an aggregation or limit") {
-    // QualityChecks' collapsed-histogram convention (QualityChecks.scala,
-    // centsSql note) is safe only because every unpartitioned window in
-    // it runs over a groupBy-collapsed frame — this gate is what ENFORCES
-    // that convention registry-wide (round-12 verdict #3): a logical
-    // Window with an empty partitionSpec is a single-partition sort of
-    // its whole input, so every root-to-leaf path beneath it must pass
-    // through an Aggregate or a Limit (or a leaf with a known small row
-    // bound). q170's pre-round-13 global row_number() is exactly what
-    // this catches — its rank now arrives via Linkage.distributedRank.
+  // QualityChecks' collapsed-histogram convention (QualityChecks.scala,
+  // centsSql note) is safe only because every unpartitioned window in
+  // it runs over a groupBy-collapsed frame — this gate is what ENFORCES
+  // that convention registry-wide (round-12 verdict #3): a logical
+  // Window with an empty partitionSpec is a single-partition sort of
+  // its whole input, so every root-to-leaf path beneath it must pass
+  // through an Aggregate or a Limit (or a leaf with a known small row
+  // bound). q170's pre-round-13 global row_number() is exactly what
+  // this catches — its rank now arrives via Linkage.distributedRank.
+  private def windowOffence(name: String,
+      df: org.apache.spark.sql.DataFrame): Option[String] = {
     import org.apache.spark.sql.catalyst.plans.logical._
     def bounded(p: LogicalPlan): Boolean = p match {
       case _: Aggregate => true
@@ -329,18 +374,17 @@ class QualityGatesSpec extends SparkSpec {
         l.stats.rowCount.exists(_ <= (1L << 20))
       case o => o.children.nonEmpty && o.children.forall(bounded)
     }
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if iterative(name) || globalWindowAllowed(name) => None
-      case (name, fn) =>
-        val bad = fn(spark, dir).queryExecution.optimizedPlan.collect {
-          case w: Window if w.partitionSpec.isEmpty && !bounded(w.child) => w
-        }
-        if (bad.nonEmpty) Some(s"$name: ${bad.size} unbounded global window(s)")
-        else None
+    val bad = df.queryExecution.optimizedPlan.collect {
+      case w: Window if w.partitionSpec.isEmpty && !bounded(w.child) => w
     }
-    assert(offenders.isEmpty,
+    if (bad.nonEmpty) Some(s"$name: ${bad.size} unbounded global window(s)") else None
+  }
+
+  test("no data-sized global windows: empty-partition windows sit above an aggregation or limit") {
+    val offending = offenders(n => !iterative(n) && !globalWindowAllowed(n))(_.window)
+    assert(offending.isEmpty,
       "data-sized single-partition sorts (bound the input or allowlist with the bound named): " +
-        offenders.mkString("; "))
+        offending.mkString("; "))
   }
 
   test("TPC-H dimension sides broadcast (no shuffle fallback)") {
@@ -432,16 +476,17 @@ class QualityGatesSpec extends SparkSpec {
     pushed("q27c_tpch_q9", "StringContains(p_name,gear)")
   }
 
-  test("registry-wide: every literal source predicate reaches PushedFilters") {
-    // MECHANICAL enumeration (not a hand-picked list): walk every registry
-    // query's optimized logical plan; any Filter sitting over a parquet
-    // relation (through projections/aliases only) whose conjuncts compare
-    // a bare source column to literals is pushable BY CONSTRUCTION — the
-    // parquet source translates exactly these shapes — so its column must
-    // appear in some PushedFilters of the executed plan. Catches the
-    // classic regression where an operator edit wraps a source column
-    // (cast, arithmetic) and silently turns a pruned scan into a full
-    // read wearing a Filter node.
+  // MECHANICAL enumeration (not a hand-picked list): walk every registry
+  // query's optimized logical plan; any Filter sitting over a parquet
+  // relation (through projections/aliases only) whose conjuncts compare
+  // a bare source column to literals is pushable BY CONSTRUCTION — the
+  // parquet source translates exactly these shapes — so its column must
+  // appear in some PushedFilters of the executed plan. Catches the
+  // classic regression where an operator edit wraps a source column
+  // (cast, arithmetic) and silently turns a pruned scan into a full
+  // read wearing a Filter node.
+  private def pushdownOffence(name: String,
+      df: org.apache.spark.sql.DataFrame): Option[Option[String]] = {
     import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, BinaryComparison, Expression, In, Literal}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPlan, Project => LProject, SubqueryAlias}
     import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -465,37 +510,38 @@ class QualityGatesSpec extends SparkSpec {
         }
     }.flatten.distinct
 
-    val checked = scala.collection.mutable.ArrayBuffer[String]()
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if iterative(name) => None
-      case (name, fn) =>
-        val qe = fn(spark, dir).queryExecution
-        val attrs = pushableAttrs(qe.optimizedPlan)
-        if (attrs.isEmpty) None else {
-          checked += name
-          val pushedLines = qe.executedPlan.toString
-            .linesIterator.filter(_.contains("PushedFilters: [")).mkString("\n")
-          val missing = attrs.filterNot(pushedLines.contains)
-          if (missing.isEmpty) None else Some(s"$name: $missing not in PushedFilters")
-        }
+    val qe = df.queryExecution
+    val attrs = pushableAttrs(qe.optimizedPlan)
+    if (attrs.isEmpty) None else {
+      val pushedLines = qe.executedPlan.toString
+        .linesIterator.filter(_.contains("PushedFilters: [")).mkString("\n")
+      val missing = attrs.filterNot(pushedLines.contains)
+      Some(if (missing.isEmpty) None else Some(s"$name: $missing not in PushedFilters"))
     }
+  }
+
+  test("registry-wide: every literal source predicate reaches PushedFilters") {
+    val rows = verdicts(n => !iterative(n))
+    val checked = rows.collect { case (name, Right(v)) if v.pushdown.isDefined => name }
+    val failures = rows.flatMap { case (_, v) => v.fold(Some(_), _.pushdown.flatten) }
     assert(failures.isEmpty, failures.mkString("; "))
     assert(checked.size >= 10,
       s"gate degenerated — only ${checked.size} queries carry literal source predicates: $checked")
   }
 
-  test("registry-wide: no wide exact decimals in any FINAL output schema") {
-    // Round-4 lesson: the driver's hash pipeline materializes integral
-    // wide decimals (DuckDB HUGEINT / DECIMAL(38,0)) differently per
-    // engine — exact int128 rendering vs float64 — which flipped nine
-    // VALUE-IDENTICAL rows red. The structural contract: every FINAL
-    // output column must be a type both engines render identically —
-    // ≤64-bit integrals, floating point, string, boolean, binary,
-    // date/timestamp, or a FRACTIONAL decimal (scale ≥ 1, the
-    // money-sum class both engines print as "123.45"); wide SCALE-0
-    // decimals stay internal and are cast to BIGINT (if they fit by
-    // construction) or DOUBLE before the final select. Arrays/structs/
-    // maps recurse.
+  // Round-4 lesson: the driver's hash pipeline materializes integral
+  // wide decimals (DuckDB HUGEINT / DECIMAL(38,0)) differently per
+  // engine — exact int128 rendering vs float64 — which flipped nine
+  // VALUE-IDENTICAL rows red. The structural contract: every FINAL
+  // output column must be a type both engines render identically —
+  // ≤64-bit integrals, floating point, string, boolean, binary,
+  // date/timestamp, or a FRACTIONAL decimal (scale ≥ 1, the
+  // money-sum class both engines print as "123.45"); wide SCALE-0
+  // decimals stay internal and are cast to BIGINT (if they fit by
+  // construction) or DOUBLE before the final select. Arrays/structs/
+  // maps recurse.
+  private def decimalOffence(name: String,
+      df: org.apache.spark.sql.DataFrame): Option[String] = {
     import org.apache.spark.sql.types._
     def ok(dt: DataType): Boolean = dt match {
       case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
@@ -508,14 +554,14 @@ class QualityGatesSpec extends SparkSpec {
       case s: StructType => s.fields.forall(f => ok(f.dataType))
       case _ => false
     }
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val schema = fn(spark, dir).schema
-        val bad = schema.fields.filterNot(f => ok(f.dataType))
-        if (bad.isEmpty) None
-        else Some(s"$name: ${bad.map(f => s"${f.name}:${f.dataType.sql}").mkString(",")}")
-    }
-    assert(offenders.isEmpty,
-      s"wide/unrenderable output types (cast to BIGINT/DOUBLE before the final select): ${offenders.mkString("; ")}")
+    val bad = df.schema.fields.filterNot(f => ok(f.dataType))
+    if (bad.isEmpty) None
+    else Some(s"$name: ${bad.map(f => s"${f.name}:${f.dataType.sql}").mkString(",")}")
+  }
+
+  test("registry-wide: no wide exact decimals in any FINAL output schema") {
+    val offending = offenders(_ => true)(_.decimals)
+    assert(offending.isEmpty,
+      s"wide/unrenderable output types (cast to BIGINT/DOUBLE before the final select): ${offending.mkString("; ")}")
   }
 }

@@ -10,8 +10,26 @@ SF_CORRECT=${1:-/root/testdata/sf0.01}
 SF_BENCH=${2:-/root/testdata/sf0.1}
 OUT=$(mktemp -d /tmp/graft_gates.XXXX)
 
-echo "== 1/6 sbt test =="
-sbt -batch test
+echo "== 1/6 tier-1 tests (the ROADMAP.md tier-1 command) =="
+# offline sbt/coursier, all cores, half the RAM (2-8 GB) for the forked
+# test JVM, Spark scratch under /tmp/spark-local
+export COURSIER_MODE=offline SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true Test/compile
+SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" \
+SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)" \
+SPARK_LOCAL_DIRS=/tmp/spark-local \
+  timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true "testOnly *"
+# what each suite adds to tier-1 time: the ten slowest, from the reports
+python3 - <<'EOF'
+import glob, xml.etree.ElementTree as ET
+rows = sorted(((float(r.get("time")), r.get("name"), r.get("tests"))
+               for r in (ET.parse(f).getroot()
+                         for f in glob.glob("target/test-reports/TEST-*.xml"))),
+              reverse=True)
+print(f"tier-1 suite time {sum(t for t, _, _ in rows):.0f} s over {len(rows)} suites; slowest:")
+for t, name, n in rows[:10]:
+    print(f"  {t:8.1f} s  {name} ({n} tests)")
+EOF
 
 echo "== 2/6 perfbench harness tests (no Spark run) =="
 python3 -m pytest perfbench/tests
