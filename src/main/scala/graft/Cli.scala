@@ -142,20 +142,16 @@ object Cli {
       graft.operators.Dedup.registerBandIndex(spark, "graft_idx", indexDir, buckets)
       warnIfStale(spark, PersistedIndex.Band)
       val batch = spark.read.parquet(batchPath)
-      val pairs = graft.operators.Dedup.incrementalNearDupPairsIndexed(
-        spark, batch, "graft_idx", minJaccard = tau)
-      val clean = batch.join(pairs.select(col("new_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      pairs.write.mode("overwrite").parquet(s"$outDir/pairs")
-      clean.write.mode("overwrite").parquet(s"$outDir/clean")
-      println(s"[graft] ingest-dedup: ${spark.read.parquet(s"$outDir/clean").count()} of " +
+      val accepted = writePairsAndClean(spark, batch, "doc_id", outDir,
+        graft.operators.Dedup.incrementalNearDupPairsIndexed(
+          spark, batch, "graft_idx", minJaccard = tau))
+      println(s"[graft] ingest-dedup: ${accepted.count()} of " +
         s"${batch.count()} batch docs are new (jaccard < $tau vs corpus) -> $outDir")
       // --fold true: append the ACCEPTED docs into the index so the next
       // batch dedups against them too (continuous ingest, no rebuild) —
       // read back the materialized survivors so the appended rows can't
       // drift from what was just reported
       if (o.get("fold").contains("true")) {
-        val accepted = spark.read.parquet(s"$outDir/clean")
         graft.operators.Dedup.appendToBandIndex(spark, accepted, "graft_idx")
         println(s"[graft] ingest-dedup: folded ${accepted.count()} accepted docs into the index")
       }
@@ -220,15 +216,11 @@ object Cli {
           spark, batch, name, threshold = cos)
         else graft.operators.Similarity.incrementalEmbNearDupsIndexed(
           spark, batch, name, threshold = cos)
-      val clean = batch.join(pairs.select(col("new_id").as("vec_id")).distinct(),
-        Seq("vec_id"), "left_anti")
-      pairs.write.mode("overwrite").parquet(s"$outDir/pairs")
-      clean.write.mode("overwrite").parquet(s"$outDir/clean")
-      println(s"[graft] emb-ingest-dedup: ${spark.read.parquet(s"$outDir/clean").count()} of " +
+      val accepted = writePairsAndClean(spark, batch, "vec_id", outDir, pairs)
+      println(s"[graft] emb-ingest-dedup: ${accepted.count()} of " +
         s"${batch.count()} batch vectors are new (cos < $cos vs corpus, " +
         s"${if (isCellForm) "cell" else "sign-band"} index) -> $outDir")
       if (o.get("fold").contains("true")) {
-        val accepted = spark.read.parquet(s"$outDir/clean")
         if (isCellForm) graft.operators.Similarity.appendToCellIndex(spark, accepted, name)
         else graft.operators.Similarity.appendToEmbIndex(spark, accepted, name)
         println(s"[graft] emb-ingest-dedup: folded ${accepted.count()} accepted vectors into the index")
@@ -737,6 +729,19 @@ object Cli {
   private def requireBandIndex(spark: SparkSession, indexDir: String, verb: String): Unit =
     require(indexKindsAt(spark, indexDir, verb).contains(PersistedIndex.Band),
       s"$verb: $indexDir holds no band index — build one with `bandindex` first")
+
+  /** The arrival verbs' outputs: `pairs`, then `clean` = the batch minus
+    * every paired `new_id`, derived from the WRITTEN pairs so the probe
+    * runs once. Returns the written clean rows. Read-backs take the known
+    * schemas: a schema-less parquet read is a schema-inference job. */
+  private def writePairsAndClean(spark: SparkSession, batch: DataFrame, idCol: String,
+      outDir: String, pairs: DataFrame): DataFrame = {
+    pairs.write.mode("overwrite").parquet(s"$outDir/pairs")
+    batch.join(spark.read.schema(pairs.schema).parquet(s"$outDir/pairs")
+        .select(col("new_id").as(idCol)).distinct(), Seq(idCol), "left_anti")
+      .write.mode("overwrite").parquet(s"$outDir/clean")
+    spark.read.schema(batch.schema).parquet(s"$outDir/clean")
+  }
 
   /** Staleness preflight of an arrival verb (one bounded aggregation): a
     * drifted index still answers, but its hot partitions' probe cost has

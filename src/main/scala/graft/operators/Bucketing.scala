@@ -187,9 +187,12 @@ object Bucketing {
     * are file-split, not bucket-aligned, and the rewrite would land
     * task-split files again. A plain parquet read forces the shuffle,
     * whose target partition (pmod(murmur3(key), n)) IS the writer's
-    * bucket id. Dropping EXTERNAL tables removes metadata only, never
-    * files; the caller re-registers its DDL afterwards (the re-register
-    * resolves [[currentDir]], binding the new version). */
+    * bucket id. The files are read with the schema of `table`'s catalog
+    * entry when it is registered: a schema-less parquet read launches a
+    * schema-inference job per rewrite. Dropping EXTERNAL tables removes
+    * metadata only, never files; the caller re-registers its DDL
+    * afterwards (the re-register resolves [[currentDir]], binding the new
+    * version). */
   def rewriteExternal(spark: SparkSession, table: String, key: String,
       location: String, sub: String, buckets: Int,
       transform: DataFrame => DataFrame = identity): Unit = {
@@ -201,8 +204,11 @@ object Bucketing {
     val tmp = new org.apache.hadoop.fs.Path(s"$location/${sub}__v${cur + 1}.tmp")
     val next = new org.apache.hadoop.fs.Path(s"$location/${sub}__v${cur + 1}")
     fs.delete(tmp, true) // stale leftover from a crashed rewrite
+    val reader =
+      if (spark.catalog.tableExists(table)) spark.read.schema(spark.table(table).schema)
+      else spark.read
     writeBucketed(
-      transform(spark.read.parquet(curDir.toString)).repartition(buckets, col(key)),
+      transform(reader.parquet(curDir.toString)).repartition(buckets, col(key)),
       s"${table}__compact", key, buckets, sortKey = Some(key),
       path = Some(tmp.toString))
     spark.sql(s"DROP TABLE IF EXISTS ${table}__compact")

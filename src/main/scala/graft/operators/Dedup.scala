@@ -111,8 +111,11 @@ object Dedup {
   }
 
   /** (doc_id, source, shs: array<bigint>) — word-trigram shingle hashes. */
-  def shingled(corpus: DataFrame): DataFrame =
-    spread(corpus).select(col("doc_id"), col("source"),
+  def shingled(corpus: DataFrame): DataFrame = shinglesOf(spread(corpus))
+
+  /** [[shingled]] in `docs`' own partitions (no [[spread]] exchange). */
+  private def shinglesOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"),
       TextHash.shingleHashes(col("text")).as("shs"))
 
   /** Exploded DISTINCT shingles: (doc_id, source, s). */
@@ -317,14 +320,15 @@ object Dedup {
       rowsPerBand: Int = 4): DataFrame =
     minhashBandsFrom(shingled(corpus), numHashes, rowsPerBand)
 
+  /** `keep` columns of `sh` ride along on every band row. */
   private def minhashBandsFrom(sh: DataFrame, numHashes: Int,
-      rowsPerBand: Int): DataFrame =
+      rowsPerBand: Int, keep: Seq[String] = Seq("doc_id")): DataFrame =
     sh.filter(size(col("shs")) > 0)
-      .select(col("doc_id"),
+      .select(keep.map(col) :+
         explode(org.apache.spark.sql.graftnative.TextHashExpressions
-          .minhashBandStructs(col("shs"), numHashes, rowsPerBand)).as("bd"))
-      .select(col("doc_id"), col("bd.band").as("band"), col("bd.s").as("s"),
-        col("bd.mn").as("mn"), col("bd.mx").as("mx"))
+          .minhashBandStructs(col("shs"), numHashes, rowsPerBand)).as("bd"): _*)
+      .select(keep.map(col) ++ Seq(col("bd.band").as("band"), col("bd.s").as("s"),
+        col("bd.mn").as("mn"), col("bd.mx").as("mx")): _*)
 
   /** Candidate pairs: docs sharing ANY full band — an equi-join on the
     * band key, NOT an all-pairs comparison. One row per pair. */
@@ -918,13 +922,14 @@ object Dedup {
 
   // ---- incremental dedup (continuous ingest) ------------------------------
 
-  /** Exact-Jaccard verification of incremental candidates — O(candidates),
+  /** Exact-Jaccard verification of incremental candidates (new_id,
+    * old_id, set_n) against the old docs' (old_id, set_o) — O(candidates),
     * shared by the recompute and the indexed paths. */
-  private def verifyIncremental(cand: DataFrame, newSets: DataFrame,
-      oldSets: DataFrame, minJaccard: Double): DataFrame = {
+  private def verifyIncremental(cand: DataFrame, oldSets: DataFrame,
+      minJaccard: Double): DataFrame = {
     val inter = size(array_intersect(col("set_n"), col("set_o")))
     val uni = size(col("set_n")) + size(col("set_o")) - inter
-    cand.join(newSets, "new_id").join(oldSets, "old_id")
+    cand.join(oldSets, "old_id")
       .select(col("new_id"), col("old_id"),
         (inter.cast("double") / uni.cast("double")).as("jacc"))
       .filter(col("jacc") >= minJaccard)
@@ -952,7 +957,7 @@ object Dedup {
       array_distinct(col("shs")).as("set_n"))
     val oldSets = shingled(corpus).select(col("doc_id").as("old_id"),
       array_distinct(col("shs")).as("set_o"))
-    verifyIncremental(cand, newSets, oldSets, minJaccard)
+    verifyIncremental(cand.join(newSets, "new_id"), oldSets, minJaccard)
   }
 
   // ---- persisted band index (the production continuous-ingest path) -------
@@ -1000,26 +1005,31 @@ object Dedup {
     *     verification join fetches shingle sets without re-shingling
     *     (or re-shuffling) the corpus.
     *
-    * Build cost is one corpus pass at write time; after that a daily
-    * batch pays O(|batch| + collisions) regardless of corpus size. With
-    * `location` set the bucket files are external and survive the
-    * session — re-attach them elsewhere with [[registerBandIndex]]. The
-    * build also stores the band-key census the drift report compares
-    * against ([[bandDriftReport]]); see [[PersistedIndex]]. */
+    * Build cost is one corpus pass at write time. After that a batch
+    * never re-shingles, re-hashes or re-shuffles the corpus: only the
+    * batch's rows shuffle, and the verify moves only candidates. The
+    * probe still SCANS every band row of the index (the merge join
+    * streams the bucket files), so its read is corpus-sized; only its
+    * shuffle is batch-sized. With `location` set the bucket files are
+    * external and survive the session — re-attach them elsewhere with
+    * [[registerBandIndex]]. The build also stores the band-key census
+    * the drift report compares against ([[bandDriftReport]]); see
+    * [[PersistedIndex]]. */
   def writeBandIndex(corpus: DataFrame, name: String, buckets: Int = 8,
       numHashes: Int = 16, rowsPerBand: Int = 4,
       location: Option[String] = None): Unit = {
     requireBandCount(numHashes, rowsPerBand)
     requireLongDocId(corpus, "writeBandIndex")
     PersistedIndex.write(PersistedIndex.Band, name, buckets, location,
-      bandIndexRows(corpus, numHashes, rowsPerBand))
+      bandIndexRows(shingled(corpus), numHashes, rowsPerBand))
   }
 
-  /** The two subtables' rows for `docs`: (bands, sets). */
-  private def bandIndexRows(docs: DataFrame, numHashes: Int,
+  /** The two subtables' rows from shingled (doc_id, shs) rows: (bands,
+    * sets). */
+  private def bandIndexRows(sh: DataFrame, numHashes: Int,
       rowsPerBand: Int): Seq[DataFrame] =
-    Seq(withBandKey(minhashBands(docs, numHashes, rowsPerBand)),
-      shingled(docs).select(col("doc_id"), array_distinct(col("shs")).as("set")))
+    Seq(withBandKey(minhashBandsFrom(sh, numHashes, rowsPerBand)),
+      sh.select(col("doc_id"), array_distinct(col("shs")).as("set")))
 
   /** Fixed partition count of the band-key census (shared across the
     * key-space drift tiers — see [[IndexDrift.CensusBuckets]]): bounded,
@@ -1035,14 +1045,20 @@ object Dedup {
       name: String, location: String, buckets: Int = 8): Unit =
     PersistedIndex.register(spark, PersistedIndex.Band, name, location, buckets)
 
-  /** The ingest-time candidate join in isolation (plan-gated by
-    * IncrementalIndexSpec: exactly one Exchange — the batch side — and a
-    * sort-merge against the index's bucket files in place). */
+  /** The ingest-time candidate join that [[incrementalNearDupPairsIndexed]]
+    * runs (plan-gated by IncrementalIndexSpec: the batch side is the only
+    * Exchange, and the index's bucket files sort-merge in place). The
+    * batch is shingled ONCE: each band row carries its doc's distinct
+    * shingle set, so the verify needs no second shingling pass. Output:
+    * (new_id, old_id, set_n), one row per shared band — a pair sharing k
+    * bands appears k times. */
   private[graft] def indexedBandJoin(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, name: String, numHashes: Int = 16,
       rowsPerBand: Int = 4): DataFrame = {
     requireBandCount(numHashes, rowsPerBand)
-    val nb = withBandKey(minhashBands(newDocs, numHashes, rowsPerBand))
+    val nb = withBandKey(minhashBandsFrom(
+      shingled(newDocs).withColumn("set_n", array_distinct(col("shs"))),
+      numHashes, rowsPerBand, keep = Seq("doc_id", "set_n")))
     val cb = Bucketing.readBucketed(spark, s"${name}_bands")
     // the (mn, mx) matches are two-sided INEQUALITIES on purpose: written
     // as `===` they'd be extracted into the equi-join keys, the key set
@@ -1054,28 +1070,32 @@ object Dedup {
         col("a.bkey") === col("b.bkey")
           && col("a.mn") <= col("b.mn") && col("a.mn") >= col("b.mn")
           && col("a.mx") <= col("b.mx") && col("a.mx") >= col("b.mx"))
-      .select(col("a.doc_id").as("new_id"), col("b.doc_id").as("old_id"))
+      .select(col("a.doc_id").as("new_id"), col("b.doc_id").as("old_id"), col("a.set_n"))
   }
 
   /** Fold a new batch INTO the persisted band index — the append half of
     * continuous ingest (without it the production story is "rebuild
     * nightly"; the reference's analog table likewise grows per ingest
-    * run, `kmeans.java:146-158`). `insertInto` resolves the catalog
-    * table's bucket spec, so the appended files land hashed to the SAME
+    * run, `kmeans.java:146-158`). The batch is hashed in its own
+    * partitions (no spread exchange), and each subtable's rows shuffle
+    * once, by bucket key, to the catalog's bucket count
+    * ([[PersistedIndex.append]]): each task holds one bucket, so an append
+    * adds at most one file per bucket and subtable. `insertInto` resolves
+    * the catalog table's bucket spec, so the files land in the SAME
     * bucket layout — a later probe still sort-merges the index in place
-    * with zero corpus-side Exchange (each append adds one file per
-    * bucket; the scan unions per-bucket file lists and re-sorts within
-    * the merge, no shuffle — IncrementalIndexSpec pins the plan after an
-    * append). Run [[compactBandIndex]] periodically to fold the
-    * accumulated per-bucket files back to one. Idempotence is the
-    * caller's contract: append each accepted batch exactly once. */
+    * with zero corpus-side Exchange (the scan unions per-bucket file
+    * lists and re-sorts within the merge, no shuffle — IncrementalIndexSpec
+    * pins the plan after an append). Run [[compactBandIndex]]
+    * periodically to fold the accumulated per-bucket files back to one.
+    * Idempotence is the caller's contract: append each accepted batch
+    * exactly once. */
   def appendToBandIndex(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, name: String, numHashes: Int = 16,
       rowsPerBand: Int = 4): Unit = {
     requireBandCount(numHashes, rowsPerBand)
     requireLongDocId(batch, "appendToBandIndex")
     PersistedIndex.append(PersistedIndex.Band, name,
-      bandIndexRows(batch, numHashes, rowsPerBand))
+      bandIndexRows(shinglesOf(batch), numHashes, rowsPerBand))
   }
 
   /** Compact the persisted index back to ONE file per bucket. Every
@@ -1117,17 +1137,21 @@ object Dedup {
 
   /** [[incrementalNearDupPairs]] against a persisted [[writeBandIndex]]:
     * same output, but the corpus is never re-shingled, re-hashed, or
-    * re-shuffled — the batch bands shuffle to the index's bucket layout
-    * and merge in place. Output: (new_id, old_id, jacc ≥ minJaccard). */
+    * re-shuffled. The plan: the batch is shingled once, its band rows
+    * (each carrying the doc's distinct shingle set) shuffle to the
+    * index's bucket layout and merge in place ([[indexedBandJoin]]), every
+    * raw candidate verifies against `<name>_sets`, and one `distinct()`
+    * collapses the verified rows. A pair's Jaccard is the same on every
+    * band it shares, so that distinct yields exactly the distinct
+    * candidates' verified pairs. Output: (new_id, old_id, jacc ≥
+    * minJaccard). */
   def incrementalNearDupPairsIndexed(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, name: String, numHashes: Int = 16,
       rowsPerBand: Int = 4, minJaccard: Double = 0.5): DataFrame = {
-    val cand = indexedBandJoin(spark, newDocs, name, numHashes, rowsPerBand).distinct()
-    val newSets = shingled(newDocs).select(col("doc_id").as("new_id"),
-      array_distinct(col("shs")).as("set_n"))
     val oldSets = Bucketing.readBucketed(spark, s"${name}_sets")
       .select(col("doc_id").as("old_id"), col("set").as("set_o"))
-    verifyIncremental(cand, newSets, oldSets, minJaccard)
+    verifyIncremental(indexedBandJoin(spark, newDocs, name, numHashes, rowsPerBand),
+      oldSets, minJaccard).distinct()
   }
 
   /** The FULL corpus self-dedup run entirely off a persisted

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** The shared drift-census core behind every persisted index's
   * staleness signal — cell ([[Similarity.cellDriftReport]]), text band
@@ -45,37 +46,62 @@ object IndexDrift {
   def censusBucket(key: Column): Column =
     pmod(xxhash64(key), lit(CensusBuckets.toLong))
 
+  /** Per-partition (partCol, n_build, n_live) of `live` (partCol,
+    * n_live) against `build` (partCol, n_build), in partCol order: ONE
+    * aggregation over their union, so a partition present on one side
+    * only counts zero on the other (tombstone rewrites can empty either
+    * side of any partition). Either side may repeat a partition; the
+    * output is bounded by the partition count, so collecting it is
+    * cheap. */
+  private[graft] def counts(live: DataFrame, build: DataFrame, partCol: String): DataFrame =
+    live.select(col(partCol), lit(0L).as("n_build"), col("n_live").cast("long").as("n_live"))
+      .unionByName(build.select(col(partCol), col("n_build").cast("long").as("n_build"),
+        lit(0L).as("n_live")))
+      .groupBy(col(partCol))
+      .agg(sum(col("n_build")).as("n_build"), sum(col("n_live")).as("n_live"))
+      // census-bounded: one task sorts it, no range-partitioning job
+      .coalesce(1).sortWithinPartitions(col(partCol))
+
+  /** The drift arithmetic, driver-side over per-partition (n_build,
+    * n_live) counts: (build_share, live_share, growth) per partition, in
+    * input order. Shares are counts over their side's total (floored at
+    * 1). The growth denominator is floored at the share ONE build row
+    * would have had, not at 1e-12: the fixed-1024-partition key-space
+    * censuses (band / emb-band tiers) have empty-at-build partitions
+    * whenever the corpus holds < ~7k distinct routing keys, and with a
+    * raw-zero denominator a SINGLE benign novel document landing in one
+    * read growth ~1e12 and flagged the whole index STALE on every ingest
+    * (round-12 ADVICE). Under the floor a first arrival reads
+    * live_share·nBuild ≈ nBuild/nLive ≈ 1 (benign), while a drifted
+    * stream CONCENTRATING into an empty partition still reads
+    * share·nBuild ≫ the ≥4× threshold. */
+  private def shares(counts: Seq[(Long, Long)]): Seq[(Double, Double, Double)] = {
+    val nBuild = counts.map(_._1).sum
+    val nLive = counts.map(_._2).sum
+    val floor = 1.0 / math.max(nBuild.toDouble, 1.0)
+    counts.map { case (b, l) =>
+      val bs = b.toDouble / math.max(nBuild, 1L)
+      val ls = l.toDouble / math.max(nLive, 1L)
+      (bs, ls, ls / math.max(bs, floor))
+    }
+  }
+
   /** Build-vs-live drift report. `live` is (partCol, n_live), `build`
-    * (partCol, n_build); both bounded (≤ partition count). Output:
-    * (partCol, n_build, n_live, build_share, live_share, growth),
-    * ordered by partCol. Full outer: tombstone rewrites can empty
-    * either side of any partition. */
+    * (partCol, n_build); either may repeat a partition. Output: (partCol,
+    * n_build, n_live, build_share, live_share, growth), ordered by
+    * partCol — a local frame over [[counts]] and [[shares]], bounded by
+    * the partition count. */
   def report(live: DataFrame, build: DataFrame, partCol: String): DataFrame = {
-    val joined = live.join(build, Seq(partCol), "full_outer")
-      .select(col(partCol),
-        coalesce(col("n_build"), lit(0L)).as("n_build"),
-        coalesce(col("n_live"), lit(0L)).as("n_live"))
-    // bounded single-partition window: ≤ CensusBuckets (or kCells) rows
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
-    joined
-      .withColumn("build_share",
-        col("n_build") / greatest(sum(col("n_build")).over(w), lit(1L)))
-      .withColumn("live_share",
-        col("n_live") / greatest(sum(col("n_live")).over(w), lit(1L)))
-      // growth denominator floored at the share ONE build row would have
-      // had, not at 1e-12: the fixed-1024-partition key-space censuses
-      // (band / emb-band tiers) have empty-at-build partitions whenever
-      // the corpus holds < ~7k distinct routing keys, and with a raw-zero
-      // denominator a SINGLE benign novel document landing in one read
-      // growth ~1e12 and flagged the whole index STALE on every ingest
-      // (round-12 ADVICE). Under the floor a first arrival reads
-      // live_share·nBuild ≈ nBuild/nLive ≈ 1 (benign), while a drifted
-      // stream CONCENTRATING into an empty partition still reads
-      // share·nBuild ≫ the ≥4× threshold.
-      .withColumn("growth",
-        col("live_share") / greatest(col("build_share"),
-          lit(1.0) / greatest(sum(col("n_build")).over(w).cast("double"), lit(1.0))))
-      .orderBy(col(partCol))
+    val frame = counts(live, build, partCol)
+    val rows = frame.collect()
+    val sh = shares(rows.toSeq.map(r => (r.getLong(1), r.getLong(2))))
+    val schema = StructType(Seq(frame.schema(partCol)) ++
+      Seq("n_build", "n_live").map(StructField(_, LongType, nullable = false)) ++
+      Seq("build_share", "live_share", "growth").map(StructField(_, DoubleType, nullable = false)))
+    val out = rows.toSeq.zip(sh).map { case (r, (bs, ls, g)) =>
+      Row(r.get(0), r.getLong(1), r.getLong(2), bs, ls, g)
+    }
+    live.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }
 
   // ---- measured drift PRICES (round-13 DriftSweep → round-14 surfacing) ----
@@ -168,18 +194,22 @@ object IndexDrift {
           s""""price_source":"index_drift_scales.json"""")
   }
 
-  /** (tvd, maxGrowth, nBuild, nLive) over a [[report]] frame —
-    * driver-side on census-bounded rows. tvd = ½·Σ|live − build| share
-    * (the tightest bound on how far ANY per-partition cost model is
-    * off); maxGrowth = the hottest partition's share inflation (the
-    * skew form — one region absorbing a hot stream while TVD stays
-    * low). */
+  /** Stats over per-partition (n_build, n_live) counts. tvd =
+    * ½·Σ|live − build| share (the tightest bound on how far ANY
+    * per-partition cost model is off); maxGrowth = the hottest
+    * partition's share inflation (the skew form — one region absorbing a
+    * hot stream while TVD stays low); 0 for no partitions. */
+  def statsOf(counts: Seq[(Long, Long)]): Stats = {
+    val sh = shares(counts)
+    Stats(sh.map { case (bs, ls, _) => math.abs(ls - bs) }.sum / 2.0,
+      sh.map(_._3).maxOption.getOrElse(0.0), counts.map(_._1).sum, counts.map(_._2).sum)
+  }
+
+  /** (tvd, maxGrowth, nBuild, nLive) of a [[report]] frame, by
+    * [[statsOf]] over its counts. */
   def stats(rep: DataFrame): (Double, Double, Long, Long) = {
-    val r = rep
-      .agg((sum(abs(col("live_share") - col("build_share"))) / 2.0).as("tvd"),
-        max(col("growth")).as("mg"),
-        sum(col("n_build")).as("nb"), sum(col("n_live")).as("nl"))
-      .head()
-    (r.getDouble(0), r.getDouble(1), r.getLong(2), r.getLong(3))
+    val s = statsOf(rep.select(col("n_build"), col("n_live")).collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1))))
+    (s.tvd, s.maxGrowth, s.nBuild, s.nLive)
   }
 }

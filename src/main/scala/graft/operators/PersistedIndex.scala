@@ -8,17 +8,19 @@ import org.apache.spark.sql.functions._
   * ([[Similarity.writeEmbIndex]]) and the IVF cell index
   * ([[Similarity.writeCellIndex]]):
   *
-  *   - write: each bucketed subtable through [[Bucketing]] (versioned
-  *     when external), then the build-time census read back from the
-  *     just-written primary subtable (no second hashing pass);
+  *   - write: each bucketed subtable shuffled by its bucket key (one
+  *     file per bucket) through [[Bucketing]] (versioned when external),
+  *     then the build-time census read back from the just-written
+  *     primary subtable (no second hashing pass);
   *   - register: DDL over the highest committed version of each
   *     subtable; each optional small tier re-attaches if its directory
   *     exists and is dropped from the catalog otherwise;
-  *   - append: `insertInto` per subtable, in table column order;
+  *   - append: per subtable, one shuffle by bucket key to the catalog's
+  *     bucket count, then `insertInto` (one file per bucket);
   *   - rewrite (compaction, tombstone delete): [[Bucketing.rewriteExternal]]
   *     per subtable, then register;
-  *   - drift: live census partitions against the build census
-  *     ([[IndexDrift]]), and the rebuild verdict.
+  *   - drift: live census partitions against the build census, counted
+  *     in one aggregation ([[IndexDrift]]), and the rebuild verdict.
   *
   * A [[Kind]] supplies only what differs: its subtables, its small
   * tiers, its census key and its id column. The per-kind public
@@ -114,7 +116,8 @@ object PersistedIndex {
   def write(kind: Kind, name: String, buckets: Int, location: Option[String],
       rows: Seq[DataFrame], small: Seq[(Tier, DataFrame)] = Nil): Unit = {
     val spark = rows.head.sparkSession
-    kind.subtables.zip(rows).foreach { case (t, df) =>
+    kind.subtables.zip(rows).foreach { case (t, subRows) =>
+      val df = subRows.repartition(buckets, col(t.key)) // one file per bucket, as append
       location match {
         case Some(l) => Bucketing.writeBucketedExternal(df, table(name, t.sub), t.key,
           buckets, sortKey = Some(t.key), location = l, sub = t.sub)
@@ -168,12 +171,22 @@ object PersistedIndex {
   }
 
   /** Fold rows into the registered index (one frame per subtable).
-    * `insertInto` resolves the catalog bucket spec, so appended files
-    * land in the same layout and probes keep merging in place; it
+    * Each frame shuffles by its bucket key to the catalog's bucket count —
+    * the same `pmod(murmur3(key), n)` the bucket writer uses, so each task
+    * holds one bucket and writes one file (as [[Bucketing.rewriteExternal]]
+    * does). Without it every input partition writes a file per bucket it
+    * touches. `insertInto` resolves the catalog bucket spec, so appended
+    * files land in the same layout and probes keep merging in place; it
     * matches columns by position, hence the select in table order. */
   def append(kind: Kind, name: String, rows: Seq[DataFrame]): Unit =
     kind.subtables.zip(rows).foreach { case (t, df) =>
-      df.select(t.columns.map(c => col(c._1)): _*).write.insertInto(table(name, t.sub))
+      val tbl = table(name, t.sub)
+      val buckets = df.sparkSession.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+        .bucketSpec.map(_.numBuckets)
+        .getOrElse(throw new IllegalStateException(s"$tbl is not a bucketed index table"))
+      df.select(t.columns.map(c => col(c._1)): _*).repartition(buckets, col(t.key))
+        .write.insertInto(tbl)
     }
 
   /** Rewrite every subtable through `transform` (see
@@ -207,20 +220,34 @@ object PersistedIndex {
   def hasCensus(spark: SparkSession, kind: Kind, name: String): Boolean =
     spark.catalog.tableExists(table(name, kind.census.sub))
 
-  /** Per-partition drift report: live census partitions of the primary
-    * subtable (build + every append) against the build census. Output
-    * (censusPart, n_build, n_live, build_share, live_share, growth). */
-  def driftReport(spark: SparkSession, kind: Kind, name: String): DataFrame = {
+  /** The drift inputs: one (censusPart, n_live = 1) row per primary row
+    * (build + every append), and the build census. */
+  private def driftSides(spark: SparkSession, kind: Kind,
+      name: String): (DataFrame, DataFrame) = {
     require(hasCensus(spark, kind, name),
       s"$name has no build-time ${kind.form} census — the index predates drift " +
         s"detection; rebuild with ${kind.writer} to enable it")
-    val live = spark.table(table(name, kind.primary.sub))
-      .groupBy(kind.censusKey.as(kind.censusPart)).agg(count(lit(1)).as("n_live"))
-    IndexDrift.report(live, spark.table(table(name, kind.census.sub)), kind.censusPart)
+    (spark.table(table(name, kind.primary.sub))
+        .select(kind.censusKey.as(kind.censusPart), lit(1L).as("n_live")),
+      spark.table(table(name, kind.census.sub)))
   }
 
-  def driftStats(spark: SparkSession, kind: Kind, name: String): IndexDrift.Stats =
-    IndexDrift.Stats.tupled(IndexDrift.stats(driftReport(spark, kind, name)))
+  /** Per-partition drift report: live census partitions of the primary
+    * subtable against the build census. Output (censusPart, n_build,
+    * n_live, build_share, live_share, growth). */
+  def driftReport(spark: SparkSession, kind: Kind, name: String): DataFrame = {
+    val (live, build) = driftSides(spark, kind, name)
+    IndexDrift.report(live, build, kind.censusPart)
+  }
+
+  /** [[driftReport]]'s scalars from the same one aggregation — the
+    * arrival verbs' preflight: one scan of the primary's key column, two
+    * Spark jobs (the shuffle and the collect), arithmetic on the driver. */
+  def driftStats(spark: SparkSession, kind: Kind, name: String): IndexDrift.Stats = {
+    val (live, build) = driftSides(spark, kind, name)
+    IndexDrift.statsOf(IndexDrift.counts(live, build, kind.censusPart).collect().toSeq
+      .map(r => (r.getLong(1), r.getLong(2))))
+  }
 
   def stale(spark: SparkSession, kind: Kind, name: String, tvdThreshold: Double,
       maxGrowthThreshold: Double): Boolean =

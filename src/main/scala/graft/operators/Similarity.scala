@@ -800,9 +800,10 @@ object Similarity {
     *     the exact-cosine verify fetches corpus vectors without
     *     re-reading (or re-shuffling) the embedding table.
     *
-    * One corpus pass at build time; every later batch pays
-    * O(|batch| + collisions) however large the corpus grows. The build
-    * also stores a band-key census: the random planes are
+    * One corpus pass at build time; a later batch shuffles only its own
+    * rows and its candidates, though the probe still scans every band
+    * row of the index (as [[Dedup.writeBandIndex]]'s). The build also
+    * stores a band-key census: the random planes are
     * data-independent, but bucket DENSIFICATION is not — a drifted
     * stream concentrates its sign patterns into its own key regions
     * ([[embDriftReport]]; see [[PersistedIndex]]). */

@@ -213,6 +213,41 @@ class CliMaintainSpec extends SparkSpec {
     } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  /** `ingest-dedup --fold true` evaluates the probe once: `clean` derives
+    * from the written `pairs`, and both equal the library probe's
+    * output. The verb's job count is pinned at this plan's count (34 jobs
+    * when `clean` re-ran the probe and the read-backs inferred schemas). */
+  test("ingest-dedup probes once: pairs and clean equal the library probe, in fewer jobs") {
+    import spark.implicits._
+    val tables = Seq("graft_idx_bands", "graft_idx_sets", "graft_idx_bandcensus")
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val dir = Files.createTempDirectory("cliingestonce").toString
+    val docs = Seq(
+      (10L, "alpha beta gamma delta epsilon zeta eta theta", "web"),
+      (20L, "one two three four five six seven eight nine", "web"),
+      (30L, "red orange yellow green blue indigo violet ultra", "book"))
+    try {
+      docs.toDF("doc_id", "text", "source").write.parquet(s"$dir/corpus")
+      // near-copies of 10 and 20 (first token dropped) and a novel doc
+      (docs.take(2).map { case (id, t, src) => (id + 1000L, t.split(' ').tail.mkString(" "), src) } :+
+          ((1099L, "completely unrelated content lives over here now", "book")))
+        .toDF("doc_id", "text", "source").write.parquet(s"$dir/batch")
+      Cli.run(spark, List("bandindex", s"$dir/corpus", s"$dir/idx", "--buckets", "2"))
+      val batch = spark.read.parquet(s"$dir/batch")
+      val want = graft.operators.Dedup.incrementalNearDupPairsIndexed(spark, batch, "graft_idx")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(want.map(_._1) === Set(1010L, 1020L), want)
+      val jobs = jobsIn(Cli.run(spark, List("ingest-dedup", s"$dir/batch", s"$dir/idx",
+        s"$dir/out", "--buckets", "2", "--fold", "true")))
+      val pairs = spark.read.parquet(s"$dir/out/pairs")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(pairs === want)
+      val clean = spark.read.parquet(s"$dir/out/clean").collect().map(_.getLong(0)).toSet
+      assert(clean === Set(1099L))
+      assert(jobs <= 21, s"ingest-dedup --fold ran $jobs jobs")
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   /** compact-index and delete-index act on every kind at the location
     * (here the embedding sign-band index); delete-index needs each
     * kind's id column; a location without an index fails these verbs,

@@ -215,6 +215,35 @@ class IncrementalIndexSpec extends SparkSpec {
     }
   }
 
+  /** The batch path's cost on small data is Spark jobs, which no wall
+    * gate resolves: a ceiling per step of one batch, at this plan's own
+    * counts (4 / 6 / 4 / 6 when the preflight ran a join, a window and
+    * a stats aggregate, the probe shingled the batch twice and distinct-ed
+    * before the verify, and compaction inferred the parquet schema).
+    * Preflight: one aggregation (shuffle + collect). Append: per subtable,
+    * one bucket shuffle and the write. Compaction: the same per subtable,
+    * the read taking the catalog schema. */
+  test("index batch path job budget: preflight, one probe, append, compaction") {
+    cleanup()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+    val loc = java.nio.file.Files.createTempDirectory("graft-budget").toString
+    try {
+      Dedup.writeBandIndex(corpus, "xidx", buckets = 4, location = Some(loc))
+      val jobs = Seq(
+        "preflight" -> jobsIn(Dedup.bandIndexStale(spark, "xidx")),
+        "probe" -> jobsIn(Dedup.incrementalNearDupPairsIndexed(spark, batch, "xidx").collect()),
+        "append" -> jobsIn(Dedup.appendToBandIndex(spark, batch, "xidx")),
+        "compaction" -> jobsIn(Dedup.compactBandIndex(spark, "xidx", loc, buckets = 4)))
+      val budget = Map("preflight" -> 2, "probe" -> 4, "append" -> 4, "compaction" -> 4)
+      jobs.foreach { case (step, n) =>
+        assert(n <= budget(step), s"$step ran $n jobs, budget ${budget(step)} (all: $jobs)")
+      }
+    } finally {
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      cleanup()
+    }
+  }
+
   test("tombstone delete rewrites the index without the deleted docs; layout intact") {
     cleanup()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
@@ -318,13 +347,14 @@ class IncrementalIndexSpec extends SparkSpec {
     cleanupEmb()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     val loc = java.nio.file.Files.createTempDirectory("graft-embcompact").toString
-    def bandFiles(): Int = {
+    def bandFileNames(): Seq[String] = {
       import scala.jdk.CollectionConverters._
       val cur = graft.operators.Bucketing.currentDir(spark, loc, "embbands")
         .stripPrefix("file:")
       java.nio.file.Files.walk(java.nio.file.Paths.get(cur)).iterator().asScala
-        .count(_.toString.endsWith(".parquet"))
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
     }
+    def bandFiles(): Int = bandFileNames().size
     try {
       import spark.implicits._
       def vec(d: Int, scale: Float) =
@@ -341,17 +371,22 @@ class IncrementalIndexSpec extends SparkSpec {
 
       Similarity.writeEmbIndex(corpus, "eidx", buckets = 4,
         numBands = 4, bitsPerBand = 4, dim = 4, location = Some(loc))
+      // the build and each append write one file per bucket they touch
+      val filesBuilt = bandFiles()
       Similarity.appendToEmbIndex(spark, batch, "eidx",
         numBands = 4, bitsPerBand = 4, dim = 4)
       val before = probe()
       assert(before === Set((201L, 1L), (201L, 101L), (202L, 2L), (202L, 102L)),
         s"probe must see corpus and appended vectors: $before")
       val filesBefore = bandFiles()
-      assert(filesBefore > 4, s"expected the append to accumulate files, got $filesBefore")
+      assert(filesBefore > filesBuilt,
+        s"expected the append to accumulate files, got $filesBuilt -> $filesBefore")
 
       Similarity.compactEmbIndex(spark, "eidx", loc, buckets = 4)
-      assert(bandFiles() <= 4,
-        s"compaction should leave at most one file per bucket, got ${bandFiles()}")
+      // the bucket id is the file name's `_000NN` suffix
+      val bucketIds = bandFileNames().map(_.split('.').head.takeRight(5))
+      assert(bandFiles() <= 4 && bucketIds.distinct.size == bucketIds.size,
+        s"compaction should leave at most one file per bucket, got ${bandFileNames()}")
       assert(probe() === before, "compaction changed the pair set")
       // compacted files keep the bucket layout: probe still merges in place
       val plan = Similarity.embIndexJoin(spark,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, PersistedIndex, Similarity}
+import graft.operators.{Bucketing, Dedup, IndexDrift, PersistedIndex, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,10 @@ import org.apache.spark.sql.functions._
   * directories), re-register in a fresh catalog — then the probe answers
   * exactly as before compaction, the drift stats are unchanged, the kind
   * is still detected at the location, and a tombstone delete removes
-  * exactly the given ids from every subtable. */
+  * exactly the given ids from every subtable. Along the way an append
+  * adds at most one file per bucket to each subtable, and the drift
+  * stats equal a brute-force oracle after the append, the compaction and
+  * the delete. */
 class PersistedIndexSpec extends SparkSpec {
 
   import PersistedIndexSpec.Case
@@ -70,6 +73,37 @@ class PersistedIndexSpec extends SparkSpec {
   private def tables(kind: PersistedIndex.Kind, name: String): Seq[String] =
     (kind.subtables.map(_.sub) ++ kind.tiers.map(_.sub)).map(s => s"${name}_$s")
 
+  /** Parquet data files of each subtable's committed version. */
+  private def files(kind: PersistedIndex.Kind, loc: String): Map[String, Int] =
+    kind.subtables.map { t =>
+      val dir = new java.io.File(new java.net.URI(Bucketing.currentDir(spark, loc, t.sub)).getPath)
+      t.sub -> Option(dir.listFiles).toSeq.flatten.count(_.getName.startsWith("part-"))
+    }.toMap
+
+  /** The drift stats by brute force: the census key of every collected
+    * primary row, counted on the driver, against the collected census. */
+  private def driftOracle(kind: PersistedIndex.Kind, name: String): IndexDrift.Stats = {
+    val live = spark.table(s"${name}_${kind.primary.sub}").select(kind.censusKey).collect()
+      .groupBy(_.get(0)).map { case (k, rows) => k -> rows.length.toLong }
+    val build = spark.table(s"${name}_${kind.census.sub}").collect()
+      .map(r => r.get(0) -> r.getLong(1)).toMap
+    val (nBuild, nLive) = (build.values.sum, live.values.sum)
+    val parts = (build.keySet ++ live.keySet).toSeq
+    def share(m: Map[Any, Long], k: Any, n: Long) = m.getOrElse(k, 0L).toDouble / math.max(n, 1L)
+    val tvd = parts.map(k => math.abs(share(live, k, nLive) - share(build, k, nBuild))).sum / 2
+    val growth = parts.map(k => share(live, k, nLive) /
+      math.max(share(build, k, nBuild), 1.0 / math.max(nBuild, 1L)))
+    IndexDrift.Stats(tvd, growth.max, nBuild, nLive)
+  }
+
+  private def assertDriftIsOracle(kind: PersistedIndex.Kind, name: String, when: String): Unit = {
+    val got = PersistedIndex.driftStats(spark, kind, name)
+    val want = driftOracle(kind, name)
+    assert(got.nBuild === want.nBuild && got.nLive === want.nLive &&
+      math.abs(got.tvd - want.tvd) < 1e-12 && math.abs(got.maxGrowth - want.maxGrowth) < 1e-12,
+      s"$when: driftStats $got != oracle $want")
+  }
+
   cases.foreach { c =>
     test(s"${c.label} index: append, compact x2, fresh-catalog register keep probe, " +
         "drift and detection; a tombstone delete removes exactly its ids") {
@@ -82,7 +116,14 @@ class PersistedIndexSpec extends SparkSpec {
           .as[Long].collect().toSet
       try {
         c.build(name, loc)
+        val built = files(c.kind, loc)
         c.append(name)
+        val appended = files(c.kind, loc)
+        c.kind.subtables.foreach { t =>
+          assert(appended(t.sub) - built(t.sub) <= Buckets,
+            s"${t.sub}: one append wrote ${appended(t.sub) - built(t.sub)} files into $Buckets buckets")
+        }
+        assertDriftIsOracle(c.kind, name, "after the append")
         val before = c.probe(name)
         assert(before.nonEmpty, "the probe must pair with the corpus and the appended rows")
         val drift = PersistedIndex.driftStats(spark, c.kind, name)
@@ -105,6 +146,7 @@ class PersistedIndexSpec extends SparkSpec {
         assert(after.nBuild === drift.nBuild && after.nLive === drift.nLive, s"$drift -> $after")
         assert(math.abs(after.tvd - drift.tvd) < 1e-12 &&
           math.abs(after.maxGrowth - drift.maxGrowth) < 1e-12, s"$drift -> $after")
+        assertDriftIsOracle(c.kind, name, "after the compaction")
 
         val tomb = c.tombstones().toSet
         val idsBefore = c.kind.subtables.map(t => t.sub -> ids(t.sub)).toMap
@@ -116,6 +158,7 @@ class PersistedIndexSpec extends SparkSpec {
         }
         assert(c.probe(name) === before.filterNot(p => tomb(p._2)),
           "the delete must remove exactly the deleted ids' pairs")
+        assertDriftIsOracle(c.kind, name, "after the delete")
         assert(PersistedIndex.kindsAt(spark, loc) === Seq(c.kind))
       } finally all.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }

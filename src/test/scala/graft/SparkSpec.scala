@@ -10,6 +10,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** Spark jobs started while `body` runs, counted by a listener over a
+    * drained bus — on small driver-bound paths, jobs are the cost. */
+  def jobsIn(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftnative.TaskMetricsProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graftnative.TaskMetricsProbe.drain(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def afterAll(): Unit = super.afterAll()
 }
 

@@ -47,6 +47,18 @@ print(f'{os.environ["W"]}: correct={r["correct"]} failed={r["failed"]}/{r["attem
 sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)
 EOF
 done
+# one traced index-ingest run: its job, file and codegen counts show a
+# regression of the batch path without an A/B (40 jobs, 24 files and
+# 0 s of recompiles per warm pass when this was added)
+LINE=$(python3 perfbench/run.py --workload index-ingest --seed 1 --seconds 1 --trace 1 | tail -n 1)
+LINE="$LINE" python3 - <<'EOF'
+import json, os, sys
+r = json.loads(os.environ["LINE"])
+m = r["metrics"]
+print("index-ingest traced: " + ", ".join(
+    f'{k}={m[k]["value"]:g}' for k in ("driver.jobs", "index.files", "driver.codegen_compile_s")))
+sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)
+EOF
 
 echo "== 4/6 Verify + DuckDB oracle @ $SF_CORRECT =="
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} sbt -batch "runMain graft.Verify $SF_CORRECT $OUT/verify"
