@@ -53,7 +53,7 @@ object IndexDrift {
     * side of any partition). Either side may repeat a partition; the
     * output is bounded by the partition count, so collecting it is
     * cheap. */
-  private[graft] def counts(live: DataFrame, build: DataFrame, partCol: String): DataFrame =
+  private def counts(live: DataFrame, build: DataFrame, partCol: String): DataFrame =
     live.select(col(partCol), lit(0L).as("n_build"), col("n_live").cast("long").as("n_live"))
       .unionByName(build.select(col(partCol), col("n_build").cast("long").as("n_build"),
         lit(0L).as("n_live")))
@@ -194,22 +194,17 @@ object IndexDrift {
           s""""price_source":"index_drift_scales.json"""")
   }
 
-  /** Stats over per-partition (n_build, n_live) counts. tvd =
-    * ½·Σ|live − build| share (the tightest bound on how far ANY
-    * per-partition cost model is off); maxGrowth = the hottest
-    * partition's share inflation (the skew form — one region absorbing a
-    * hot stream while TVD stays low); 0 for no partitions. */
-  def statsOf(counts: Seq[(Long, Long)]): Stats = {
-    val sh = shares(counts)
-    Stats(sh.map { case (bs, ls, _) => math.abs(ls - bs) }.sum / 2.0,
-      sh.map(_._3).maxOption.getOrElse(0.0), counts.map(_._1).sum, counts.map(_._2).sum)
-  }
-
-  /** (tvd, maxGrowth, nBuild, nLive) of a [[report]] frame, by
-    * [[statsOf]] over its counts. */
+  /** (tvd, maxGrowth, nBuild, nLive) of a [[report]] frame, driver-side
+    * over its census-bounded counts. tvd = ½·Σ|live − build| share (the
+    * tightest bound on how far ANY per-partition cost model is off);
+    * maxGrowth = the hottest partition's share inflation (the skew form —
+    * one region absorbing a hot stream while TVD stays low); 0 for no
+    * partitions. */
   def stats(rep: DataFrame): (Double, Double, Long, Long) = {
-    val s = statsOf(rep.select(col("n_build"), col("n_live")).collect().toSeq
-      .map(r => (r.getLong(0), r.getLong(1))))
-    (s.tvd, s.maxGrowth, s.nBuild, s.nLive)
+    val counts = rep.select(col("n_build"), col("n_live")).collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val sh = shares(counts)
+    (sh.map { case (bs, ls, _) => math.abs(ls - bs) }.sum / 2.0,
+      sh.map(_._3).maxOption.getOrElse(0.0), counts.map(_._1).sum, counts.map(_._2).sum)
   }
 }

@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   * ([[Similarity.writeEmbIndex]]) and the IVF cell index
   * ([[Similarity.writeCellIndex]]):
   *
-  *   - write: each bucketed subtable shuffled by its bucket key (one
-  *     file per bucket) through [[Bucketing]] (versioned when external),
-  *     then the build-time census read back from the just-written
-  *     primary subtable (no second hashing pass);
+  *   - write: each bucketed subtable shuffled by its bucket key (at
+  *     most ⌈cores / buckets⌉ files per bucket) through [[Bucketing]]
+  *     (versioned when external), then the build-time census read back
+  *     from the just-written primary subtable (no second hashing pass);
   *   - register: DDL over the highest committed version of each
   *     subtable; each optional small tier re-attaches if its directory
   *     exists and is dropped from the catalog otherwise;
@@ -116,8 +116,14 @@ object PersistedIndex {
   def write(kind: Kind, name: String, buckets: Int, location: Option[String],
       rows: Seq[DataFrame], small: Seq[(Tier, DataFrame)] = Nil): Unit = {
     val spark = rows.head.sparkSession
+    // one shuffle by bucket key into a multiple of the bucket count: a
+    // task's rows share one bucket (pmod(h, k·b) mod b = pmod(h, b)), so
+    // the build writes ⌈cores / buckets⌉ files per bucket at most, and
+    // fewer buckets than cores still write on every core
+    val parts = buckets * math.max(1,
+      (spark.sparkContext.defaultParallelism + buckets - 1) / buckets)
     kind.subtables.zip(rows).foreach { case (t, subRows) =>
-      val df = subRows.repartition(buckets, col(t.key)) // one file per bucket, as append
+      val df = subRows.repartition(parts, col(t.key))
       location match {
         case Some(l) => Bucketing.writeBucketedExternal(df, table(name, t.sub), t.key,
           buckets, sortKey = Some(t.key), location = l, sub = t.sub)
@@ -220,34 +226,23 @@ object PersistedIndex {
   def hasCensus(spark: SparkSession, kind: Kind, name: String): Boolean =
     spark.catalog.tableExists(table(name, kind.census.sub))
 
-  /** The drift inputs: one (censusPart, n_live = 1) row per primary row
-    * (build + every append), and the build census. */
-  private def driftSides(spark: SparkSession, kind: Kind,
-      name: String): (DataFrame, DataFrame) = {
+  /** Per-partition drift report: live census partitions of the primary
+    * subtable (build + every append) against the build census. Output
+    * (censusPart, n_build, n_live, build_share, live_share, growth). */
+  def driftReport(spark: SparkSession, kind: Kind, name: String): DataFrame = {
     require(hasCensus(spark, kind, name),
       s"$name has no build-time ${kind.form} census — the index predates drift " +
         s"detection; rebuild with ${kind.writer} to enable it")
-    (spark.table(table(name, kind.primary.sub))
-        .select(kind.censusKey.as(kind.censusPart), lit(1L).as("n_live")),
-      spark.table(table(name, kind.census.sub)))
+    val live = spark.table(table(name, kind.primary.sub))
+      .select(kind.censusKey.as(kind.censusPart), lit(1L).as("n_live"))
+    IndexDrift.report(live, spark.table(table(name, kind.census.sub)), kind.censusPart)
   }
 
-  /** Per-partition drift report: live census partitions of the primary
-    * subtable against the build census. Output (censusPart, n_build,
-    * n_live, build_share, live_share, growth). */
-  def driftReport(spark: SparkSession, kind: Kind, name: String): DataFrame = {
-    val (live, build) = driftSides(spark, kind, name)
-    IndexDrift.report(live, build, kind.censusPart)
-  }
-
-  /** [[driftReport]]'s scalars from the same one aggregation — the
-    * arrival verbs' preflight: one scan of the primary's key column, two
-    * Spark jobs (the shuffle and the collect), arithmetic on the driver. */
-  def driftStats(spark: SparkSession, kind: Kind, name: String): IndexDrift.Stats = {
-    val (live, build) = driftSides(spark, kind, name)
-    IndexDrift.statsOf(IndexDrift.counts(live, build, kind.censusPart).collect().toSeq
-      .map(r => (r.getLong(1), r.getLong(2))))
-  }
+  /** [[driftReport]]'s scalars — the arrival verbs' preflight: one scan
+    * of the primary's key column in one aggregation, collected; the
+    * arithmetic runs on the driver over the local report. */
+  def driftStats(spark: SparkSession, kind: Kind, name: String): IndexDrift.Stats =
+    IndexDrift.Stats.tupled(IndexDrift.stats(driftReport(spark, kind, name)))
 
   def stale(spark: SparkSession, kind: Kind, name: String, tvdThreshold: Double,
       maxGrowthThreshold: Double): Boolean =
