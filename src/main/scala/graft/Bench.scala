@@ -632,9 +632,8 @@ object Bench {
         (merged, improved)
       }
 
-    // fold this run's clean rows into the monotone baseline
-    updateBaseline(results, machine.factor, sfDir,
-      readRef(BaselinePath) /* prior INCLUDING other-sf guard inside */)
+    // fold this run's clean rows into the monotone baseline (not a subset's)
+    foldBaseline(results, machine.factor, sfDir, only)
 
     // final emission: re-emit after the re-run merge — the driver's
     // tail-parse takes the LAST line. Stop Spark first so its shutdown
@@ -828,19 +827,26 @@ object Bench {
       improved)
   }
 
-  /** Monotone update of [[BaselinePath]] from this run: per row, a
+  /** Monotone update of `path` ([[BaselinePath]]) from this run: per row, a
     * bytes-matching entry only ever goes DOWN (min of the normalized
     * medians — best-known-clean), a byte-signature CHANGE (plan/code
     * change) replaces the entry with this run's measurement, and rows
-    * this run didn't measure carry over verbatim (subset runs can't
-    * drop history — the ScalingBench merge contract). Rows flagged
+    * this run didn't measure carry over verbatim (a run that skipped
+    * rows can't drop history — the ScalingBench merge contract). Rows flagged
     * contended are excluded; runs at another sf, or without a machine
-    * probe, don't touch the file. */
-  def updateBaseline(results: Seq[QueryResult], machineFactor: Double,
-                     sfDir: String, prior: Option[BenchRef]): Unit =
-    updateBaselineAt(results, machineFactor, sfDir, prior, BaselinePath)
+    * probe, don't touch the file. A `SPARK_GRAFT_BENCH_ONLY` subset run
+    * (`only` set) leaves it byte-identical and prints one line saying so:
+    * such runs are local iteration loops, often on a box whose numbers do
+    * not compare with the baseline's. */
+  def foldBaseline(results: Seq[QueryResult], machineFactor: Double,
+                   sfDir: String, only: Option[Seq[String]],
+                   path: String = BaselinePath): Unit =
+    if (only.isDefined)
+      System.err.println(s"[bench] SPARK_GRAFT_BENCH_ONLY subset run: $path not updated")
+    else updateBaselineAt(results, machineFactor, sfDir,
+      readRef(path) /* prior INCLUDING other-sf guard inside */, path)
 
-  /** [[updateBaseline]] against an explicit path (spec hook). */
+  /** [[foldBaseline]]'s merge against an explicit prior and path. */
   def updateBaselineAt(results: Seq[QueryResult], machineFactor: Double,
                        sfDir: String, prior: Option[BenchRef],
                        path: String): Unit = {
@@ -871,7 +877,7 @@ object Bench {
     def jmap(f: ((String, (Double, Long, Long))) => String): String =
       all.map(e => "\"" + e._1 + "\":" + f(e)).mkString("{", ",", "}")
     val json = s"""{"metric":"baseline","machine_factor":1.0,"sf":"$sfDir",""" +
-      s""""source":"monotone min-merge of clean runs (Bench.updateBaseline)",""" +
+      s""""source":"monotone min-merge of clean runs (Bench.foldBaseline)",""" +
       s""""queries":${jmap(e => Json.num(e._2._1))},""" +
       s""""shuffle_write_b":${jmap(_._2._2.toString)},""" +
       s""""shuffle_read_b":${jmap(_._2._3.toString)}}"""

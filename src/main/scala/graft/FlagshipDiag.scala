@@ -10,14 +10,14 @@ import graft.operators.KMeans
   *
   *   scan+cache — the features scan and cache materialization;
   *   assign     — nearest-centroid argmin over the cached features;
-  *   window     — `KMeans.sampleCandidates`: the per-cluster candidate
-  *                window (row_number ≤ s; WindowGroupLimit bounds its
-  *                shuffle to p·k·s rows, so this should stay flat) and
-  *                the collect of the ≤ k·s candidates;
-  *   medoid     — `KMeans.scoreCandidates`: the members × broadcast
-  *                candidates scoring aggregation (O(n·s) distance folds —
-  *                the linear-work term that must dominate at scale) and
-  *                the collect of the k·s totals.
+  *   candidates — `KMeans.sampleCandidates`: the map-only pass keeping
+  *                each partition's first s members per cluster (O(n log s),
+  *                no exchange) and the driver merge of the ≤ p·k·s rows;
+  *   medoid     — `KMeans.scoreCandidates`: the map-only pass summing
+  *                each partition's distances to the closure-borne
+  *                candidates (O(n·s) distance folds — the linear-work term
+  *                that must dominate at scale) and the driver merge of
+  *                one partial-sum array per partition.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dir> runMain graft.FlagshipDiag
   * Prints one JSON line per stage. */
@@ -48,7 +48,7 @@ object FlagshipDiag {
       members.write.format("noop").mode("overwrite").save(); members.count()
     }
     val candidates = KMeans.sampleCandidates(members, s)
-    time("window_candidates") { KMeans.sampleCandidates(members, s).size.toLong }
+    time("candidates") { KMeans.sampleCandidates(members, s).size.toLong }
     time("medoid") { KMeans.scoreCandidates(members, candidates, hw).size.toLong }
     time("full_iteration") {
       val m2 = KMeans.assignWithFeatures(df, centroids, hw)

@@ -17,8 +17,8 @@ import graft.operators.KMeans
   *
   *   - `sec`: min-wall of the centroid update over
   *     `SPARK_GRAFT_SCALE_REPS` (`all`: the scoring self-join +
-  *     id→features resolution; sampled: the candidate and scoring
-  *     collects of `KMeans.sampledMedoidFeatures`);
+  *     id→features resolution; sampled: the two map-only passes of
+  *     `KMeans.sampledMedoidFeatures`, candidates then their totals);
   *   - `objective`: Σ_i d(xᵢ, c_cluster(i)) under the strategy's chosen
   *     centroids — the k-medoids objective itself, EXACT for every
   *     strategy (each sampled candidate is scored against ALL members,

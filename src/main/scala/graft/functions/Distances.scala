@@ -31,12 +31,16 @@ object Distances {
   }
 
   /** Scala form on feature records — used by the driver-side convergence
-    * test (A9, `Cluster.java:355-382`) and typed-path kernels. */
+    * test (A9, `Cluster.java:355-382`) and typed-path kernels (the sampled
+    * k-medoids update). Same operations in the same order as the Column
+    * form, so the two are bit-identical on every input: deltas are taken
+    * in double (no Int overflow), and a null language matches nothing, as
+    * SQL's `null = x` does. */
   def weightedDistance(a: TweetFeatures, b: TweetFeatures, hashtagWeight: Double): Double = {
-    val dt = (a.time - b.time).toDouble
-    val dh = (a.numOfHashtags - b.numOfHashtags) * hashtagWeight
-    val dl = if (a.language == b.language) 0.0 else 1.0
-    val dv = (a.hasVideo - b.hasVideo).toDouble
+    val dt = a.time.toDouble - b.time.toDouble
+    val dh = (a.numOfHashtags.toDouble - b.numOfHashtags.toDouble) * hashtagWeight
+    val dl = if (a.language != null && a.language == b.language) 0.0 else 1.0
+    val dv = a.hasVideo.toDouble - b.hasVideo.toDouble
     math.sqrt(dt * dt + dh * dh + dl * dl + dv * dv)
   }
 

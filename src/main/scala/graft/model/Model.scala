@@ -29,8 +29,8 @@ final case class Assignment(id: Long, cluster: Int)
   *    fits the n² self-join; at 100 TB use [[SampledMedoid]] or [[Mean]].
   *  - [[SampledMedoid]] — s candidates per cluster drawn deterministically
   *    (id-hash), each scored against ALL members: O(n·s) instead of O(n²).
-  *    The ≤ k·s candidates are collected and broadcast, so the members are
-  *    never shuffled (`KMeans.sampledMedoidFeatures`).
+  *    Two map-only passes per iteration, with the ≤ k·s candidates in the
+  *    task closure, so nothing is shuffled (`KMeans.sampledMedoidFeatures`).
   *  - [[Mean]] — classic k-means mean centroid (language = per-cluster mode);
   *    O(n), one shuffle, the true scale path.
   *

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 import graft.functions.Distances
 import graft.model._
 
@@ -17,9 +18,9 @@ import graft.model._
   *     join, and fully inside whole-stage codegen);
   *   - medoid update: for the exact [[Medoid]], ONE shuffle on the cluster
   *     key (self-join + partial aggregation) instead of n² RPCs; for
-  *     [[SampledMedoid]], two driver collects of ≤ k·s rows (candidates,
-  *     then their totals against a broadcast of the candidates), with the
-  *     members never shuffled.
+  *     [[SampledMedoid]], two map-only passes over the members with the
+  *     centroids and candidates in the task closure (no exchange, no
+  *     broadcast), each collecting ≤ p·k·s values to the driver.
   *
   * Deviations from reference defects, all per SURVEY §2.8: true argmin
   * (ref. never updates `minDistance`, `Cluster.java:109-115`), true medoid
@@ -64,14 +65,15 @@ object KMeans {
       hashtagWeight: Double = 0.8): DataFrame =
     assignWithFeatures(features, centroids, hashtagWeight).select("id", "cluster")
 
-  /** Iteration-stable assignment for [[run]]'s loop: the same
+  /** Iteration-stable assignment for [[run]] (the exact and mean
+    * updates and every strategy's final assignment): the same
     * arithmetic as [[assignWithFeatures]], but the k centroids ride a
     * ONE-ROW broadcast frame (BroadcastNestedLoopJoin of exactly one
     * row) instead of being inlined as literals. Inlined literals bake
     * the centroid VALUES into the generated source, so every iteration
     * — and the final assignment — compiles and JITs a fresh set of
     * whole-stage-codegen classes for the entire fused pipeline above it
-    * (assign → candidate window; assign → medoid scoring join): measured at
+    * (assign → medoid update; assign → write): measured at
     * sf0.1/local[32], iteration 1 of a cold flagship run spends
     * 5.8 s where the warmed identical plan runs 1.4 s, and a bench
     * chunk re-pays that warm-up on every rep once neighboring queries
@@ -124,6 +126,9 @@ object KMeans {
       l("time"), l("numOfHashtags"), l("language"), l("hasVideo"),
       r("time"), r("numOfHashtags"), r("language"), r("hasVideo"), hw)
 
+  private val HashP = 1000000007L
+  private val HashMul = 2654435761L
+
   /** The multiplicative-hash ordering key, factored through pmod so it
     * cannot overflow at ANY long id: (id·2654435761) mod P computed as
     * ((id mod P)·(2654435761 mod P)) mod P — identical values by modular
@@ -132,61 +137,119 @@ object KMeans {
     * ARITHMETIC_OVERFLOW under ANSI mode once ids reached the ×64
     * replica range (~8.8e9 · 2.65e9 > Long.Max) — caught by the q00
     * scaling run, invisible at oracle scales. */
-  private def seedHashOrder: Column =
-    pmod(pmod(col("id"), lit(1000000007L)) * lit(2654435761L % 1000000007L),
-      lit(1000000007L))
+  private[graft] def seedHashOrder: Column =
+    pmod(pmod(col("id"), lit(HashP)) * lit(HashMul % HashP), lit(HashP))
+
+  /** [[seedHashOrder]] of one id, for the typed sampled update. */
+  private[graft] def hashOrder(id: Long): Long =
+    Math.floorMod(id, HashP) * (HashMul % HashP) % HashP
+
+  /** The sampled update's candidate order: (id-hash, id). */
+  private val byHashOrder: Ordering[TweetFeatures] =
+    Ordering.by((f: TweetFeatures) => (hashOrder(f.id), f.id))
+
+  /** Nearest centroid of one row: [[assignWithFeatures]]'s argmin in
+    * Scala, with the same distance arithmetic and the first index winning
+    * a tie. */
+  private[graft] def nearest(f: TweetFeatures, centroids: Array[TweetFeatures],
+      hashtagWeight: Double): Int = {
+    var best = 0
+    var bestD = Distances.weightedDistance(f, centroids(0), hashtagWeight)
+    var i = 1
+    while (i < centroids.length) {
+      val d = Distances.weightedDistance(f, centroids(i), hashtagWeight)
+      if (d < bestD) { best = i; bestD = d }
+      i += 1
+    }
+    best
+  }
+
+  /** A members frame (`cluster` + the feature columns) as the typed input
+    * of the sampled update. */
+  private def typedMembers(members: DataFrame): Dataset[(Int, TweetFeatures)] = {
+    import members.sparkSession.implicits._
+    members.select(col("cluster"), struct(featureCols.map(col): _*)).as[(Int, TweetFeatures)]
+  }
+
+  /** Each cluster's first `s` members in (id-hash, id) order, by a bounded
+    * max-heap per cluster. */
+  private def firstPerCluster(ms: Iterator[(Int, TweetFeatures)],
+      s: Int): Seq[(Int, TweetFeatures)] = {
+    val heaps = mutable.HashMap.empty[Int, mutable.PriorityQueue[TweetFeatures]]
+    ms.foreach { case (c, f) =>
+      val h = heaps.getOrElseUpdate(c, mutable.PriorityQueue.empty(byHashOrder))
+      if (h.size < s) h += f
+      else if (byHashOrder.lt(f, h.head)) { h.dequeue(); h += f }
+    }
+    heaps.toSeq.flatMap { case (c, h) => h.iterator.map(c -> _) }
+  }
+
+  /** Sampled update, pass A — the candidates: each map task keeps its
+    * partition's first `s` members per cluster in (id-hash, id) order;
+    * the driver merges the ≤ p·k·s rows into the global first `s`. */
+  private def candidatesOf(members: Dataset[(Int, TweetFeatures)],
+      s: Int): Seq[(Int, TweetFeatures)] = {
+    import members.sparkSession.implicits._
+    val local = members.mapPartitions(ms => firstPerCluster(ms, s).iterator).collect()
+    firstPerCluster(local.iterator, s)
+      .sortBy { case (c, f) => (c, hashOrder(f.id), f.id) }
+  }
+
+  /** Sampled update, pass B — each candidate's total distance to ALL
+    * members of its cluster: each map task sums its partition's distances
+    * per candidate (the candidates ride the task closure), the driver adds
+    * the partials in partition order and takes the argmin by (total, id)
+    * per cluster. */
+  private def medoidsOf(members: Dataset[(Int, TweetFeatures)],
+      candidates: Seq[(Int, TweetFeatures)], hw: Double): Map[Int, TweetFeatures] = {
+    import members.sparkSession.implicits._
+    import Ordering.Double.TotalOrdering
+    val cands = candidates.toArray
+    val slots = cands.indices.groupBy(cands(_)._1).map { case (c, js) => c -> js.toArray }
+    val partials = members.mapPartitions { ms =>
+      val sums = new Array[Double](cands.length)
+      ms.foreach { case (c, m) =>
+        slots.get(c).foreach(_.foreach(j =>
+          sums(j) += Distances.weightedDistance(cands(j)._2, m, hw)))
+      }
+      Iterator.single(sums)
+    }.collect()
+    val totals = new Array[Double](cands.length)
+    partials.foreach(p => cands.indices.foreach(j => totals(j) += p(j)))
+    slots.map { case (c, js) => c -> cands(js.minBy(j => (totals(j), cands(j)._2.id)))._2 }
+  }
 
   /** Sampled medoid, step 1 — the candidates: the first `sampleSize`
     * members of each cluster in (id-hash, id) order, collected with their
-    * features (≤ k·s rows). One `row_number() ≤ s` window: Spark's
-    * WindowGroupLimit cuts every map partition to s rows per cluster
-    * BEFORE the exchange, so at most p·k·s rows cross it whatever the
-    * cluster sizes (for s within `spark.sql.optimizer.windowGroupLimitThreshold`,
-    * 1000 by default). */
-  def sampleCandidates(members: DataFrame, sampleSize: Int): Seq[(Int, TweetFeatures)] = {
-    import members.sparkSession.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster"))
-      .orderBy(seedHashOrder, col("id"))
-    members.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= sampleSize)
-      .select(col("cluster"), struct(featureCols.map(col): _*))
-      .as[(Int, TweetFeatures)].collect().toSeq
-  }
+    * features (≤ k·s rows). One map-only pass (pass A of the sampled
+    * update): no exchange, ≤ p·k·s rows reach the driver. */
+  def sampleCandidates(members: DataFrame, sampleSize: Int): Seq[(Int, TweetFeatures)] =
+    candidatesOf(typedMembers(members), sampleSize)
 
   /** Sampled medoid, steps 2–3 — each candidate's total distance to ALL
     * members of its cluster, then per cluster the candidate with the
-    * smallest (total, id), picked on the driver.
-    *
-    * The candidates ride a broadcast local relation (their values stay out
-    * of the generated code, as in [[assignWithFeaturesParam]], so every
-    * iteration reuses the same compiled classes). The distance sums run in
-    * the MEMBERS' own partitioning with map-side partial aggregation: the
-    * members never cross an exchange, only ≤ p·k·s partial totals do, and
-    * the driver collects k·s totals. Balance comes from how the members
-    * are partitioned (see [[run]]). */
+    * smallest (total, id), picked on the driver. One map-only pass (pass B
+    * of the sampled update) in the MEMBERS' own partitioning: the
+    * candidates travel in the task closure (not in generated code, so
+    * every iteration reuses the same compiled classes), the members never
+    * cross an exchange, and the driver collects one partial-sum array per
+    * partition. Balance comes from how the members are partitioned (see
+    * [[run]]). */
   def scoreCandidates(members: DataFrame, candidates: Seq[(Int, TweetFeatures)],
-      hashtagWeight: Double = 0.8): Map[Int, TweetFeatures] = {
-    import members.sparkSession.implicits._
-    import Ordering.Double.TotalOrdering
-    val totals = members
-      .join(broadcast(candidates.toDF("c_cluster", "c")), col("cluster") === col("c_cluster"))
-      .groupBy(col("c_cluster"), col("c").getField("id"))
-      .agg(sum(tweetDist(hashtagWeight)(col("c").getField, col)))
-      .as[(Int, Long, Double)].collect()
-    val byId = candidates.map { case (_, f) => f.id -> f }.toMap
-    totals.groupBy(_._1).map { case (c, ts) =>
-      c -> byId(ts.minBy { case (_, id, total) => (total, id) }._2)
-    }
-  }
+      hashtagWeight: Double = 0.8): Map[Int, TweetFeatures] =
+    medoidsOf(typedMembers(members), candidates, hashtagWeight)
 
   /** A3 at scale — medoid over a deterministic candidate subset (id-hash
     * order), each candidate still scored against ALL members: O(n·s) work,
-    * two collects of ≤ k·s rows, no shuffle of the members. Clusters with
-    * no members are absent from the map. */
+    * two map-only passes, no shuffle. Clusters with no members are absent
+    * from the map. */
   def sampledMedoidFeatures(members: DataFrame, sampleSize: Int,
       hashtagWeight: Double = 0.8): Map[Int, TweetFeatures] =
-    scoreCandidates(members, sampleCandidates(members, sampleSize), hashtagWeight)
+    sampled(typedMembers(members), sampleSize, hashtagWeight)
+
+  private def sampled(members: Dataset[(Int, TweetFeatures)], s: Int,
+      hw: Double): Map[Int, TweetFeatures] =
+    medoidsOf(members, candidatesOf(members, s), hw)
 
   /** [[sampledMedoidFeatures]] as the `(cluster, medoid_id)` frame that
     * [[medoids]] returns. Computed eagerly; the frame is local. */
@@ -236,22 +299,29 @@ object KMeans {
       throw new IllegalArgumentException(s"seed id $id not found in features")))
   }
 
-  /** One centroid-update round: the exact medoid yields member ids to
-    * resolve; SampledMedoid yields the chosen members' features directly;
-    * Mean yields synthetic (non-member) centroids with id = -(cluster+1).
-    * Empty clusters keep their previous centroid. */
-  private def updateCentroids(members: DataFrame, features: Dataset[TweetFeatures],
+  /** One centroid-update round over the cached features `df`: the exact
+    * medoid yields member ids to resolve; SampledMedoid yields the chosen
+    * members' features directly; Mean yields synthetic (non-member)
+    * centroids with id = -(cluster+1). Empty clusters keep their previous
+    * centroid. */
+  private def updateCentroids(df: DataFrame, features: Dataset[TweetFeatures],
       prev: Seq[TweetFeatures], cfg: KMeansConfig): Seq[TweetFeatures] = {
+    import features.sparkSession.implicits._
+    val hw = cfg.hashtagWeight
+    def members = assignWithFeaturesParam(df, prev, hw)
     val rows = cfg.strategy match {
       case Mean => meanCentroidFeatures(members)
-      case SampledMedoid(s) => sampledMedoidFeatures(members, s, cfg.hashtagWeight)
+      case SampledMedoid(s) =>
+        // a typed map over the cached features, fused into each pass's
+        // stage; the centroids ride the closure like the candidates
+        val cs = prev.toArray
+        sampled(df.as[TweetFeatures].map(f => (nearest(f, cs, hw), f)), s, hw)
       case Medoid =>
         // resolve the medoid ids to feature rows INSIDE the same job (one
         // broadcast join over the cached features) instead of a second
         // isin-filter action per iteration
-        import features.sparkSession.implicits._
         features.toDF()
-          .join(broadcast(medoids(members, cfg.hashtagWeight)), col("id") === col("medoid_id"))
+          .join(broadcast(medoids(members, hw)), col("id") === col("medoid_id"))
           .select(col("cluster"), struct(featureCols.map(col): _*).as("f"))
           .as[(Int, TweetFeatures)]
           .collect().toMap
@@ -262,13 +332,17 @@ object KMeans {
   /** The full iterative loop (§3.2): assign → update centroids → converge?
     * Features are cached across iterations (the reference re-scans HBase
     * every iteration); the convergence test (A9) runs driver-side on the
-    * k collected centroids against `cfg.convergenceLimit`.
+    * k collected centroids against `cfg.convergenceLimit`. With
+    * [[SampledMedoid]] an iteration is two map-only jobs over the cache
+    * (candidates, then their totals), each assigning the members in the
+    * same stage with [[nearest]]; the final assignment is
+    * [[assignWithFeaturesParam]]'s plan, which picks the same clusters.
     */
   def run(features: Dataset[TweetFeatures], cfg: KMeansConfig): Result = {
     val spark = features.sparkSession
-    // Spread a narrow scan across the cores before caching: the sampled
-    // medoid update BROADCASTS the candidates, so the O(n·s) distance sums
-    // run in the MEMBERS' partitioning — and a single-row-group parquet
+    // Spread a narrow scan across the cores before caching: the medoid
+    // updates run in the cached features' partitioning (the sampled
+    // update's two passes are map-only), so a single-row-group parquet
     // scan (or any under-split input) pins that compute to 1-2 tasks
     // however many cores exist (measured at sf0.1: 2.1-2.7 s per
     // iteration on one core vs ~0.15 s spread). Deterministic hash
@@ -285,8 +359,7 @@ object KMeans {
       var iter = 0
       var converged = false
       while (iter < cfg.maxIterations && !converged) {
-        val members = assignWithFeaturesParam(df, centroids, cfg.hashtagWeight)
-        val next = updateCentroids(members, features, centroids, cfg)
+        val next = updateCentroids(df, features, centroids, cfg)
         converged = centroids.zip(next).forall { case (a, b) =>
           Distances.weightedDistance(a, b, cfg.hashtagWeight) <= cfg.convergenceLimit
         }
@@ -294,7 +367,7 @@ object KMeans {
         trajectory += centroids
         iter += 1
       }
-      // the final assignment reuses the loop's generated classes too
+      // centroid-free generated code: reused across iterations and runs
       val finalAssign = assignWithFeaturesParam(df, centroids, cfg.hashtagWeight)
         .select("id", "cluster")
       Result(finalAssign, centroids, iter, converged, trajectory.toSeq)

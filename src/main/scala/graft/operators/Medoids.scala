@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * `(total, id)` struct ordering so ties deterministically break to the
   * smallest id. At 1000-executor scale the join shuffles each group to one
   * task; groups too large for O(n²) need a reduced candidate set scored
-  * without shuffling the members (see `KMeans.sampledMedoidFeatures`).
+  * in map-only passes that never shuffle the members (see
+  * `KMeans.sampledMedoidFeatures`).
   */
 object Medoids {
 

@@ -398,6 +398,28 @@ class BenchLineSpec extends SparkSpec {
     assert(Bench.readRef(path.toString).get.medians("q_a") === 4.0)
   }
 
+  test("foldBaseline: a SPARK_GRAFT_BENCH_ONLY subset run leaves the baseline byte-identical") {
+    val path = java.nio.file.Files.createTempFile("bench-baseline-subset", ".json")
+    java.nio.file.Files.write(path,
+      """{"metric":"baseline","machine_factor":1.0,"sf":"sfX","queries":{"q_a":2.0},
+        |"shuffle_write_b":{"q_a":100},"shuffle_read_b":{"q_a":100}}""".stripMargin
+        .replace("\n", "").getBytes("UTF-8"))
+    val before = java.nio.file.Files.readAllBytes(path)
+    // faster, bytes-matching: a full run would lower q_a to 1.5
+    val results = Seq(Bench.QueryResult("q_a", Seq(1.4, 1.5, 1.6), 0, 0, 100L, 100L))
+    val err = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try Bench.foldBaseline(results, 1.0, "sfX", Some(Seq("q_a")), path.toString)
+    finally System.setErr(saved)
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(path), before))
+    val lines = err.toString("UTF-8").linesIterator.toSeq
+    assert(lines === Seq(s"[bench] SPARK_GRAFT_BENCH_ONLY subset run: $path not updated"))
+    // the same rows in a full run do fold in
+    Bench.foldBaseline(results, 1.0, "sfX", None, path.toString)
+    assert(Bench.readRef(path.toString).get.medians("q_a") === 1.5)
+  }
+
   test("sf-gated refs: a smoke run at another sf never reads the sf0.1 baseline") {
     val tmp = java.nio.file.Files.createTempFile("bench-ref-sf", ".json")
     java.nio.file.Files.write(tmp,

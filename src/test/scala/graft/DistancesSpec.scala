@@ -41,7 +41,11 @@ class DistancesSpec extends SparkSpec {
     val pairs = Seq(
       (tf(1, 10, "en", 0), tf(2, 5, "tr", 1)),
       (tf(3, 0, "en", 1), tf(0, 49, "en", 0)),
-      (tf(2, 7, "tr", 1), tf(2, 7, "tr", 1)))
+      (tf(2, 7, "tr", 1), tf(2, 7, "tr", 1)),
+      // deltas beyond Int range, and SQL's null = x (never a match)
+      (tf(Int.MaxValue, Int.MaxValue, "en", 1), tf(Int.MinValue, Int.MinValue, "en", 0)),
+      (tf(Int.MinValue, 0, null, 0), tf(Int.MaxValue, 3, null, 1)),
+      (tf(5, 7, null, 0), tf(5, 7, "en", 0)))
     val df = pairs.map { case (a, b) =>
       (a.time, a.numOfHashtags, a.language, a.hasVideo,
         b.time, b.numOfHashtags, b.language, b.hasVideo)

@@ -151,14 +151,21 @@ class KMeansSpec extends SparkSpec {
     assert(KMeans.sampledMedoidFeatures(members, s) === expected)
   }
 
-  test("sampled medoid update shuffles at most 2·p·k·s records per iteration, never the members") {
+  /** Two separated 200-member clusters, in at least as many partitions
+    * as cores, so [[KMeans.run]] caches them without its repartition. */
+  private def twoClusters = {
     import spark.implicits._
-    val (k, s) = (2, 3)
     val clusterA = (1L to 200L).map(i => tf(i, (i % 5).toInt, (i % 7).toInt, "en", 0))
     val clusterB = (201L to 400L).map(i => tf(i, 50 + (i % 5).toInt, 40 + (i % 7).toInt, "tr", 1))
     val features = spark.createDataset(clusterA ++ clusterB)
-    val p = spark.sparkContext.defaultParallelism
-    assert(features.rdd.getNumPartitions >= p, "the input must not need the pre-cache repartition")
+    assert(features.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism,
+      "the input must not need the pre-cache repartition")
+    features
+  }
+
+  test("sampled medoid update shuffles at most 2·p·k·s records per iteration, never the members") {
+    val (k, s) = (2, 3)
+    val features = twoClusters
     val written = new java.util.concurrent.atomic.LongAdder
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
@@ -172,10 +179,54 @@ class KMeansSpec extends SparkSpec {
         KMeansConfig(k = k, seeds = Seq(1L, 201L), strategy = SampledMedoid(s)))
       org.apache.spark.graftnative.TaskMetricsProbe.drain(sc)
       assert(r.iterations >= 1)
-      val bound = 2L * p * k * s * r.iterations
-      assert(written.sum() <= bound,
-        s"${written.sum()} shuffle records over ${r.iterations} iterations, bound $bound " +
-          s"(${clusterA.size + clusterB.size} members)")
+      // the update's two passes are map-only: no record crosses an
+      // exchange (the bound was 2·p·k·s per iteration while the candidates
+      // came from a window and the totals from a partial aggregation)
+      assert(written.sum() === 0L,
+        s"${written.sum()} shuffle records over ${r.iterations} iterations (400 members)")
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("job budget: KMeans.run(SampledMedoid) is one resolve plus two jobs per iteration") {
+    var r: KMeans.Result = null
+    val jobs = jobsIn {
+      r = KMeans.run(twoClusters, KMeansConfig(k = 2, seeds = Seq(1L, 201L), strategy = SampledMedoid(3)))
+    }
+    assert(r.iterations === 2 && r.converged)
+    // the seed lookup, then candidates + totals per iteration; the final
+    // assignment is lazy (the window + broadcast-aggregate update ran 15)
+    assert(jobs <= 5, s"$jobs jobs over ${r.iterations} iterations")
+  }
+
+  test("sampled update: the closure's nearest centroid equals assign under exact ties") {
+    import spark.implicits._
+    // c2 duplicates c0, so every row nearest c0 ties it with c2; c1 and c3
+    // sit 2 apart in time, so rows at time 1 may tie them. The first wins.
+    val cs = Seq(tf(-1, 0, 0, "en", 0), tf(-2, 0, 5, "en", 0), tf(-3, 0, 0, "en", 0),
+      tf(-4, 2, 5, "en", 0))
+    val rows = for {
+      t <- 0 to 3; h <- 0 to 10; l <- Seq("en", "tr"); v <- 0 to 1
+    } yield tf(t * 1000L + h * 10 + v * 5 + (if (l == "tr") 1 else 0), t, h, l, v)
+    val want = KMeans.assign(rows.toDF(), cs).as[(Long, Int)].collect().toMap
+    val got = rows.map(f => f.id -> KMeans.nearest(f, cs.toArray, 0.8)).toMap
+    assert(got === want)
+    def nearestSet(f: TweetFeatures) = {
+      val d = cs.map(Distances.weightedDistance(f, _, 0.8))
+      d.indices.filter(d(_) == d.min)
+    }
+    val tied = rows.map(nearestSet).filter(_.size > 1).toSet
+    assert(tied === Set(Seq(0, 2), Seq(1, 3)), "the fixture ties c0 with c2 and c1 with c3")
+    assert(rows.forall(f => got(f.id) == nearestSet(f).head))
+    assert(!got.values.exists(_ == 2), "the later duplicate never wins")
+  }
+
+  test("sampled update: the Scala hash-order key equals seedHashOrder at the long extremes") {
+    import spark.implicits._
+    val ids = Seq(Long.MinValue, Long.MinValue + 1, -1000000008L, -1000000007L, -1L, 0L, 1L,
+      1000000006L, 1000000007L, Long.MaxValue - 1, Long.MaxValue)
+    val want = ids.toDF("id").select(col("id"), KMeans.seedHashOrder).as[(Long, Long)]
+      .collect().toMap
+    assert(ids.map(id => id -> KMeans.hashOrder(id)).toMap === want)
+    assert(want.values.forall(h => h >= 0 && h < 1000000007L))
   }
 }

@@ -47,18 +47,24 @@ print(f'{os.environ["W"]}: correct={r["correct"]} failed={r["failed"]}/{r["attem
 sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)
 EOF
 done
-# one traced index-ingest run: its job, file and codegen counts show a
-# regression of the batch path without an A/B (40 jobs, 24 files and
-# 0 s of recompiles per warm pass when this was added)
-LINE=$(python3 perfbench/run.py --workload index-ingest --seed 1 --seconds 1 --trace 1 | tail -n 1)
-LINE="$LINE" python3 - <<'EOF'
+# one traced run of index-ingest and of tweets-kmedoids: their job and
+# codegen counts show a regression of the batch path or of the k-medoids
+# loop without an A/B (per warm pass when these were added: index-ingest
+# 40 jobs, 24 files, 0 s of recompiles; tweets-kmedoids 25 jobs, 35
+# before its medoid update went map-only)
+for W in index-ingest tweets-kmedoids; do
+  LINE=$(python3 perfbench/run.py --workload "$W" --seed 1 --seconds 1 --trace 1 | tail -n 1)
+  W="$W" LINE="$LINE" python3 - <<'EOF'
 import json, os, sys
+w = os.environ["W"]
 r = json.loads(os.environ["LINE"])
 m = r["metrics"]
-print("index-ingest traced: " + ", ".join(
-    f'{k}={m[k]["value"]:g}' for k in ("driver.jobs", "index.files", "driver.codegen_compile_s")))
+keys = {"index-ingest": ("driver.jobs", "index.files", "driver.codegen_compile_s"),
+        "tweets-kmedoids": ("driver.jobs", "kmeans.iter_s", "driver.codegen_compile_s")}[w]
+print(f"{w} traced: " + ", ".join(f'{k}={m[k]["value"]:g}' for k in keys))
 sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)
 EOF
+done
 
 echo "== 4/6 Verify + DuckDB oracle @ $SF_CORRECT =="
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} sbt -batch "runMain graft.Verify $SF_CORRECT $OUT/verify"
