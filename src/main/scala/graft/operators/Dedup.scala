@@ -293,8 +293,7 @@ object Dedup {
   def minhashSignatures(corpus: DataFrame, numHashes: Int = 16): DataFrame =
     minhashSignaturesFrom(shingled(corpus), numHashes)
 
-  /** [[minhashSignatures]] over an already-shingled (doc_id, shs) frame —
-    * lets [[ensembleDedupApply]] feed every family from ONE corpus scan. */
+  /** [[minhashSignatures]] over an already-shingled (doc_id, shs) frame. */
   private def minhashSignaturesFrom(sh: DataFrame, numHashes: Int): DataFrame =
     sh.filter(size(col("shs")) > 0)
       .select(col("doc_id"),
@@ -333,17 +332,12 @@ object Dedup {
   /** Candidate pairs: docs sharing ANY full band — an equi-join on the
     * band key, NOT an all-pairs comparison. One row per pair. */
   def lshCandidates(bands: DataFrame): DataFrame =
-    lshBandJoin(bands).distinct()
-
-  /** The band equi-join alone: a pair sharing k bands appears k times.
-    * [[ensembleDedupImpl]] feeds it raw into the union whose one
-    * distinct() collapses every family's repeats together. */
-  private def lshBandJoin(bands: DataFrame): DataFrame =
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.s") === col("b.s")
           && col("a.mn") === col("b.mn") && col("a.mx") === col("b.mx")
           && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .distinct()
 
   /** Full pipeline: shingle → minhash → band → bucket-join → exact-Jaccard
     * verify. Output (id_a, id_b, jacc) with jacc ≥ minJaccard.
@@ -537,8 +531,7 @@ object Dedup {
 
   /** The winnow candidate join over pre-exploded (doc_id, fp) rows: a
     * pair sharing k fingerprints appears k times ([[winnowCandidates]]
-    * collapses them; [[ensembleDedupImpl]] leaves that to its union's
-    * one distinct()). The document-frequency cap and the fingerprint
+    * collapses them). The document-frequency cap and the fingerprint
     * self-join share ONE fp-keyed exchange.
     *
     * The textbook chain (df aggregate → df-filter join → fp self-join →
@@ -1301,6 +1294,15 @@ object Dedup {
     * [[exactDuplicateGroups]]' keep-rule, [[minhashLshPairs]] and
     * [[canonicalAssignments]]; both removal stages are semi/anti
     * equi-joins, so the whole pipeline stays bucketed at 100 TB.
+    *
+    * The near-dup stage is [[ensembleDedupApply]]'s core
+    * ([[nearDupRemovals]]) with the LSH family alone — the same pairs as
+    * [[minhashLshPairs]], verified by the same gate — so the two
+    * operators run one plan shape and a pass compiles one set of
+    * classes for both. That sharing pays only where both run in one
+    * session; alone, dedupApply plans the ensemble's stages (more
+    * classes than a plan of its own, and the prep checkpoint's
+    * barrier). OPTIMIZATION_r14.md §16 has both sides measured.
     * Output: (doc_id, source) of surviving docs. */
   def dedupApply(corpus: DataFrame, minJaccard: Double = 0.5,
       numHashes: Int = 16, rowsPerBand: Int = 4): DataFrame = {
@@ -1308,9 +1310,11 @@ object Dedup {
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
     val kept = corpus.join(keepIds, Seq("doc_id"), "left_semi")
-    val canon = canonicalAssignments(minhashLshPairs(kept, numHashes, rowsPerBand,
-      minJaccard = minJaccard))
-    val removed = canon.filter(col("doc_id") =!= col("canonical_id")).select("doc_id")
+    // spread the scan, not the join: [[spread]] sizes its input by
+    // planning it, which for the join would run the md5 aggregate's jobs
+    val removed = nearDupRemovals(
+      nearDupPrep(spread(corpus).join(keepIds, Seq("doc_id"), "left_semi"), lshOnly = true),
+      minJaccard, numHashes, rowsPerBand, starSimhash = true, simhashPlan = None)
     kept.join(removed, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("source"))
   }
@@ -1338,7 +1342,10 @@ object Dedup {
     * component's minimum id — the replayable default — but a curation
     * pipeline usually wants the best VERSION of a duplicated document
     * (the longest, the highest-quality-scored), not the first-crawled.
-    * Same LSH → connected-components spine; the survivor is instead the
+    * Its components come from [[minhashLshPairs]] → [[canonicalAssignments]]:
+    * the same verified LSH pairs [[dedupApply]] finds, through the
+    * standalone LSH path rather than dedupApply's fused band join
+    * ([[nearDupRemovals]]). The survivor is instead the
     * argmax of `score` per component (ties: lowest doc_id, so the
     * choice is still total and replayable). Docs in no component are
     * their own cluster and survive unchanged. The winner window runs
@@ -1399,33 +1406,50 @@ object Dedup {
       minJaccard: Double = 0.5): DataFrame =
     ensembleDedupImpl(corpus, minJaccard, starSimhash = false)
 
-  /** Plan of the candidate action (the pair frame [[canonicalAssignments]]
-    * caches and counts): the pinned prep frame feeds three RAW candidate
-    * streams — the LSH band join ([[lshBandJoin]]), the SimHash star
-    * edges (member→rep from the reps aggregate, rep→rep from the
-    * [[hammingBandJoin]] core run directly on the reps, which are
-    * already one row per (source, simhash)) and the winnow fingerprint
-    * join ([[winnowFpJoin]]) — into ONE union whose single distinct()
-    * is the only (id_a, id_b) aggregation before the shared Jaccard
-    * verify. A per-family distinct() before the union, or the
-    * member-level [[bandedHammingPairs]] (hash distinct, expansion
-    * joins, same-hash self-join) on the reps, would each add stages
-    * that change no output row. The exhaustive form keeps the
-    * member-level join over every doc. */
+  /** The ensemble over one [[nearDupPrep]] frame of every family's
+    * per-doc hashes; [[nearDupRemovals]] has the plan. */
   private def ensembleDedupImpl(corpus: DataFrame, minJaccard: Double,
       starSimhash: Boolean, simhashPlan: Option[(Int, Int)] = None): DataFrame = {
-    // ONE corpus scan derives every per-doc structure the ensemble needs
-    // — shingle hashes (minhash + the verify sets), word hashes
-    // (simhash), winnow fingerprints — materialized once with a lazy
-    // localCheckpoint (the dedupFamilyEval truth-pass pattern) so the
-    // three families and the shared verify read the pinned frame instead
-    // of re-reading and re-tokenizing the corpus four times. Candidates
-    // union FIRST, verify ONCE.
-    val prep = spread(corpus).select(col("doc_id"), col("source"),
-        TextHash.shingleHashes(col("text")).as("shs"),
-        TextHash.wordHashes(col("text")).as("whs"),
-        array_distinct(TextHash.winnowHashes(col("text"), 4)).as("wfps"))
+    val removed = nearDupRemovals(nearDupPrep(spread(corpus), lshOnly = false),
+      minJaccard, 16, 4, starSimhash, simhashPlan)
+    corpus.join(removed, Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("source"))
+  }
+
+  /** ONE scan derives every per-doc structure the near-dup core needs —
+    * shingle hashes (minhash + the verify sets), word hashes (simhash),
+    * winnow fingerprints — materialized once with a lazy
+    * localCheckpoint (the dedupFamilyEval truth-pass pattern) so the
+    * families and the shared verify read the pinned frame instead of
+    * re-reading and re-tokenizing the docs per consumer. `lshOnly` leaves
+    * the word hashes and fingerprints empty, so only the LSH family
+    * proposes; the checkpoint hides that from the optimizer, so the plan
+    * downstream (and every class it generates) is the ensemble's own. */
+  private def nearDupPrep(docs: DataFrame, lshOnly: Boolean): DataFrame = {
+    val shs = TextHash.shingleHashes(col("text"))
+    val none = slice(shs, 1, 0) // empty, typed and nullable as the kernels' arrays
+    // a null doc_id never pairs; dropping it here also gives both callers'
+    // prep one schema (non-null doc_id), hence one set of classes
+    docs.filter(col("doc_id").isNotNull).select(col("doc_id"), col("source"), shs.as("shs"),
+        (if (lshOnly) none else TextHash.wordHashes(col("text"))).as("whs"),
+        (if (lshOnly) none else array_distinct(TextHash.winnowHashes(col("text"), 4))).as("wfps"))
       .localCheckpoint(false)
+  }
+
+  /** The near-dup core shared by [[dedupApply]] and
+    * [[ensembleDedupApply]]: the non-canonical doc ids of a
+    * [[nearDupPrep]] frame. Every family's blocking rows come from one
+    * Generate ([[org.apache.spark.sql.graftnative.EnsembleBandRows]]) and
+    * meet in one [[taggedBandJoin]]; its raw pairs (a pair sharing k keys
+    * appears k times) go through ONE distinct(), the only (id_a, id_b)
+    * aggregation before the shared Jaccard verify, and then
+    * [[canonicalAssignments]]. A separate join or distinct() per family
+    * would add stages (and generated classes) that change no output row.
+    * The exhaustive form (`starSimhash = false`) leaves SimHash out of
+    * the fused join and proposes its member-level pairs through
+    * [[bandedHammingPairs]] over every doc. Output: (doc_id). */
+  private def nearDupRemovals(prep: DataFrame, minJaccard: Double, numHashes: Int,
+      rowsPerBand: Int, starSimhash: Boolean, simhashPlan: Option[(Int, Int)]): DataFrame = {
     // 48-bit fingerprints: at 24 bits the hamming-6 ball covers ~1.1% of
     // the space, so once a source block exceeds ~10^4 docs the RANDOM
     // pair background dominates the candidate set — measured at the ×16
@@ -1433,51 +1457,95 @@ object Dedup {
     // background (42k reps → C(42k,2)·1.1%), and generating+verifying
     // them was the entire 120 s cost. At 48 bits the random-pair
     // probability is ~5×10⁻⁸ and the rep graph holds only genuine
-    // near-dup edges. Width fixes the noise floor; the star form below
-    // fixes the dense-cluster blowup; production needs BOTH (the
-    // SCALING.md guidance, now applied to the ensemble itself).
-    val sh = simhashFrom(prep, 48)
-      .join(prep.select(col("doc_id"), col("source")), "doc_id")
-    val simhashCandidates =
-      if (starSimhash) {
-        // the simhash frame fans out to reps (consumed twice) and the
-        // member join — pin it or the explode×bits sum pipeline
-        // recomputes per consumer (the q45c round-6 lesson: 9.5→5.4 s
-        // at ×1 from exactly this checkpoint)
-        val shPinned = sh.localCheckpoint(false)
-        val reps = shPinned.groupBy(col("source"), col("simhash"))
-          .agg(min(col("doc_id")).as("rep"))
-        // rep = group min, so (rep, member) is already (id_a < id_b)-ordered
-        val memberEdges = shPinned.join(reps, Seq("source", "simhash"))
-          .filter(col("doc_id") =!= col("rep"))
-          .select(col("rep").as("id_a"), col("doc_id").as("id_b"))
-        // reps are one row per (source, simhash): the core's input as is
-        val repEdges = hammingBandJoin(
-            reps.select(col("simhash").as("h"), col("source"), col("rep")),
-            "rep", 48, 6, blockCols = Seq("source"), plan = simhashPlan)
-          .select(col("id_a"), col("id_b"))
-        memberEdges.union(repEdges)
-      } else
-        bandedHammingPairs(sh, "simhash", 48, 6, blockCols = Seq("source"),
+    // near-dup edges. Width fixes the noise floor; the star form (one
+    // rep per (source, simhash) joins, its members attach by member→rep
+    // edges: taggedBandJoin) fixes the dense-cluster blowup; production
+    // needs BOTH (the SCALING.md guidance, applied to the ensemble
+    // itself). A null source blocks nothing (SQL equality), so those
+    // docs never pair.
+    val (blockDefs, comboDefs) = hammingCombos(simhashPlan, EnsembleBits, EnsembleHamming)
+    val rows = prep.select(col("doc_id"), explode(
+        org.apache.spark.sql.graftnative.TextHashExpressions.ensembleBandRows(col("shs"),
+          col("wfps"), if (starSimhash) col("whs") else lit(null).cast("array<bigint>"),
+          col("source"),
+          numHashes, rowsPerBand, EnsembleBits, blockDefs, comboDefs)).as("r"))
+      .select((BandKey.map(c => col(s"r.$c").as(c)) ++ Seq(col("doc_id").as("id"),
+        col("r.h").as("h"))): _*)
+    val bandPairs = taggedBandJoin(rows, blockDefs)
+    val candidates = (if (starSimhash) bandPairs else bandPairs.union(
+        bandedHammingPairs(simhashFrom(prep, EnsembleBits)
+              .join(prep.select(col("doc_id"), col("source")), "doc_id"),
+            "simhash", EnsembleBits, EnsembleHamming, blockCols = Seq("source"),
             plan = simhashPlan)
-          .select(col("id_a"), col("id_b"))
-    // the LSH and winnow joins feed the union RAW: its one distinct()
-    // collapses every family's repeats in a single exchange
-    val candidates =
-      lshBandJoin(minhashBandsFrom(prep, 16, 4))
-        .union(simhashCandidates)
-        .union(winnowFpJoin(
-          prep.select(col("doc_id"), explode(col("wfps")).as("fp")), DefaultMaxFpDf))
-        .distinct()
+          .select(col("id_a"), col("id_b"))))
+      .distinct()
     val edges = jaccardVerifyFromSets(
         prep.select(col("doc_id"), array_distinct(col("shs")).as("set")),
         candidates, minJaccard)
       .select(col("id_a"), col("id_b"))
-    val removed = canonicalAssignments(edges)
+    canonicalAssignments(edges)
       .filter(col("doc_id") =!= col("canonical_id"))
       .select("doc_id")
-    corpus.join(removed, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("source"))
+  }
+
+  // the ensemble's SimHash family: 48-bit fingerprints, hamming radius 6
+  private val EnsembleBits = 48
+  private val EnsembleHamming = 6
+  // family tags of [[taggedBandJoin]]'s rows
+  private val WinnowTag = org.apache.spark.sql.graftnative.EnsembleBandRows.WinnowTag
+  private val SimhashTag = org.apache.spark.sql.graftnative.EnsembleBandRows.SimhashTag
+  private val BandKey = Seq("tag", "k1", "k2", "k3", "k4", "blk")
+
+  /** The ensemble's three candidate joins as ONE self-join over tagged
+    * blocking rows (the round-14 §10 fusion of the LSH sweep, applied
+    * across families): an LSH row keys on (band, Σ, min, max), a winnow
+    * row on its fingerprint, a SimHash row on (combo, key bits, fm, fv,
+    * source) — fm/fv are functions of the combo, so keying on them
+    * changes no match and keeps both join sides one shape.
+    *
+    * One exchange on the key and one window over (key, h) serve every
+    * family: the window's count is the winnow document-frequency cap
+    * ([[DefaultMaxFpDf]], applied to winnow rows only), its min(id) is
+    * the SimHash star's rep — members of one (source, simhash) share
+    * every combo key, so each combo partition sees the whole group, and
+    * only the rep joins. Within a key, rows pair when `a.id < b.id`; a
+    * SimHash pair must also be its first agreeing combo within the
+    * ensemble's radius under `blockDefs` (the filter of
+    * [[hammingBandJoin]]). The member→rep edges (hamming 0 by
+    * construction) come out of the same join: side b also keeps each
+    * member's combo-0 row, which pairs only with a rep of its own
+    * fingerprint — linear in the group, never member×member. The
+    * window's (key, h) sort is the merge join's key order, so nothing
+    * sorts twice; the join is pinned
+    * `merge` for the reason [[hammingBandJoin]] is: the combo and
+    * fingerprint explodes are invisible to the size estimate.
+    * Output: (id_a, id_b), raw (a pair once per shared key). */
+  private def taggedBandJoin(rows: DataFrame, blockDefs: Seq[(Int, Int)]): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy((BandKey :+ "h").map(col): _*)
+    // partitioned on the key alone, so the window and both join sides
+    // read one exchange
+    val ranked = rows.repartition(BandKey.map(col): _*)
+      .select(col("*"), count(lit(1)).over(w).as("kdf"), min(col("id")).over(w).as("rep"))
+    val simhash = col("tag") === SimhashTag
+    val isRep = col("id") === col("rep")
+    // a: every row under the cap, SimHash reps only; b: the same plus each
+    // SimHash member's combo-0 row, which pairs with its own rep only
+    val kept = (col("tag") =!= WinnowTag || col("kdf") <= DefaultMaxFpDf) && (!simhash || isRep)
+    val a = ranked.filter(kept).drop("kdf")
+    val b = ranked.filter(kept || (simhash && col("k1") === 0L)).drop("kdf")
+    val cond = (BandKey.map(c => col(s"a.$c") === col(s"b.$c"))
+      :+ (col("a.id") < col("b.id"))
+      // rep = group min, so (rep, member) is already (id_a < id_b)-ordered
+      :+ (col("a.tag") =!= SimhashTag || col("b.id") === col("b.rep")
+        || col("a.h") === col("b.h"))).reduce(_ && _)
+    // a SimHash pair keeps only its first agreeing combo (k3/k4 = fm/fv)
+    // within the radius
+    val xor = col("a.h").bitwiseXOR(col("b.h"))
+    a.as("a").join(b.hint("merge").as("b"), cond)
+      .filter(col("a.tag") =!= SimhashTag
+        || (agreeBitsOf(blockDefs, xor).bitwiseAND(col("a.k3")) === col("a.k4")
+          && bit_count(xor) <= EnsembleHamming))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
   }
 
   // ---- benchmark decontamination ------------------------------------------
@@ -1767,9 +1835,7 @@ object Dedup {
       bits: Int = 24): Long = {
     val sh = simhash(corpus, bits)
       .join(corpus.select(col("doc_id"), col("source")), "doc_id")
-    val (numBlocks, comboSize) = hammingBlockPlan(bits, maxHamming)
-    val blockDefs = blockDefsFor(bits, numBlocks)
-    val comboDefs = (0 until numBlocks).combinations(comboSize).toSeq
+    val (blockDefs, comboDefs) = hammingCombos(None, bits, maxHamming)
     val weighted = sh.groupBy(col("source"), col("simhash"))
       .agg(count(lit(1)).as("w"))
       .select(col("simhash").as("h"), col("source"), col("w"))
@@ -2129,6 +2195,14 @@ object Dedup {
         col("bd.fm").as("fm"), col("bd.fv").as("fv"))
         ++ extraCols.map(col)): _*)
 
+  /** The block table and the block combos of a hamming band plan
+    * (`plan` as [[bandedHammingPairs]] takes it). */
+  private def hammingCombos(plan: Option[(Int, Int)], bits: Int,
+      maxHamming: Int): (Seq[(Int, Int)], Seq[Seq[Int]]) = {
+    val (numBlocks, comboSize) = validatedPlan(plan, bits, maxHamming)
+    (blockDefsFor(bits, numBlocks), (0 until numBlocks).combinations(comboSize).toSeq)
+  }
+
   /** The m-bit agree bitmap of a candidate pair: bit j set iff the pair
     * agrees on every bit of block j. Compared under the carried fm/fv
     * literals it keeps exactly the pair's FIRST agreeing combo. */
@@ -2208,9 +2282,7 @@ object Dedup {
   private[graft] def hammingBandJoin(hashes: DataFrame, id: String,
       bits: Int, maxHamming: Int, blockCols: Seq[String],
       plan: Option[(Int, Int)] = None): DataFrame = {
-    val (numBlocks, comboSize) = validatedPlan(plan, bits, maxHamming)
-    val blockDefs = blockDefsFor(bits, numBlocks)
-    val comboDefs = (0 until numBlocks).combinations(comboSize).toSeq
+    val (blockDefs, comboDefs) = hammingCombos(plan, bits, maxHamming)
     val bandRows = comboBandRows(hashes, blockDefs, comboDefs,
       if (id == "h") blockCols else blockCols :+ id)
     val joinCond = (Seq(col("a.b") === col("b.b"), col("a.v") === col("b.v"))
@@ -2279,9 +2351,7 @@ object Dedup {
   private[graft] def bandedHammingProbeEdges(probe: DataFrame, base: DataFrame,
       idCol: String, hashCol: String, bits: Int, maxHamming: Int,
       blockCols: Seq[String]): DataFrame = {
-    val (numBlocks, comboSize) = hammingBlockPlan(bits, maxHamming)
-    val blockDefs = blockDefsFor(bits, numBlocks)
-    val comboDefs = (0 until numBlocks).combinations(comboSize).toSeq
+    val (blockDefs, comboDefs) = hammingCombos(None, bits, maxHamming)
     val pRows = comboBandRows(
       probe.select((Seq(col(idCol).as("pid"), col(hashCol).as("h"))
         ++ blockCols.map(col)): _*),

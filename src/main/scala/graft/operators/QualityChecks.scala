@@ -788,7 +788,8 @@ object QualityChecks {
     * are folded forward too. Compacts themselves remain single-writer by contract
     * (one maintenance job owns version creation), but a stream
     * appending while a scheduled compact runs is a supported overlap —
-    * SketchSpec pins the late-append recovery. */
+    * CliMaintainSpec's "hll store compact folds a late append into the
+    * old version instead of dropping it" pins the late-append recovery. */
   def hllStoreCompact(spark: SparkSession, dir: String): Unit = {
     def parquetFiles(f: java.io.File): Seq[String] =
       Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq

@@ -34,5 +34,15 @@ object GraftRuntime {
     // registry is unaffected.
     spark.conf.set("spark.sql.cbo.enabled", "true")
     spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    // Whole-stage classes named without their stage id: Spark's codegen
+    // cache keys on (class loader, source), so two stages of one shape
+    // share a compiled class instead of differing only in the name. The
+    // cache holds 100 entries in 4 segments of 25, and a local-mode body
+    // takes two (driver and executor loader); with stage ids in the name,
+    // a corpus-dedup pass overflowed it and every warm pass recompiled
+    // classes pass 0 had built (OPTIMIZATION_r14.md §16). Internal Spark
+    // conf: ExtensionsSpec's same-shape case compares two stages' generated
+    // sources, so it fails if an upgrade drops the conf.
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
   }
 }

@@ -116,7 +116,7 @@ object PipelineQueries {
     * measured-plan twin q113b — the banding plan is pigeonhole-exact,
     * so both rows produce the identical survivor set this SQL names. */
   private lazy val ensembleOracle: String = {
-    val bits = 48 // width fixes the noise floor (see ensembleDedupImpl)
+    val bits = 48 // width fixes the noise floor (see Dedup.nearDupRemovals)
     val sums = (0 until bits).map(b =>
       simhashBitSql(b)).mkString(", ")
     val packed = (0 until bits).map(b =>

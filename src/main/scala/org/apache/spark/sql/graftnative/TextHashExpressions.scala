@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graftnative
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -234,6 +235,50 @@ object TextHashOps {
       i += 1
     }
     new GenericArrayData(out)
+  }
+
+  /** The rows of [[EnsembleBandRows]] (tag, k1, k2, k3, k4, blk, h):
+    * LSH bands of `shs`, one row per winnow fingerprint of `wfps`, and —
+    * when `whs` is non-empty and `source` is not null — the combo bands
+    * of the doc's `bits`-bit SimHash. Null or empty arrays yield no rows. */
+  def ensembleBandRows(shs: ArrayData, wfps: ArrayData, whs: ArrayData,
+      source: UTF8String, numHashes: Int, rowsPerBand: Int, bits: Int,
+      offs: Array[Int], lens: Array[Int],
+      combos: Array[Array[Int]], fms: Array[Long], fvs: Array[Long]): ArrayData = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def row(tag: Int, k: InternalRow, k1: Long, blk: UTF8String, h: Long): Unit =
+      out += new GenericInternalRow(Array[Any](tag, k1,
+        if (k == null) 0L else k.getLong(1), if (k == null) 0L else k.getLong(2),
+        if (k == null) 0L else k.getLong(3), blk, h))
+    if (shs != null) {
+      val bands = minhashBandStructs(shs, numHashes, rowsPerBand)
+      var i = 0
+      while (i < bands.numElements()) {
+        val b = bands.getStruct(i, 4)
+        row(EnsembleBandRows.LshTag, b, b.getInt(0), UTF8String.EMPTY_UTF8, 0L)
+        i += 1
+      }
+    }
+    if (wfps != null) {
+      var i = 0
+      while (i < wfps.numElements()) {
+        row(EnsembleBandRows.WinnowTag, null, wfps.getLong(i), UTF8String.EMPTY_UTF8, 0L)
+        i += 1
+      }
+    }
+    if (whs != null && whs.numElements() > 0 && source != null) {
+      val h = simhashPack(whs, bits)
+      val cs = comboBandStructs(h, offs, lens, combos, fms, fvs)
+      // the input row's bytes may be reused once this row is consumed
+      val blk = source.clone()
+      var i = 0
+      while (i < cs.numElements()) {
+        val c = cs.getStruct(i, 4)
+        row(EnsembleBandRows.SimhashTag, c, c.getInt(0), blk, h)
+        i += 1
+      }
+    }
+    new GenericArrayData(out.toArray)
   }
 
   /** All `numHashes` minhash minima of a shingle-hash array in ONE pass:
@@ -559,6 +604,77 @@ case class MinhashBandStructs(child: Expression, numHashes: Int, rowsPerBand: In
   override protected def withNewChildInternal(c: Expression): MinhashBandStructs = copy(child = c)
 }
 
+/** Every blocking row the ensemble's fused band join reads for one doc
+  * (`Dedup.taggedBandJoin`), as ONE array, so a single Generate over the
+  * prep frame feeds all three families:
+  *
+  *  - tag 0, per LSH band of the shingle hashes: (band, Σ, min, max) of
+  *    [[TextHashOps.minhashBandStructs]];
+  *  - tag 1, per winnow fingerprint: (fp, 0, 0, 0);
+  *  - tag 2, per pigeonhole combo of the doc's SimHash (when the word
+  *    hashes are non-empty and the source is not null): (combo, key
+  *    bits, fm, fv) of [[TextHashOps.comboBandStructs]]
+  *    over [[TextHashOps.simhashPack]], blocked by the source, with the
+  *    fingerprint in `h`.
+  *
+  * LSH and winnow rows carry an empty `blk` and `h` = 0. The values are
+  * the kernels' own, so the rows equal the separate per-family explodes
+  * they replace; [[TextHashOps.ensembleBandRows]] does the work, and the
+  * block/combo tables ride as codegen reference objects, so the
+  * generated stage is one class for every plan. */
+case class EnsembleBandRows(shs: Expression, wfps: Expression, whs: Expression,
+    source: Expression, numHashes: Int, rowsPerBand: Int, bits: Int,
+    offs: Array[Int], lens: Array[Int],
+    combos: Array[Array[Int]], fms: Array[Long], fvs: Array[Long])
+    extends Expression {
+  require(numHashes >= 1 && rowsPerBand >= 1 && numHashes % rowsPerBand == 0,
+    s"bad band shape: $numHashes hashes / $rowsPerBand per band")
+  override def children: Seq[Expression] = Seq(shs, wfps, whs, source)
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(EnsembleBandRows.RowType, containsNull = false)
+  override def prettyName: String = "graft_ensemblebandrows"
+
+  override def eval(input: InternalRow): Any = TextHashOps.ensembleBandRows(
+    shs.eval(input).asInstanceOf[ArrayData], wfps.eval(input).asInstanceOf[ArrayData],
+    whs.eval(input).asInstanceOf[ArrayData], source.eval(input).asInstanceOf[UTF8String],
+    numHashes, rowsPerBand, bits, offs, lens, combos, fms, fvs)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val in = children.map(_.genCode(ctx))
+    val args = in.map(e => s"${e.isNull} ? null : ${e.value}").mkString(", ")
+    val o = ctx.addReferenceObj("offs", offs, "int[]")
+    val l = ctx.addReferenceObj("lens", lens, "int[]")
+    val cs = ctx.addReferenceObj("combos", combos, "int[][]")
+    val fm = ctx.addReferenceObj("fms", fms, "long[]")
+    val fv = ctx.addReferenceObj("fvs", fvs, "long[]")
+    ev.copy(code = code"""
+      ${in.map(_.code).reduce(_ + _)}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        org.apache.spark.sql.graftnative.TextHashOps.ensembleBandRows($args,
+          $numHashes, $rowsPerBand, $bits, $o, $l, $cs, $fm, $fv);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): EnsembleBandRows =
+    copy(shs = c(0), wfps = c(1), whs = c(2), source = c(3))
+}
+
+object EnsembleBandRows {
+  val LshTag = 0
+  val WinnowTag = 1
+  val SimhashTag = 2
+  val RowType: StructType = StructType(Seq(
+    StructField("tag", IntegerType, nullable = false),
+    StructField("k1", LongType, nullable = false),
+    StructField("k2", LongType, nullable = false),
+    StructField("k3", LongType, nullable = false),
+    StructField("k4", LongType, nullable = false),
+    StructField("blk", StringType, nullable = false),
+    StructField("h", LongType, nullable = false)))
+}
+
 object TextHashExpressions {
   def minhashSigs(c: Column, numHashes: Int): Column =
     ExpressionUtils.column(MinhashSigs(ExpressionUtils.expression(c), numHashes))
@@ -584,6 +700,19 @@ object TextHashExpressions {
   def cdcChunkHashes(c: Column, divisor: Int): Column =
     ExpressionUtils.column(CdcChunkHashes(ExpressionUtils.expression(c), divisor))
 
+  /** [[EnsembleBandRows]] of a prep frame's (shs, wfps, whs, source),
+    * the SimHash rows under (blockDefs, comboDefs) as
+    * [[comboBandStructs]] takes them. */
+  def ensembleBandRows(shs: Column, wfps: Column, whs: Column, source: Column,
+      numHashes: Int, rowsPerBand: Int, bits: Int,
+      blockDefs: Seq[(Int, Int)], comboDefs: Seq[Seq[Int]]): Column = {
+    val (offs, lens, combos, fms, fvs) = comboTables(blockDefs, comboDefs)
+    ExpressionUtils.column(EnsembleBandRows(ExpressionUtils.expression(shs),
+      ExpressionUtils.expression(wfps), ExpressionUtils.expression(whs),
+      ExpressionUtils.expression(source), numHashes, rowsPerBand, bits,
+      offs, lens, combos, fms, fvs))
+  }
+
   /** Combo-band struct array for `h` under (blockDefs = (offset, len)
     * per block, comboDefs = block-index subsets). fm/fv are the
     * first-agreeing-combo dedup literals (see Dedup.bandedHammingPairs):
@@ -591,12 +720,15 @@ object TextHashExpressions {
     * the combo's own block set. */
   def comboBandStructs(h: Column, blockDefs: Seq[(Int, Int)],
       comboDefs: Seq[Seq[Int]]): Column = {
-    val offs = blockDefs.map(_._1).toArray
-    val lens = blockDefs.map(_._2).toArray
-    val combos = comboDefs.map(_.toArray).toArray
-    val fms = comboDefs.map(c => (1L << (c.last + 1)) - 1).toArray
-    val fvs = comboDefs.map(_.map(b => 1L << b).sum).toArray
+    val (offs, lens, combos, fms, fvs) = comboTables(blockDefs, comboDefs)
     ExpressionUtils.column(ComboBandStructs(ExpressionUtils.expression(h),
       offs, lens, combos, fms, fvs))
   }
+
+  private def comboTables(blockDefs: Seq[(Int, Int)], comboDefs: Seq[Seq[Int]])
+      : (Array[Int], Array[Int], Array[Array[Int]], Array[Long], Array[Long]) =
+    (blockDefs.map(_._1).toArray, blockDefs.map(_._2).toArray,
+      comboDefs.map(_.toArray).toArray,
+      comboDefs.map(c => (1L << (c.last + 1)) - 1).toArray,
+      comboDefs.map(_.map(b => 1L << b).sum).toArray)
 }

@@ -444,6 +444,24 @@ class DedupSpec extends SparkSpec {
       "the reps are one row per (source, simhash): no hash distinct at rep level")
   }
 
+  test("codegen budget: dedupApply and ensembleDedupApply compile one small set of classes") {
+    // Spark's codegen cache holds 100 entries in 4 segments of 25, and a
+    // local-mode whole-stage body takes two (driver and executor loader).
+    // A pass over both operators that overflows a segment recompiles on
+    // every call, so their distinct generated sources are a budget, as
+    // jobs are: both run one plan shape (nearDupRemovals)
+    val docs = Dedup.withNearDuplicates(
+      Tables.load(spark, "/root/testdata/sf0.001", "documents"))
+    val (ensemble, _) = codegenCensus(Dedup.ensembleDedupApply(docs).collect())
+    val (both, entries) = codegenCensus {
+      Dedup.dedupApply(docs).collect(); Dedup.ensembleDedupApply(docs).collect() }
+    // 35, 47 and 71 when pinned; the plans before the shared core
+    // compiled 59 and 67 sources in 97 entries here
+    assert(ensemble <= 40, s"ensembleDedupApply compiled $ensemble distinct sources")
+    assert(both <= 52 && entries <= 78,
+      s"dedupApply + ensembleDedupApply compiled $both distinct sources in $entries entries")
+  }
+
   test("lshParameterSweep: one chosen point, budget honored, band-count drives recall") {
     val corpus = Dedup.withNearDuplicates(
       Tables.load(spark, "/root/testdata/sf0.001", "documents"))

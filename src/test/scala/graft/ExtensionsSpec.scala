@@ -43,4 +43,20 @@ class ExtensionsSpec extends SparkSpec {
       .select(VectorExprs.fdot(col("a"), col("b"))).collect().head.getDouble(0)
     assert(d === 16.0)
   }
+
+  test("GraftRuntime.enable: same-shape whole-stage subtrees generate one source") {
+    // Spark's codegen cache keys on the generated source; with the stage id
+    // in the class name, two stages of one shape compile twice. The conf is
+    // internal to Spark, and Spark reads back any key set on it, so the
+    // identical-bodies assertion is what fails if an upgrade drops it
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    graft.plans.GraftRuntime.enable(spark)
+    val half = spark.range(0, 100, 1, 2).selectExpr("id * 3 AS x").filter("x % 2 = 0")
+    val plan = half.union(half).queryExecution.executedPlan
+    val stages = plan.collect { case w: WholeStageCodegenExec => w }
+    assert(stages.map(_.codegenStageId).distinct.size === 2, plan.treeString)
+    val bodies = stages.map(_.doCodeGen()._2.body)
+    assert(bodies.distinct.size === 1, "two same-shape stages generated different sources")
+    assert(bodies.head.contains("final class GeneratedIterator "), bodies.head.take(400))
+  }
 }

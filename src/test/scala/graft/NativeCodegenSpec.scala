@@ -136,6 +136,27 @@ class NativeCodegenSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum(col("bd.v")).as("sv"))
       .collect()
     assert(cb.length === 1 && cb(0).getLong(0) === 128L * 210)
+
+    // the ensemble's fused band rows: one Generate emits exactly the three
+    // families' rows (LSH bands, winnow fingerprints, SimHash combo bands)
+    val prep = docs.select(col("doc_id"), lit("web").as("source"),
+      TextHashExpressions.shingleHashes(col("text")).as("shs"),
+      TextHashExpressions.wordHashes(col("text")).as("whs"),
+      array_distinct(TextHashExpressions.winnowHashes(col("text"), 4)).as("wfps"))
+    def tally(df: org.apache.spark.sql.DataFrame) =
+      df.agg(count(lit(1)), sum(col("k1")), sum(col("k2"))).collect().head.toSeq
+    val fused = prep.select(explode(TextHashExpressions.ensembleBandRows(col("shs"),
+        col("wfps"), col("whs"), col("source"), 16, 4, 48, blockDefs, comboDefs)).as("r"))
+      .select(col("r.*"))
+    val lsh = prep.select(explode(TextHashExpressions.minhashBandStructs(col("shs"), 16, 4))
+      .as("b")).select(col("b.band").cast("long").as("k1"), col("b.s").as("k2"))
+    val winnow = prep.select(explode(col("wfps")).as("k1"), lit(0L).as("k2"))
+    val simhash = prep.select(explode(TextHashExpressions.comboBandStructs(
+        TextHashExpressions.simhashPack(col("whs"), 48), blockDefs, comboDefs)).as("c"))
+      .select(col("c.b").cast("long").as("k1"), col("c.v").as("k2"))
+    Seq(lsh, winnow, simhash).zipWithIndex.foreach { case (family, tag) =>
+      assert(tally(fused.filter(col("tag") === tag)) === tally(family), s"tag $tag")
+    }
   }
 
   test("every native expression compiles under CODEGEN_ONLY (fallback disabled)") {

@@ -28,6 +28,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Generated classes `body` touches: Spark's codegen cache is emptied,
+    * `body` runs, and the cache's keys are read back, as (distinct
+    * sources, entries) — an entry per (class loader, source). Read by
+    * reflection: `debug.codegenStringSeq` sees only the whole-stage
+    * subtrees of a final plan, not lazily checkpointed subtrees or the
+    * projections and orderings of exchanges and sorts. The cache evicts
+    * past 100 entries (4 segments of 25), so a count is exact only well
+    * below that. */
+  def codegenCensus(body: => Any): (Int, Int) = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
+    val cacheOf = CodeGenerator.getClass.getDeclaredMethod("cache")
+    cacheOf.setAccessible(true)
+    val cache = cacheOf.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+    body
+    val guava = cache.getClass.getMethod("cache").invoke(cache)
+    val keys = Class.forName("org.sparkproject.guava.cache.Cache").getMethod("asMap")
+      .invoke(guava).asInstanceOf[java.util.Map[AnyRef, AnyRef]].keySet.toArray.toSeq
+    (keys.map(_.asInstanceOf[(AnyRef, CodeAndComment)]._2.body).distinct.size, keys.size)
+  }
+
   override def afterAll(): Unit = super.afterAll()
 }
 

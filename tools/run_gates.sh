@@ -47,12 +47,14 @@ print(f'{os.environ["W"]}: correct={r["correct"]} failed={r["failed"]}/{r["attem
 sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)
 EOF
 done
-# one traced run of index-ingest and of tweets-kmedoids: their job and
-# codegen counts show a regression of the batch path or of the k-medoids
-# loop without an A/B (per warm pass when these were added: index-ingest
+# one traced run of each workload: their job and codegen counts show a
+# regression of the batch path, of the k-medoids loop or of the dedup
+# plans without an A/B (per warm pass when these were added: index-ingest
 # 40 jobs, 24 files, 0 s of recompiles; tweets-kmedoids 25 jobs, 35
-# before its medoid update went map-only)
-for W in index-ingest tweets-kmedoids; do
+# before its medoid update went map-only; corpus-dedup 0 classes, 28 jobs,
+# 0.8 s in dedup.ensemble; 66, 38 and 2.0 s before its plans fit the
+# codegen cache)
+for W in index-ingest tweets-kmedoids corpus-dedup; do
   LINE=$(python3 perfbench/run.py --workload "$W" --seed 1 --seconds 1 --trace 1 | tail -n 1)
   W="$W" LINE="$LINE" python3 - <<'EOF'
 import json, os, sys
@@ -60,7 +62,8 @@ w = os.environ["W"]
 r = json.loads(os.environ["LINE"])
 m = r["metrics"]
 keys = {"index-ingest": ("driver.jobs", "index.files", "driver.codegen_compile_s"),
-        "tweets-kmedoids": ("driver.jobs", "kmeans.iter_s", "driver.codegen_compile_s")}[w]
+        "tweets-kmedoids": ("driver.jobs", "kmeans.iter_s", "driver.codegen_compile_s"),
+        "corpus-dedup": ("driver.codegen_classes", "driver.jobs", "dedup.ensemble_s")}[w]
 print(f"{w} traced: " + ", ".join(f'{k}={m[k]["value"]:g}' for k in keys))
 sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)
 EOF
