@@ -291,7 +291,11 @@ object Bench {
     * measures a fresh invocation, so the leftovers are garbage, not warm
     * state. Only those queries leak; the conditional keeps cleanup free
     * for the other ~95% of rows (an unconditional System.gc() taxed every
-    * row). */
+    * row). The settle follows whether the rep STORED an RDD block, as the
+    * drained listener bus saw it, not whether a persisted RDD is still
+    * registered: a lazily checkpointed frame stays registered only until
+    * the JVM next collects it, so that test paused after some reps of a
+    * row and not after others. */
   def timedRep[A](spark: SparkSession,
                   probe: org.apache.spark.graftnative.TaskMetricsProbe)
                  (action: => A): (A, Double, (Long, Long, Long, Long), Double) = {
@@ -307,6 +311,7 @@ object Bench {
       catch { case _: Throwable => () }
       (result, t, probe.snapshot(), compileSec)
     } finally try {
+      org.apache.spark.graftnative.TaskMetricsProbe.drain(spark.sparkContext)
       val leaked = spark.sparkContext.getPersistentRDDs
       if (leaked.nonEmpty) {
         spark.sharedState.cacheManager.clearCache()
@@ -315,6 +320,8 @@ object Bench {
         // (measured on the ensemble row: reps climbed 7 s -> 13 s async,
         // flat blocking)
         leaked.values.foreach(_.unpersist(true))
+      }
+      if (probe.persistedRdd) {
         // nudge the ContextCleaner: shuffle files and broadcasts of the
         // dead invocation are reference-tracked and only reclaimed after
         // a GC notices the references died

@@ -104,10 +104,26 @@ object Dedup {
     * carries at least default parallelism (any production split count),
     * so nothing changes at scale. Exchanging the raw text rows is a few
     * MB — orders of magnitude cheaper than the single-threaded stage it
-    * breaks up. */
+    * breaks up.
+    *
+    * The decision runs no Spark job. A narrow chain over a scan counts
+    * its input splits (file listing only). A plan with an exchange or a
+    * subquery would run those stages just to count its partitions — and
+    * the real query would run them again — so its planned output
+    * partition count stands in (`graft.Sessions.local` shuffles to its
+    * default parallelism, so a plan ending in a shuffle is not spread
+    * again). */
   private[graft] def spread(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p, col("doc_id")) else df
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan // the initial plan, not yet run
+      case other => other
+    }
+    val staged = plan.exists(n => n.isInstanceOf[Exchange] || n.subqueries.nonEmpty)
+    val n = if (staged) plan.outputPartitioning.numPartitions else df.rdd.getNumPartitions
+    if (n < p) df.repartition(p, col("doc_id")) else df
   }
 
   /** (doc_id, source, shs: array<bigint>) — word-trigram shingle hashes. */
@@ -1003,11 +1019,17 @@ object Dedup {
     * batch's rows shuffle, and the verify moves only candidates. The
     * probe still SCANS every band row of the index (the merge join
     * streams the bucket files), so its read is corpus-sized; only its
-    * shuffle is batch-sized. With `location` set the bucket files are
-    * external and survive the session — re-attach them elsewhere with
-    * [[registerBandIndex]]. The build also stores the band-key census
-    * the drift report compares against ([[bandDriftReport]]); see
-    * [[PersistedIndex]]. */
+    * shuffle is batch-sized. It pays that read once per batch: the
+    * probe materializes its answer, so writing the pairs and the clean
+    * docs does not scan the index again. At the default
+    * `autoBroadcastJoinThreshold` adaptive execution broadcasts the
+    * batch's band rows instead of shuffling them, and broadcasts the
+    * whole `_sets` table for the verify; the merge-in-place plan is the
+    * one IncrementalIndexSpec pins with broadcasts off. With `location`
+    * set the bucket files are external and survive the session —
+    * re-attach them elsewhere with [[registerBandIndex]]. The build also
+    * stores the band-key census the drift report compares against
+    * ([[bandDriftReport]]); see [[PersistedIndex]]. */
   def writeBandIndex(corpus: DataFrame, name: String, buckets: Int = 8,
       numHashes: Int = 16, rowsPerBand: Int = 4,
       location: Option[String] = None): Unit = {
@@ -1148,14 +1170,23 @@ object Dedup {
     * abstract-sized: the probe's shuffle write fell 40 % on perfbench's
     * index-ingest batches). On 1,000-word docs, half of them near
     * copies, it shuffled 1.7× the bytes of the separate join at the
-    * same wall time (4 cores). */
+    * same wall time (4 cores).
+    *
+    * The answer is computed ONCE per call (lazy `localCheckpoint`): every
+    * consumer of the returned frame — the pairs write, then the clean
+    * docs' anti-join — reads the materialized rows and never re-runs the
+    * batch band exchange, the `_bands` scan or the `_sets` read. Under
+    * adaptive execution (the engine's sessions) the probe's shuffle
+    * stages, which hold every index scan, run inside this call, so the
+    * answer is the index AS OF THE CALL: a later [[appendToBandIndex]]
+    * does not change the rows the frame returns. */
   def incrementalNearDupPairsIndexed(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, name: String, numHashes: Int = 16,
       rowsPerBand: Int = 4, minJaccard: Double = 0.5): DataFrame = {
     val oldSets = Bucketing.readBucketed(spark, s"${name}_sets")
       .select(col("doc_id").as("old_id"), col("set").as("set_o"))
     verifyIncremental(indexedBandJoin(spark, newDocs, name, numHashes, rowsPerBand),
-      oldSets, minJaccard).distinct()
+      oldSets, minJaccard).distinct().localCheckpoint(false)
   }
 
   /** The FULL corpus self-dedup run entirely off a persisted

@@ -886,7 +886,10 @@ object Similarity {
     * verified with one exact cosine against the bucketed vector table —
     * the corpus is never re-hashed or re-shuffled. SemDeDup's arrival
     * path: dedup each batch against everything accepted so far, then
-    * [[appendToEmbIndex]] the survivors. Output (new_id, old_id, cos).  */
+    * [[appendToEmbIndex]] the survivors. Output (new_id, old_id, cos),
+    * computed once per call like [[Dedup.incrementalNearDupPairsIndexed]]
+    * (lazy `localCheckpoint`): every consumer of the frame reads the
+    * materialized rows, none re-runs the band join or the vector read. */
   def incrementalEmbNearDupsIndexed(spark: org.apache.spark.sql.SparkSession,
       newVecs: DataFrame, name: String, threshold: Double = 0.9,
       numBands: Int = 8, bitsPerBand: Int = 8, dim: Int = 64): DataFrame = {
@@ -902,6 +905,7 @@ object Similarity {
       .select(col("new_id"), col("old_id"),
         (fdot(col("e_n"), col("e_o")) / (col("n_n") * col("n_o"))).as("cos"))
       .filter(col("cos") >= threshold)
+      .localCheckpoint(false)
   }
 
   // ---- persisted IVF cell index (streaming SemDeDup through cells) --------
@@ -1138,7 +1142,8 @@ object Similarity {
     * arrival path, so `Cli emb-ingest-dedup` can serve whichever index
     * form `embindex --plan measured` built (round-11 ADVICE: a measured
     * build choosing the ivf/ivf2 form used to produce an index no CLI
-    * ingest path could consume). */
+    * ingest path could consume). Computed once per call (lazy
+    * `localCheckpoint`), as the sign-band path is. */
   def incrementalIvfNearDupsIndexed(spark: org.apache.spark.sql.SparkSession,
       newVecs: DataFrame, name: String, threshold: Double = 0.9): DataFrame = {
     val fine = readCellCentroids(spark, name)
@@ -1158,6 +1163,7 @@ object Similarity {
     // the full cells table per batch just to recompute it).
     edges.distinct()
       .select(col("id_a").as("new_id"), col("id_b").as("old_id"), col("cos"))
+      .localCheckpoint(false)
   }
 
   /** Deterministic negative sampling for contrastive training: for each

@@ -3,7 +3,7 @@ package org.apache.spark.graftnative
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerTaskEnd}
 
 /** Run-wide task-metric accumulator for the scaling harness: sums
   * shuffle read/write bytes and spill across every task that ends
@@ -35,10 +35,23 @@ final class TaskMetricsProbe private () extends SparkListener {
     }
   }
 
+  @volatile private var storedRddBlock = false
+
+  override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+    val b = e.blockUpdatedInfo
+    if (b.blockId.isRDD && b.storageLevel.isValid) storedRddBlock = true
+  }
+
   def reset(): Unit = {
     shuffleRead.reset(); shuffleWrite.reset()
     diskSpill.reset(); memSpill.reset()
+    storedRddBlock = false
   }
+
+  /** Whether an RDD block was stored since the last reset, i.e. the run
+    * persisted (cached or checkpointed) an RDD. Call only after
+    * [[TaskMetricsProbe.drain]]. */
+  def persistedRdd: Boolean = storedRddBlock
 
   /** (shuffle read bytes, shuffle write bytes, disk spill bytes,
     * in-memory spill bytes) since the last reset. Call only after

@@ -244,6 +244,83 @@ class IncrementalIndexSpec extends SparkSpec {
     }
   }
 
+  /** The probe as its consumers run it (perfbench's index-ingest and
+    * `Cli ingest-dedup`), at the session's default broadcast threshold:
+    * the call, the pairs write, then the clean docs' anti-join against
+    * the same frame. The probe's answer is materialized once, so the
+    * second write reads it instead of re-running the batch exchange and
+    * both index scans (12 jobs in all when it re-ran them). */
+  test("probe job budget: the call, the pairs write and the clean write evaluate the probe once") {
+    cleanup()
+    val dir = java.nio.file.Files.createTempDirectory("graft-probeonce").toString
+    try {
+      Dedup.writeBandIndex(corpus, "xidx", buckets = 4, location = Some(s"$dir/idx"))
+      var pairs: org.apache.spark.sql.DataFrame = null
+      val jobs = Seq(
+        "call" -> jobsIn { pairs = Dedup.incrementalNearDupPairsIndexed(spark, batch, "xidx") },
+        "pairs" -> jobsIn(pairs.write.parquet(s"$dir/pairs")),
+        "clean" -> jobsIn(batch.join(pairs.select(col("new_id").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti").write.parquet(s"$dir/clean")))
+      assert(spark.read.parquet(s"$dir/clean").collect().isEmpty,
+        "every batch doc is a near copy of a corpus doc")
+      assert(jobs.map(_._2).sum <= 9, s"probe and its two writes ran ${jobs.map(_._2).sum} jobs: $jobs")
+    } finally cleanup()
+  }
+
+  /** The second consumer reads the first's rows: no executed plan of the
+    * clean write scans `<name>_bands` or `<name>_sets`. */
+  test("the clean write after the pairs write scans neither index table") {
+    cleanup()
+    val dir = java.nio.file.Files.createTempDirectory("graft-probescan").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    try {
+      Dedup.writeBandIndex(corpus, "xidx", buckets = 4, location = Some(s"$dir/idx"))
+      val pairs = Dedup.incrementalNearDupPairsIndexed(spark, batch, "xidx")
+      pairs.write.parquet(s"$dir/pairs")
+      org.apache.spark.graftnative.TaskMetricsProbe.drain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      batch.join(pairs.select(col("new_id").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
+        .write.parquet(s"$dir/clean")
+      org.apache.spark.graftnative.TaskMetricsProbe.drain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      val seen = plans.asScala.toSeq
+      assert(seen.nonEmpty, "the clean write's plan was not captured")
+      val scans = seen.flatMap(_.linesIterator.filter(l =>
+        l.contains("FileScan") && (l.contains("xidx_bands") || l.contains("xidx_sets"))))
+      assert(scans.isEmpty, s"the clean write re-read the index:\n${seen.mkString("\n")}")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      cleanup()
+    }
+  }
+
+  /** The probe's answer is the index as of the call: consumed only after
+    * an append that would add pairs, it still returns the call-time set. */
+  test("the probe frame is a snapshot: consumed after an append it returns the call-time pairs") {
+    cleanup()
+    try {
+      Dedup.writeBandIndex(corpus, "idx", buckets = 4)
+      val want = Dedup.incrementalNearDupPairsIndexed(spark, batch, "idx")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val pairs = Dedup.incrementalNearDupPairsIndexed(spark, batch, "idx")
+      // exact copies of the batch under new ids: each would pair with its original
+      val copies = batch.select((col("doc_id") + 4000L).as("doc_id"), col("text"), col("source"))
+      Dedup.appendToBandIndex(spark, copies, "idx")
+      val fresh = Dedup.incrementalNearDupPairsIndexed(spark, batch, "idx")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(fresh === want ++ Set((1010L, 5010L), (1020L, 5020L), (1030L, 5030L)),
+        s"the append must add pairs for the test to mean anything: $fresh")
+      val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got === want, s"the probe frame changed with the index after the call: $got")
+    } finally cleanup()
+  }
+
   test("tombstone delete rewrites the index without the deleted docs; layout intact") {
     cleanup()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)

@@ -72,4 +72,14 @@ class TaskMetricsProbeSpec extends SparkSpec {
     assert(wA > 0 && wA === wB, s"one window, one count: $wA vs $wB")
     pa.reset()
   }
+
+  /** `Bench.timedRep` settles after a rep by what the rep stored, seen on
+    * the drained bus, so the pause cannot follow the JVM's GC timing. */
+  test("probe sees a rep that persisted an RDD, and only that rep") {
+    val probe = Bench.probeFor(spark)
+    Bench.timedRep(spark, probe)(spark.range(8).selectExpr("id + 1").collect())
+    assert(!probe.persistedRdd, "a plain collect stores no RDD block")
+    Bench.timedRep(spark, probe)(spark.range(8).localCheckpoint(true).count())
+    assert(probe.persistedRdd, "an eager local checkpoint stores its blocks")
+  }
 }

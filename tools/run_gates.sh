@@ -50,7 +50,8 @@ done
 # one traced run of each workload: their job and codegen counts show a
 # regression of the batch path, of the k-medoids loop or of the dedup
 # plans without an A/B (per warm pass when these were added: index-ingest
-# 40 jobs, 24 files, 0 s of recompiles; tweets-kmedoids 25 jobs, 35
+# 34 jobs since the probe materializes its answer once (40 before), 24
+# files, 0 s of recompiles; tweets-kmedoids 25 jobs, 35
 # before its medoid update went map-only; corpus-dedup 0 classes, 28 jobs,
 # 0.8 s in dedup.ensemble; 66, 38 and 2.0 s before its plans fit the
 # codegen cache)
