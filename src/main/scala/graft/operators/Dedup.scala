@@ -104,26 +104,12 @@ object Dedup {
     * carries at least default parallelism (any production split count),
     * so nothing changes at scale. Exchanging the raw text rows is a few
     * MB — orders of magnitude cheaper than the single-threaded stage it
-    * breaks up.
-    *
-    * The decision runs no Spark job. A narrow chain over a scan counts
-    * its input splits (file listing only). A plan with an exchange or a
-    * subquery would run those stages just to count its partitions — and
-    * the real query would run them again — so its planned output
-    * partition count stands in (`graft.Sessions.local` shuffles to its
-    * default parallelism, so a plan ending in a shuffle is not spread
-    * again). */
+    * breaks up. Counting the partitions of a plan with an exchange runs
+    * its stages, so callers spread the scan, not a join or aggregate over
+    * it (as [[dedupApply]] does). */
   private[graft] def spread(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan // the initial plan, not yet run
-      case other => other
-    }
-    val staged = plan.exists(n => n.isInstanceOf[Exchange] || n.subqueries.nonEmpty)
-    val n = if (staged) plan.outputPartitioning.numPartitions else df.rdd.getNumPartitions
-    if (n < p) df.repartition(p, col("doc_id")) else df
+    if (df.rdd.getNumPartitions < p) df.repartition(p, col("doc_id")) else df
   }
 
   /** (doc_id, source, shs: array<bigint>) — word-trigram shingle hashes. */

@@ -26,25 +26,6 @@ class DedupSpec extends SparkSpec {
     assert(got.toSeq === Seq(0, 3))
   }
 
-  /** `spread` sizes its input without running it: counting an adaptive
-    * plan's partitions would run its exchange just to count, and the
-    * real query would run it again. A scan keeps its split-count
-    * decision (a one-split frame is spread). */
-  test("spread decides without a Spark job; a one-split scan is still spread") {
-    val c = corpus((1, "x y z", "s"), (2, "x y z", "s"), (3, "x y w", "s"))
-    val aggregated = c.groupBy(col("doc_id"))
-      .agg(first(col("text")).as("text"), first(col("source")).as("source"))
-    assert(jobsIn(Dedup.shingled(aggregated)) === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-spread").toString
-    c.coalesce(1).write.mode("overwrite").parquet(dir)
-    val scan = spark.read.parquet(dir)
-    var spread: org.apache.spark.sql.DataFrame = null
-    assert(jobsIn { spread = Dedup.spread(scan) } === 0)
-    assert(spread.queryExecution.logical.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression],
-      "a one-split scan must be spread")
-  }
-
   test("exact dedup groups identical texts only") {
     val c = corpus((1, "x y z", "s"), (2, "x y z", "s"), (3, "x y w", "s"))
     val got = Dedup.exactDuplicateGroups(c).collect()
