@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
-import graft.operators.{Analysis, KMeans, PersistedIndex}
+import graft.operators.{Analysis, Bucketing, KMeans, PersistedIndex}
 import graft.sources.{AssignmentIO, TweetIngest}
 
 /** Command-line entry points mirroring the reference's five mains, so a
@@ -370,9 +371,8 @@ object Cli {
         s""""dropped_dup":${nRead - nDeduped},"dropped_contaminated":${nDeduped - nClean},""" +
         s""""dropped_quality":${nClean - nReleased},"packed_bins":$nBins,""" +
         s""""seq_len":$seqLen,"jaccard":$tau}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get(
-        {java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir)); s"$outDir/manifest.json"}),
-        (manifest + "\n").getBytes("UTF-8"))
+      val out = Bucketing.fileSystem(spark, outDir).create(new Path(s"$outDir/manifest.json"))
+      try out.write((manifest + "\n").getBytes("UTF-8")) finally out.close()
       println(s"[graft] release: $manifest -> $outDir")
 
     // publish the per-source release summary for a curated corpus
@@ -482,7 +482,7 @@ object Cli {
       val names = tables.map { t =>
         val name = s"$prefix$t"
         val loc = s"$dir/$t.parquet"
-        if (!new java.io.File(loc).exists())
+        if (!Bucketing.fileSystem(spark, loc).exists(new Path(loc)))
           sys.error(s"maintain analyze: no parquet table at $loc")
         // external table over the existing location: DROP leaves data
         // untouched; re-registering re-points a stale location
@@ -547,7 +547,7 @@ object Cli {
       val valueCol = o.getOrElse("value-col",
         df.columns.find(_ != groupCol).getOrElse(df.columns.head))
       graft.operators.QualityChecks.hllStoreBuild(df, groupCol, valueCol, sketchDir)
-      println(s"[graft] sketch hll-build: $groupCol x $valueCol -> $sketchDir/v0")
+      println(s"[graft] sketch hll-build: $groupCol x $valueCol committed under $sketchDir")
 
     case "sketch" :: "hll-append" :: batchPath :: sketchDir :: opts =>
       val o = parseOpts(opts)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Bucketed (pre-shuffled) tables for co-located joins.
@@ -40,30 +41,35 @@ object Bucketing {
   // sees an empty table that looks legitimately empty. The commit is
   // therefore VERSIONED, the one-table essence of a Delta/Iceberg commit:
   //
-  //   - version 0 lives at `location/sub` (what a fresh writeBandIndex /
-  //     writeEmbIndex lays down); version N ≥ 1 at `location/sub__vN`;
-  //   - a rewrite writes the full new table to `sub__v{N+1}.tmp`, then
-  //     COMMITS with the atomic rename to `sub__v{N+1}`; `.tmp` dirs are
-  //     invisible to resolution, so no reader can bind to a partial dir;
+  //   - version 0 lives at `location/sub`; version N ≥ 1 at
+  //     `location/sub__vN`;
+  //   - [[commit]] writes the full new version to its name + `.tmp`,
+  //     then COMMITS with one atomic rename; `.tmp` dirs are invisible to
+  //     resolution, so no reader can bind to a partial dir;
   //   - readers resolve [[currentDir]] = the highest committed version —
   //     mid-rewrite they see the old COMPLETE version, after commit the
   //     new COMPLETE version, never parts of either;
   //   - the PREVIOUS version is retained for one full rewrite cycle
-  //     (cleanup keeps the top two, deletes older), so a reader that
+  //     (cleanup keeps the top two, retires older), so a reader that
   //     resolved just before a commit can finish its whole scan against
   //     dirs that still exist. The contract is stale-but-consistent: a
   //     reader (or another session's re-attached DDL) binds one version
   //     and keeps it until it re-resolves; breaking it requires TWO full
   //     rewrite cycles to complete inside one scan.
   //
+  // Two clients share it: the persisted indexes (rebuild and rewrite
+  // here; a FIRST index build still writes `location/sub` in place) and
+  // the HLL register store ([[QualityChecks.hllStoreBuild]] and
+  // [[QualityChecks.hllStoreCompact]]), every version of which commits.
+  //
   // Crash safety: a crash before the rename leaves only a `.tmp` dir
-  // (deleted by the next rewrite's preamble and never resolvable); a
+  // (deleted by the next commit's preamble and never resolvable); a
   // crash after the rename but before cleanup leaves an extra old
   // version, removed by the next cleanup's keep-top-2 sweep.
 
-  private def fsFor(spark: SparkSession, location: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(location), spark.sparkContext.hadoopConfiguration)
+  /** The Hadoop `FileSystem` serving `path` (plain path or any URI). */
+  private[graft] def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private[graft] def versionOf(sub: String, dirName: String): Option[Long] =
     if (dirName == sub) Some(0L)
@@ -71,9 +77,11 @@ object Bucketing {
       scala.util.Try(dirName.stripPrefix(sub + "__v").toLong).toOption
     else None
 
-  private def versions(fs: org.apache.hadoop.fs.FileSystem, location: String,
-      sub: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val root = new org.apache.hadoop.fs.Path(location)
+  /** Every committed version of `sub` under `location`, oldest first. */
+  private[graft] def versions(spark: SparkSession, location: String,
+      sub: String): Seq[(Long, Path)] = {
+    val fs = fileSystem(spark, location)
+    val root = new Path(location)
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).toSeq.filter(_.isDirectory)
       .flatMap(st => versionOf(sub, st.getPath.getName).map(_ -> st.getPath))
@@ -85,13 +93,41 @@ object Bucketing {
     * Falls back to the plain v0 path when nothing exists yet (a
     * CREATE-before-write registration). */
   def currentDir(spark: SparkSession, location: String, sub: String): String =
-    versions(fsFor(spark, location), location, sub).lastOption
-      .map(_._2.toString).getOrElse(s"$location/$sub")
+    versions(spark, location, sub).lastOption.fold(s"$location/$sub")(_._2.toString)
 
   /** Whether `location` holds any committed version of `sub` (v0 or a
     * later `sub__vN`; in-flight `.tmp` writes do not count). */
   def hasCommitted(spark: SparkSession, location: String, sub: String): Boolean =
-    versions(fsFor(spark, location), location, sub).nonEmpty
+    versions(spark, location, sub).nonEmpty
+
+  /** The highest committed version of `sub` under `location`; fails
+    * loudly when there is none (no v0 fallback, so a writer can never lay
+    * down an uncommitted version). */
+  private[graft] def committedDir(spark: SparkSession, location: String,
+      sub: String): String =
+    versions(spark, location, sub).lastOption.map(_._2.toString).getOrElse(
+      throw new IllegalStateException(s"no committed version of $sub under $location"))
+
+  /** The one commit of a versioned location: `write` lays the full next
+    * version into its `.tmp` directory (a crashed attempt's leftover is
+    * deleted first), and one rename commits it. Then every version older
+    * than the previous one is deleted once `retire(it, committed)` allows
+    * it. Returns the committed directory. */
+  private[graft] def commit(spark: SparkSession, location: String, sub: String,
+      retire: (Path, Path) => Boolean = (_, _) => true)(write: String => Unit): Path = {
+    val fs = fileSystem(spark, location)
+    val n = versions(spark, location, sub).lastOption.fold(0L)(_._1 + 1)
+    val next = new Path(location, if (n == 0) sub else s"${sub}__v$n")
+    val tmp = next.suffix(".tmp")
+    fs.delete(tmp, true)
+    write(tmp.toString)
+    require(fs.rename(tmp, next), s"commit rename $tmp -> $next failed")
+    // grace: keep the version readers may still be scanning; retire older
+    versions(spark, location, sub).dropRight(2).foreach { case (_, old) =>
+      if (retire(old, next)) fs.delete(old, true)
+    }
+    next
+  }
 
   /** Drop a FIXED-NAME catalog entry whose bound location no longer
     * matches `expected`, so the register functions' CREATE TABLE IF NOT
@@ -106,11 +142,8 @@ object Bucketing {
   private[graft] def dropIfRelocated(spark: SparkSession, table: String,
       expected: String): Unit =
     if (spark.catalog.tableExists(table)) {
-      def qualified(p: String): String = {
-        val path = new org.apache.hadoop.fs.Path(p)
-        path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .makeQualified(path).toUri.toString
-      }
+      def qualified(p: String): String =
+        fileSystem(spark, p).makeQualified(new Path(p)).toUri.toString
       val bound = spark.sessionState.catalog
         .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
         .location.toString
@@ -161,19 +194,12 @@ object Bucketing {
   def writeBucketedExternal(df: DataFrame, table: String, key: String,
       n: Int, sortKey: Option[String], location: String, sub: String): Unit = {
     val spark = df.sparkSession
-    val fs = fsFor(spark, location)
-    versions(fs, location, sub).lastOption match {
-      case None =>
-        writeBucketed(df, table, key, n, sortKey, Some(s"$location/$sub"))
-      case Some((cur, _)) =>
-        val tmp = new org.apache.hadoop.fs.Path(s"$location/${sub}__v${cur + 1}.tmp")
-        val next = new org.apache.hadoop.fs.Path(s"$location/${sub}__v${cur + 1}")
-        fs.delete(tmp, true) // crashed-attempt leftover
-        writeBucketed(df, table, key, n, sortKey, Some(tmp.toString))
-        require(fs.rename(tmp, next),
-          s"writeBucketedExternal: commit rename $tmp -> $next failed")
-        spark.sql(s"ALTER TABLE $table SET LOCATION '$next'")
-        versions(fs, location, sub).dropRight(2).foreach { case (_, p) => fs.delete(p, true) }
+    if (!hasCommitted(spark, location, sub))
+      writeBucketed(df, table, key, n, sortKey, Some(s"$location/$sub"))
+    else {
+      val next = commit(spark, location, sub)(tmp =>
+        writeBucketed(df, table, key, n, sortKey, Some(tmp)))
+      spark.sql(s"ALTER TABLE $table SET LOCATION '$next'")
     }
   }
 
@@ -197,24 +223,16 @@ object Bucketing {
       location: String, sub: String, buckets: Int,
       transform: DataFrame => DataFrame = identity): Unit = {
     import org.apache.spark.sql.functions.col
-    val fs = fsFor(spark, location)
-    val vs = versions(fs, location, sub)
-    require(vs.nonEmpty, s"rewriteExternal: no committed version of $sub under $location")
-    val (cur, curDir) = vs.last
-    val tmp = new org.apache.hadoop.fs.Path(s"$location/${sub}__v${cur + 1}.tmp")
-    val next = new org.apache.hadoop.fs.Path(s"$location/${sub}__v${cur + 1}")
-    fs.delete(tmp, true) // stale leftover from a crashed rewrite
+    val curDir = committedDir(spark, location, sub)
     val reader =
       if (spark.catalog.tableExists(table)) spark.read.schema(spark.table(table).schema)
       else spark.read
-    writeBucketed(
-      transform(reader.parquet(curDir.toString)).repartition(buckets, col(key)),
-      s"${table}__compact", key, buckets, sortKey = Some(key),
-      path = Some(tmp.toString))
-    spark.sql(s"DROP TABLE IF EXISTS ${table}__compact")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    require(fs.rename(tmp, next), s"rewriteExternal: commit rename $tmp -> $next failed")
-    // grace: keep the version readers may still be scanning; drop older
-    versions(fs, location, sub).dropRight(2).foreach { case (_, p) => fs.delete(p, true) }
+    commit(spark, location, sub) { tmp =>
+      writeBucketed(
+        transform(reader.parquet(curDir)).repartition(buckets, col(key)),
+        s"${table}__compact", key, buckets, sortKey = Some(key), path = Some(tmp))
+      spark.sql(s"DROP TABLE IF EXISTS ${table}__compact")
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
   }
 }

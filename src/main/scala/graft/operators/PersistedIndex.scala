@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -95,11 +96,6 @@ object PersistedIndex {
   private def ddl(columns: Seq[(String, String)]): String =
     columns.map { case (c, t) => s"$c $t" }.mkString(", ")
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Every kind with a committed version of its primary subtable at
     * `location` — any version, so detection survives the keep-top-2
     * cleanup that retires the v0 directory after two rewrites. */
@@ -135,9 +131,7 @@ object PersistedIndex {
     kind.tiers.filterNot(t => t == kind.census || small.exists(_._1 == t)).foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS ${table(name, t.sub)}")
       location.foreach { l =>
-        val p = new org.apache.hadoop.fs.Path(s"$l/${t.sub}")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
+        Bucketing.fileSystem(spark, l).delete(new Path(s"$l/${t.sub}"), true)
       }
     }
     saveTier(spark.table(table(name, kind.primary.sub))
@@ -168,7 +162,7 @@ object PersistedIndex {
     }
     kind.tiers.foreach { t =>
       val dir = s"$location/${t.sub}"
-      if (exists(spark, dir)) {
+      if (Bucketing.fileSystem(spark, dir).exists(new Path(dir))) {
         Bucketing.dropIfRelocated(spark, table(name, t.sub), dir)
         spark.sql(s"""CREATE TABLE IF NOT EXISTS ${table(name, t.sub)} (${ddl(t.columns)})
           |USING parquet LOCATION '$dir'""".stripMargin)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -711,40 +712,33 @@ object QualityChecks {
   // never raw data) and any reader serves "distinct per group so far"
   // by register-wise max over the stored rows. Register merge is
   // lossless, so a report over the store equals sketching all raw rows
-  // ever seen, exactly (CliMaintainSpec pins it). Same durability
-  // contract as Bucketing's indexes: versioned subdirectories committed
-  // by marker file, compaction writes v(N+1) and retains vN one cycle,
-  // so a concurrent reader mid-compact always sees a complete version.
-  // Single concurrent writer by contract (one maintenance job owns the
-  // store), like the band index.
+  // ever seen, exactly (CliMaintainSpec pins it). Versions commit
+  // through Bucketing's versioned location (subtable `registers`): the
+  // build and every compaction write a `.tmp` version and rename it into
+  // place, and compaction retains the previous version one cycle, so a
+  // concurrent reader mid-compact always sees a complete version.
+  // Single concurrent writer of versions by contract (one maintenance
+  // job owns the store), like the band index.
 
-  private def hllStoreVersions(dir: String): Seq[(Int, java.io.File)] = {
-    val d = new java.io.File(dir)
-    Option(d.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
-        new java.io.File(f, "_GRAFT_OK").exists())
-      .map(f => f.getName.drop(1).toInt -> f).sortBy(_._1)
-  }
-
-  private def hllStoreCurrent(dir: String): java.io.File =
-    hllStoreVersions(dir).lastOption.map(_._2).getOrElse(
-      throw new IllegalStateException(s"no committed sketch version under $dir"))
-
-  private def commitVersion(dir: String, n: Int, regs: DataFrame): Unit = {
-    val vdir = s"$dir/v$n"
-    regs.write.mode("overwrite").parquet(vdir)
-    java.nio.file.Files.write(java.nio.file.Paths.get(vdir, "_GRAFT_OK"),
-      Array.empty[Byte])
-  }
+  /** The store's versioned subtable under its directory. */
+  private[graft] val hllStoreSub = "registers"
 
   private def storeRegs(df: DataFrame, groupCol: String, valueCol: String): DataFrame =
     hllRegisters(df.select(col(groupCol).cast("string").as("g"),
       col(valueCol)), Seq("g"), valueCol)
 
-  /** Initialize the store at `dir` (version v0) from a base table. */
+  /** Initialize the store at `dir` (its first committed version) from a
+    * base table. A location that already holds a committed store is
+    * refused: compaction merges every version, so a second build could
+    * not replace the first. */
   def hllStoreBuild(df: DataFrame, groupCol: String, valueCol: String,
-      dir: String): Unit =
-    commitVersion(dir, 0, storeRegs(df, groupCol, valueCol))
+      dir: String): Unit = {
+    val spark = df.sparkSession
+    require(!Bucketing.hasCommitted(spark, dir, hllStoreSub),
+      s"hll-build: $dir already holds a committed sketch store — append to it, " +
+        "or build at a new location")
+    Bucketing.commit(spark, dir, hllStoreSub)(storeRegs(df, groupCol, valueCol).write.parquet(_))
+  }
 
   /** Append one batch's registers to the CURRENT version — the nightly
     * incremental step: O(64·|groups|) rows written, raw batch never
@@ -753,108 +747,92 @@ object QualityChecks {
   def hllStoreAppend(df: DataFrame, groupCol: String, valueCol: String,
       dir: String): Unit =
     storeRegs(df, groupCol, valueCol).write.mode("append")
-      .parquet(hllStoreCurrent(dir).getPath)
+      .parquet(Bucketing.committedDir(df.sparkSession, dir, hllStoreSub))
 
   /** Serve (g, n_registers, raw_est) from the store — register-wise max
     * then the harmonic fold; touches only stored sketch rows. */
   def hllStoreReport(spark: SparkSession, dir: String): DataFrame = {
-    val regs = spark.read.parquet(hllStoreCurrent(dir).getPath)
+    val regs = spark.read.parquet(Bucketing.committedDir(spark, dir, hllStoreSub))
       .groupBy(col("g"), col("j")).agg(max(col("mj")).as("mj"))
     hllEstimate(regs, Seq("g"))
   }
 
-  /** Fold accumulated append files into one merged register set at
-    * v(N+1); the previous version is retained for one cycle (readers
-    * mid-compact see a complete old version), older ones dropped.
+  /** Fold accumulated append files into one merged register set, committed
+    * as the next version through [[Bucketing.commit]]; the previous
+    * version is retained for one cycle (readers mid-compact see a
+    * complete old version), older ones dropped.
     *
-    * Concurrent-append safety: a [[hllStoreAppend]] (or the streaming
-    * ingest's foreachBatch) that resolved vN as current while this
-    * compact is committing v(N+1) writes its register files into vN
-    * AFTER the merge read them. Two mechanisms keep those registers
-    * from ever being dropped: (a) the merge reads ALL committed
-    * versions, not just the last — register merge is lossless max, so
-    * re-folding an older version is free correctness, and it means a
-    * file in vK is only deleted by a compact that re-read vK at that
-    * later time; (b) each old directory is re-listed TO A FIXPOINT
-    * (bounded at a few rounds — a writer that keeps appending to the
-    * stale directory must not spin the compact forever; on exhaustion
-    * the directory is RETAINED, loudly, for the next compact to
-    * reclaim) immediately before its deletion — any parquet file the
-    * merge did not see is appended into v(N+1) and the listing repeats
-    * until clean, so a directory is only removed when its file set
-    * equals what was merged as of the final look (duplicate (g, j)
-    * rows across files are harmless — readers merge by max, exactly
-    * [[hllStoreAppend]]'s own contract); the retained vN's late files
-    * are folded forward too. Compacts themselves remain single-writer by contract
-    * (one maintenance job owns version creation), but a stream
-    * appending while a scheduled compact runs is a supported overlap —
-    * CliMaintainSpec's "hll store compact folds a late append into the
-    * old version instead of dropping it" pins the late-append recovery. */
+    * Concurrent-append safety: a [[hllStoreAppend]] (or
+    * [[graft.streaming.StreamOps.streamingHllStoreIngest]]'s
+    * foreachBatch) that resolved vN as current while this compact is
+    * committing v(N+1) writes its register files into vN AFTER the merge
+    * read them. Two mechanisms keep those registers from ever being
+    * dropped: (a) the merge reads ALL committed versions, not just the
+    * last — register merge is lossless max, so re-folding an older
+    * version is free correctness, and it means a file in vK is only
+    * deleted by a compact that re-read vK at that later time; (b) each
+    * old directory is re-listed TO A FIXPOINT (bounded at a few rounds —
+    * a writer that keeps appending to the stale directory must not spin
+    * the compact forever; on exhaustion the directory is RETAINED,
+    * loudly, for the next compact to reclaim) immediately before its
+    * deletion — any parquet file the merge did not see is appended into
+    * v(N+1) and the listing repeats until clean, so a directory is only
+    * removed when its file set equals what was merged as of the final
+    * look (duplicate (g, j) rows across files are harmless — readers
+    * merge by max, exactly [[hllStoreAppend]]'s own contract); the
+    * retained vN's late files are folded forward too. Compacts
+    * themselves remain single-writer by contract (one maintenance job
+    * owns version creation), but a stream appending while a scheduled
+    * compact runs is a supported overlap — CliMaintainSpec's "hll store
+    * compact folds a late append into the old version instead of
+    * dropping it" pins the late-append recovery.
+    *
+    * Residual assumption (documented, not closed): an appender that
+    * resolved a stale version as current can still land a file in the
+    * gap between the final clean re-list and the delete. That appender
+    * must have held its stale `current` across the whole merge + commit
+    * (after the rename, new appenders resolve v(N+1)); appends are not
+    * expected to straddle a full compact cycle, and the previous
+    * version's one-cycle retention bounds the exposure to exactly this
+    * pathological overlap. */
   def hllStoreCompact(spark: SparkSession, dir: String): Unit = {
-    def parquetFiles(f: java.io.File): Seq[String] =
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-        .filter(x => x.isFile && x.getName.endsWith(".parquet")).map(_.getPath)
-    val versions = hllStoreVersions(dir)
-    val n = versions.last._1
-    val snapshot = versions.map { case (_, f) => f -> parquetFiles(f) }
-    val merged = spark.read.parquet(snapshot.flatMap(_._2): _*)
-      .groupBy(col("g"), col("j")).agg(max(col("mj")).as("mj"))
-    commitVersion(dir, n + 1, merged)
-    // Late-append recovery runs per OLD directory, immediately before
-    // that directory's deletion, and loops to a fixpoint: re-list, fold
-    // any file the merge didn't see into v(N+1), re-list again until
-    // nothing new landed — so a directory is only removed when its file
-    // set equals what has been merged as of the last instant we looked.
-    // Residual assumption (documented, not closed): an appender that
-    // resolved this stale version as current can still land a file in
-    // the sub-millisecond gap between the final clean re-list and the
-    // rm. That appender must have held its stale `current` across the
-    // whole merge+commit (after commitVersion, new appenders resolve
-    // v(N+1)); appends are not expected to straddle a full compact
-    // cycle, and the previous version's one-cycle retention bounds the
-    // exposure to exactly this pathological overlap.
-    val mergedFiles = snapshot.map { case (f, seen) => f -> seen.toSet }.toMap
-    versions.dropRight(1).foreach { case (_, f) =>
-      var seen = mergedFiles.getOrElse(f, Set.empty)
-      var late = parquetFiles(f).filterNot(seen)
-      // BOUNDED fixpoint (ADVICE r8): a writer stuck appending to this
-      // stale directory (the exact overlap the mechanism tolerates)
-      // must not spin the compact forever. Each round folds what
-      // landed, so after the cap everything listed so far IS in
-      // v(N+1); on exhaustion we keep the directory instead of
-      // deleting it — mechanism (a)'s all-versions merge makes a
-      // retained directory correct (max-merge is idempotent), just
-      // unreclaimed until a later compact finds it quiet.
+    val fs = Bucketing.fileSystem(spark, dir)
+    def parquetFiles(v: Path): Set[Path] =
+      fs.listStatus(v).iterator.map(_.getPath).filter(_.getName.endsWith(".parquet")).toSet
+    def fold(files: Set[Path], into: Path): Unit =
+      spark.read.parquet(files.toSeq.map(_.toString): _*).select(col("g"), col("j"), col("mj"))
+        .write.mode("append").parquet(into.toString)
+    val versions = Bucketing.versions(spark, dir, hllStoreSub).map(_._2)
+    require(versions.nonEmpty, s"no committed version of $hllStoreSub under $dir")
+    val merged = versions.map(v => v -> parquetFiles(v)).toMap
+    // (b): each old directory folds what landed since the merge, to a
+    // bounded fixpoint, and is deleted only once a re-list finds nothing new
+    val next = Bucketing.commit(spark, dir, hllStoreSub, retire = (old, next) => {
+      var seen = merged.getOrElse(old, Set.empty)
+      var late = parquetFiles(old) -- seen
       var rounds = 0
       val maxRounds = 5
       while (late.nonEmpty && rounds < maxRounds) {
-        spark.read.parquet(late: _*).select(col("g"), col("j"), col("mj"))
-          .write.mode("append").parquet(s"$dir/v${n + 1}")
+        fold(late, next)
         seen ++= late
-        late = parquetFiles(f).filterNot(seen)
+        late = parquetFiles(old) -- seen
         rounds += 1
       }
-      if (late.nonEmpty) {
-        System.err.println(s"[hll-store] compact of $dir: ${f.getName} still " +
+      if (late.nonEmpty)
+        System.err.println(s"[hll-store] compact of $dir: ${old.getName} still " +
           s"receiving appends after $maxRounds re-list rounds (${late.size} " +
           "unfolded files) — retaining the directory; the next compact's " +
           "all-versions merge reclaims it once quiet")
-      } else {
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-          x.delete(); ()
-        }
-        rm(f)
-      }
+      late.isEmpty
+    }) { tmp =>
+      spark.read.parquet(merged.values.flatten.toSeq.map(_.toString): _*)
+        .groupBy(col("g"), col("j")).agg(max(col("mj")).as("mj")).write.parquet(tmp)
     }
-    // vN (the just-superseded version) keeps its one-cycle retention;
-    // files landing there post-commit are swept by the NEXT compact's
-    // all-versions merge — mechanism (a) above.
-    val lateInVn = parquetFiles(versions.last._2)
-      .filterNot(mergedFiles.getOrElse(versions.last._2, Set.empty))
-    if (lateInVn.nonEmpty)
-      spark.read.parquet(lateInVn: _*).select(col("g"), col("j"), col("mj"))
-        .write.mode("append").parquet(s"$dir/v${n + 1}")
+    // the retained previous version keeps its one-cycle retention; files
+    // that landed there after the merge fold forward now, and any later
+    // ones are swept by the NEXT compact's all-versions merge — (a) above
+    val lateInRetained = parquetFiles(versions.last) -- merged(versions.last)
+    if (lateInRetained.nonEmpty) fold(lateInRetained, next)
   }
 
   /** Mann–Whitney U between two groups of a 2-decimal measure — the

@@ -909,12 +909,16 @@ object StreamOps {
     * appends its ≤ 64-rows-per-group register sketch to the store —
     * raw rows never persist, and because register merge is lossless
     * and idempotent, replayed or overlapping batches cannot corrupt
-    * the estimate (max of the same registers). The batch `Cli sketch
-    * hll-compact` folds the accumulated files on its own schedule —
-    * running it WHILE this stream appends is a supported overlap:
-    * compact merges every committed version and re-lists for files
-    * that landed during the merge, folding late appends into the new
-    * version before any directory is dropped (see
+    * the estimate (max of the same registers). Each batch appends into
+    * the store's current committed version, so the store must be built
+    * first (an append to a location with no committed version fails).
+    * The batch `Cli sketch hll-compact` folds the accumulated files on
+    * its own schedule, committing the merged set as the next version
+    * through `Bucketing`'s `.tmp`-rename commit — running it WHILE this
+    * stream appends is a supported overlap: compact merges every
+    * committed version and re-lists for files that landed during the
+    * merge, folding late appends into the new version before any
+    * directory is dropped (see
     * [[graft.operators.QualityChecks.hllStoreCompact]]). Concurrent
     * COMPACTS remain single-writer by contract. */
   def streamingHllStoreIngest(df: DataFrame, groupCol: String, valueCol: String,

@@ -104,39 +104,42 @@ class CliDedupSpec extends SparkSpec {
 
   test("release subcommand: dedup -> decontaminate -> quality -> redact -> pack, manifest accounts every drop") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("clirelease").toString
-    def words(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
-    val keepA = words("w", 24)                       // survives everything
-    val keepB = words("z", 19) + " bob@mail.com"     // 20 tokens, email gets redacted
-    val contaminated = words("c", 20)                // c1..c13 is a bench 13-gram
-    Seq(
-      (1L, keepA, "en", "web", keepA.length.toLong),
-      (2L, keepA, "en", "web", keepA.length.toLong),                    // exact dup -> dropped
-      (3L, words("w", 24).split(" ").drop(1).mkString(" ") + " extra1", // near dup of 1 -> dropped
-        "en", "web", 10L),
-      (4L, "too short to keep", "en", "web", 17L),                      // quality drop
-      (5L, contaminated, "en", "web", contaminated.length.toLong),      // decon drop
-      (6L, keepB, "de", "book", keepB.length.toLong))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.parquet(s"$dir/corpus")
-    Seq((100L, words("c", 13))).toDF("doc_id", "text")
-      .write.parquet(s"$dir/bench")
+    // the same release into a plain path and into a `file:` URI of a directory
+    Seq[String => String](identity, p => s"file://$p").foreach { asLocation =>
+      val dir = Files.createTempDirectory("clirelease").toString
+      def words(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
+      val keepA = words("w", 24)                       // survives everything
+      val keepB = words("z", 19) + " bob@mail.com"     // 20 tokens, email gets redacted
+      val contaminated = words("c", 20)                // c1..c13 is a bench 13-gram
+      Seq(
+        (1L, keepA, "en", "web", keepA.length.toLong),
+        (2L, keepA, "en", "web", keepA.length.toLong),                    // exact dup -> dropped
+        (3L, words("w", 24).split(" ").drop(1).mkString(" ") + " extra1", // near dup of 1 -> dropped
+          "en", "web", 10L),
+        (4L, "too short to keep", "en", "web", 17L),                      // quality drop
+        (5L, contaminated, "en", "web", contaminated.length.toLong),      // decon drop
+        (6L, keepB, "de", "book", keepB.length.toLong))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$dir/corpus")
+      Seq((100L, words("c", 13))).toDF("doc_id", "text")
+        .write.parquet(s"$dir/bench")
 
-    Cli.run(spark, List("release", s"$dir/corpus", s"$dir/out",
-      "--bench", s"$dir/bench", "--seq-len", "16"))
+      Cli.run(spark, List("release", s"$dir/corpus", asLocation(s"$dir/out"),
+        "--bench", s"$dir/bench", "--seq-len", "16"))
 
-    val manifest = new String(Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/out/manifest.json")), "UTF-8")
-    assert(manifest.contains("\"read\":6") && manifest.contains("\"after_dedup\":4")
-      && manifest.contains("\"after_decontamination\":3") && manifest.contains("\"released\":2"),
-      s"stage accounting wrong: $manifest")
-    val released = spark.read.parquet(s"$dir/out/docs")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(released.keySet === Set(1L, 6L))
-    assert(released(6L).endsWith("<EMAIL>"), s"PII must be redacted: ${released(6L)}")
-    assert(spark.read.parquet(s"$dir/out/packed").count() > 0)
-    assert(spark.read.parquet(s"$dir/out/card").collect()
-      .map(_.getString(0)).toSet === Set("web", "book"))
+      val manifest = new String(Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/out/manifest.json")), "UTF-8")
+      assert(manifest.contains("\"read\":6") && manifest.contains("\"after_dedup\":4")
+        && manifest.contains("\"after_decontamination\":3") && manifest.contains("\"released\":2"),
+        s"stage accounting wrong: $manifest")
+      val released = spark.read.parquet(s"$dir/out/docs")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(released.keySet === Set(1L, 6L))
+      assert(released(6L).endsWith("<EMAIL>"), s"PII must be redacted: ${released(6L)}")
+      assert(spark.read.parquet(s"$dir/out/packed").count() > 0)
+      assert(spark.read.parquet(s"$dir/out/card").collect()
+        .map(_.getString(0)).toSet === Set("web", "book"))
+    }
   }
 
   test("embindex + emb-ingest-dedup: semantic arrival path from the command line") {

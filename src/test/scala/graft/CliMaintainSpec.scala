@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.{Bucketing, QualityChecks}
+
 /** End-to-end `Cli maintain`: the table-maintenance tier driven the way
   * a maintenance service would — a compaction plan from a file
   * manifest, a snapshot diff exercising all four change classes, and a
@@ -33,34 +35,47 @@ class CliMaintainSpec extends SparkSpec {
     assert(math.abs(r.getDouble(4) - 1000) <= 400, s"union est ${r.getDouble(4)}")
   }
 
+  /** The sketch store's committed versions as `Bucketing` lists them
+    * (what readers resolve: the last), once no `.tmp` version is left. */
+  private def storeVersions(sk: String): Seq[Long] = {
+    val tmp = Option(new java.io.File(sk).list()).toSeq.flatten.filter(_.endsWith(".tmp"))
+    assert(tmp.isEmpty, s"uncommitted versions left under $sk: ${tmp.mkString(", ")}")
+    Bucketing.versions(spark, sk, QualityChecks.hllStoreSub).map(_._1)
+  }
+
+  private def sketchMap(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getString(0) -> (r.getInt(1), r.getDouble(2))).toMap
+
   test("hll store lifecycle: build + appends serve EXACTLY the direct sketch of all rows; compact preserves it") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("clihll").toString
     def part(lo: Int, hi: Int) =
       (lo until hi).map(i => (s"g${i % 3}", (i % (400 + 100 * (i % 3))).toLong))
-    part(0, 3000).toDF("g", "uid").write.parquet(s"$dir/base")
-    part(3000, 4000).toDF("g", "uid").write.parquet(s"$dir/b1")
-    part(4000, 5000).toDF("g", "uid").write.parquet(s"$dir/b2")
-
-    Cli.run(spark, List("sketch", "hll-build", s"$dir/base", s"$dir/sk"))
-    Cli.run(spark, List("sketch", "hll-append", s"$dir/b1", s"$dir/sk"))
-    Cli.run(spark, List("sketch", "hll-append", s"$dir/b2", s"$dir/sk"))
-
-    def report() = graft.operators.QualityChecks.hllStoreReport(spark, s"$dir/sk")
-      .collect().map(r => r.getString(0) -> (r.getInt(1), r.getDouble(2))).toMap
     // register merge is lossless: store == one-shot sketch of ALL rows
-    val direct = graft.operators.QualityChecks
-      .hllDistinct(part(0, 5000).toDF("g", "uid"), "g", "uid")
-      .collect().map(r => r.getString(0) -> (r.getInt(1), r.getDouble(2))).toMap
-    assert(report() === direct, "build + 2 appends == direct sketch, bit for bit")
+    val direct = sketchMap(QualityChecks.hllDistinct(part(0, 5000).toDF("g", "uid"), "g", "uid"))
+    // the same lifecycle over a plain path and a `file:` URI of a directory
+    Seq[String => String](identity, p => s"file://$p").foreach { asLocation =>
+      val dir = Files.createTempDirectory("clihll").toString
+      val sk = asLocation(s"$dir/sk")
+      part(0, 3000).toDF("g", "uid").write.parquet(s"$dir/base")
+      part(3000, 4000).toDF("g", "uid").write.parquet(s"$dir/b1")
+      part(4000, 5000).toDF("g", "uid").write.parquet(s"$dir/b2")
 
-    Cli.run(spark, List("sketch", "hll-compact", s"$dir/sk"))
-    assert(report() === direct, "compact preserves the merged registers exactly")
-    assert(new java.io.File(s"$dir/sk/v1/_GRAFT_OK").exists, "compact commits v1")
-    assert(new java.io.File(s"$dir/sk/v0").exists, "previous version retained one cycle")
-    // appends after compact land in the new current version
-    Cli.run(spark, List("sketch", "hll-append", s"$dir/b1", s"$dir/sk"))
-    assert(report() === direct, "re-appending seen rows changes nothing (max is idempotent)")
+      Cli.run(spark, List("sketch", "hll-build", s"$dir/base", sk))
+      assert(storeVersions(s"$dir/sk") === Seq(0L), "build commits v0")
+      Cli.run(spark, List("sketch", "hll-append", s"$dir/b1", sk))
+      Cli.run(spark, List("sketch", "hll-append", s"$dir/b2", sk))
+
+      def report() = sketchMap(QualityChecks.hllStoreReport(spark, sk))
+      assert(report() === direct, s"build + 2 appends == direct sketch, bit for bit ($sk)")
+
+      Cli.run(spark, List("sketch", "hll-compact", sk))
+      assert(report() === direct, s"compact preserves the merged registers exactly ($sk)")
+      assert(storeVersions(s"$dir/sk") === Seq(0L, 1L),
+        "compact commits v1 and retains the previous version one cycle")
+      // appends after compact land in the new current version
+      Cli.run(spark, List("sketch", "hll-append", s"$dir/b1", sk))
+      assert(report() === direct, "re-appending seen rows changes nothing (max is idempotent)")
+    }
   }
 
   test("hll store compact folds a late append into the old version instead of dropping it") {
@@ -69,32 +84,82 @@ class CliMaintainSpec extends SparkSpec {
     def rows(lo: Int, hi: Int) = (lo until hi).map(i => (s"g${i % 3}", i.toLong))
     rows(0, 2000).toDF("g", "uid").write.parquet(s"$dir/base")
     Cli.run(spark, List("sketch", "hll-build", s"$dir/base", s"$dir/sk"))
+    // the version an appender resolves as current before the compact commits
+    val stale = Bucketing.currentDir(spark, s"$dir/sk", QualityChecks.hllStoreSub)
     Cli.run(spark, List("sketch", "hll-compact", s"$dir/sk")) // v0 + v1 exist
 
     // Simulate the race ADVICE flagged: an append that resolved v0 as
     // current WHILE the compact above was committing v1 lands its
     // register files in v0 after the merge read it. Reproduce the end
     // state deterministically by writing the batch's registers straight
-    // into v0 (exactly what hllStoreAppend does to whichever version it
-    // resolved).
+    // into the directory it resolved (exactly what hllStoreAppend does
+    // to whichever version it resolved).
     val late = rows(2000, 3000).toDF("g", "uid")
-    graft.operators.QualityChecks.hllRegisters(
+    QualityChecks.hllRegisters(
         late.select(col("g").cast("string").as("g"), col("uid")), Seq("g"), "uid")
-      .write.mode("append").parquet(s"$dir/sk/v0")
+      .write.mode("append").parquet(stale)
 
     // The NEXT compact deletes v0 — pre-fix it read only v1, so the late
     // registers were dropped and estimates undercounted. Post-fix compact
     // merges every committed version, so v0's late files fold into v2.
     Cli.run(spark, List("sketch", "hll-compact", s"$dir/sk"))
-    val report = graft.operators.QualityChecks.hllStoreReport(spark, s"$dir/sk")
-      .collect().map(r => r.getString(0) -> (r.getInt(1), r.getDouble(2))).toMap
-    val direct = graft.operators.QualityChecks
-      .hllDistinct(rows(0, 3000).toDF("g", "uid"), "g", "uid")
-      .collect().map(r => r.getString(0) -> (r.getInt(1), r.getDouble(2))).toMap
+    val report = sketchMap(QualityChecks.hllStoreReport(spark, s"$dir/sk"))
+    val direct = sketchMap(QualityChecks.hllDistinct(rows(0, 3000).toDF("g", "uid"), "g", "uid"))
     assert(report === direct,
       "late append into the retained old version survives its deletion, bit for bit")
-    assert(!new java.io.File(s"$dir/sk/v0").exists, "old version still dropped")
-    assert(new java.io.File(s"$dir/sk/v2/_GRAFT_OK").exists, "compact committed v2")
+    assert(storeVersions(s"$dir/sk") === Seq(1L, 2L),
+      "compact committed v2, retained v1 and dropped the old version")
+  }
+
+  test("hll store: a crashed compaction's .tmp version is never read, and the next compaction clears it") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("clihllcrash").toString
+    def rows(lo: Int, hi: Int) = (lo until hi).map(i => (s"g${i % 3}", i.toLong))
+    rows(0, 2000).toDF("g", "uid").write.parquet(s"$dir/base")
+    Cli.run(spark, List("sketch", "hll-build", s"$dir/base", s"$dir/sk"))
+    // what a compaction that died before its commit rename leaves behind:
+    // the next version's `.tmp` directory, holding registers of rows the
+    // store never saw
+    QualityChecks.hllRegisters(rows(5000, 9000).toDF("g", "uid")
+        .select(col("g").cast("string").as("g"), col("uid")), Seq("g"), "uid")
+      .write.parquet(s"$dir/sk/${QualityChecks.hllStoreSub}__v1.tmp")
+
+    val direct = sketchMap(QualityChecks.hllDistinct(rows(0, 2000).toDF("g", "uid"), "g", "uid"))
+    def report() = sketchMap(QualityChecks.hllStoreReport(spark, s"$dir/sk"))
+    assert(report() === direct, "no report reads an uncommitted version")
+    Cli.run(spark, List("sketch", "hll-compact", s"$dir/sk"))
+    assert(report() === direct, "the compaction clears the stray .tmp instead of committing it")
+    assert(storeVersions(s"$dir/sk") === Seq(0L, 1L))
+  }
+
+  test("hll-build refuses a location that already holds a committed store") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("clihllrebuild").toString
+    (0 until 2000).map(i => (s"g${i % 3}", i.toLong)).toDF("g", "uid").write.parquet(s"$dir/base")
+    (0 until 10).map(i => ("g0", i.toLong)).toDF("g", "uid").write.parquet(s"$dir/small")
+    Cli.run(spark, List("sketch", "hll-build", s"$dir/base", s"$dir/sk"))
+    Cli.run(spark, List("sketch", "hll-compact", s"$dir/sk"))
+    // a rebuild cannot replace the store: compaction's all-versions merge
+    // would fold the retained first build back in
+    val e = intercept[IllegalArgumentException] {
+      Cli.run(spark, List("sketch", "hll-build", s"$dir/small", s"$dir/sk"))
+    }
+    assert(e.getMessage.contains(s"$dir/sk"), e.getMessage)
+    val direct = sketchMap(QualityChecks.hllDistinct(spark.read.parquet(s"$dir/base"), "g", "uid"))
+    assert(sketchMap(QualityChecks.hllStoreReport(spark, s"$dir/sk")) === direct,
+      "the store still serves the first build")
+  }
+
+  test("hll-append and hll-report fail loudly on a location with no committed store") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("clihllnone").toString
+    Seq(("g0", 1L)).toDF("g", "uid").write.parquet(s"$dir/batch")
+    val e = intercept[IllegalStateException] {
+      Cli.run(spark, List("sketch", "hll-append", s"$dir/batch", s"$dir/sk"))
+    }
+    assert(e.getMessage.contains(s"$dir/sk"), e.getMessage)
+    assert(!new java.io.File(s"$dir/sk").exists, "the append created no uncommitted store")
+    intercept[IllegalStateException](QualityChecks.hllStoreReport(spark, s"$dir/sk"))
   }
 
   /** Round-11 verdict #7a: one status verb across the persisted-index
@@ -311,6 +376,17 @@ class CliMaintainSpec extends SparkSpec {
         "a failed verb must register nothing")
       assert(!new java.io.File(s"$dir/none").exists, "a failed verb must write nothing")
     } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("maintain analyze registers and analyzes parquet tables under a plain path or a file: URI") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("clianalyze").toString
+    (1 to 50).map(i => (i.toLong, i % 5)).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    try Seq(dir -> "plain_", s"file://$dir" -> "uri_").foreach { case (loc, prefix) =>
+      Cli.run(spark, List("maintain", "analyze", loc, "--tables=t", s"--prefix=$prefix"))
+      assert(spark.table(s"${prefix}t").queryExecution.optimizedPlan.stats.rowCount ===
+        Some(BigInt(50)), s"analyzed row count under $loc")
+    } finally Seq("plain_t", "uri_t").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("maintain compact-plan bins a file manifest to the target size") {
